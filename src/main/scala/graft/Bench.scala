@@ -109,7 +109,7 @@ object Bench {
 
   /** Launch one e2e measurement in an isolated child JVM emulating a
     * `cpus`-core cluster slice; returns (sec, rows). */
-  private def forkedE2e(cpus: Int, variant: String, sfDir: String, outDir: String,
+  private def forkedE2e(cpus: Int, sfDir: String, outDir: String,
       mult: Int, salt: Int): (Double, Long) = {
     // 3 GB/core ≈ a typical executor's usable heap per core. Below ~1.5 GB/
     // core the 2-core level crosses a GC-thrash cliff as amplification grows
@@ -142,7 +142,7 @@ object Bench {
       s"-Xmx${cpus.toLong * perCoreMb}m",
       "-Dspark.ui.enabled=false") ++ gcFlags ++ addOpens ++ Seq(
       "-cp", System.getProperty("java.class.path"),
-      "graft.E2eRunner", cpus.toString, variant, sfDir, outDir,
+      "graft.E2eRunner", cpus.toString, sfDir, outDir,
       mult.toString, salt.toString)
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
@@ -172,7 +172,6 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_SCALE_4N", "8").toInt, cpusQuery)
     val cpusN = math.max(1, cpus4n / 4)
     val cpusHeadline = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_CPUS", "16").toInt
-    val variant = sys.env.getOrElse("SPARK_GRAFT_E2E", "v3")
     val salt = sys.env.getOrElse("SPARK_GRAFT_SALT", "32").toInt
     // sink scratch on tmpfs: a single shared disk would serialize the sink
     // I/O that a real cluster spreads over per-node storage (see util.Env)
@@ -216,8 +215,8 @@ object Bench {
     val timesN = scala.collection.mutable.ArrayBuffer[Double]()
     var rows = 0L
     def pair(i: Int): Unit = {
-      val (t4, r) = forkedE2e(cpus4n, variant, sfDir, s"$tmp/out4n_$i", scaleMult, salt)
-      val (tn, _) = forkedE2e(cpusN, variant, sfDir, s"$tmp/outn_$i", scaleMult, salt)
+      val (t4, r) = forkedE2e(cpus4n, sfDir, s"$tmp/out4n_$i", scaleMult, salt)
+      val (tn, _) = forkedE2e(cpusN, sfDir, s"$tmp/outn_$i", scaleMult, salt)
       times4n += t4; timesN += tn; rows = r
     }
     (1 to reps).foreach(pair)
@@ -263,12 +262,12 @@ object Bench {
     val headlineReps = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_REPS", "2").toInt
     val headlineRuns = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
     (1 to headlineReps).foreach { i =>
-      headlineRuns += forkedE2e(cpusHeadline, variant, sfDir, s"$tmp/outh_$i", mult, salt)
+      headlineRuns += forkedE2e(cpusHeadline, sfDir, s"$tmp/outh_$i", mult, salt)
     }
     var hExtra = 0
     while (hExtra < 2 && spread(headlineRuns.map(_._1).toSeq) > 0.10) {
       hExtra += 1
-      headlineRuns += forkedE2e(cpusHeadline, variant, sfDir,
+      headlineRuns += forkedE2e(cpusHeadline, sfDir,
         s"$tmp/outh_x$hExtra", mult, salt)
     }
     val rowsHeadline = headlineRuns.head._2
@@ -315,8 +314,8 @@ object Bench {
     // alongside so the pair choice is auditable, not hidden.
     val diagPair = sys.env.getOrElse("SPARK_GRAFT_DIAG_PAIR", "1") != "0"
     val (diag16, diag4) = if (diagPair) {
-      val (t16, _) = forkedE2e(16, variant, sfDir, s"$tmp/outd16", scaleMult, salt)
-      val (t4, _) = forkedE2e(4, variant, sfDir, s"$tmp/outd4", scaleMult, salt)
+      val (t16, _) = forkedE2e(16, sfDir, s"$tmp/outd16", scaleMult, salt)
+      val (t4, _) = forkedE2e(4, sfDir, s"$tmp/outd4", scaleMult, salt)
       (t16, t4)
     } else (0.0, 0.0)
 
@@ -332,7 +331,7 @@ object Bench {
     val total = queryTimes.map(_._2.sum).sum + headlineRuns.map(_._1).sum +
       times4n.sum + timesN.sum + diag16 + diag4
     println(
-      f"""{"metric":"routed_turns_per_sec","value":$thrHeadline%.1f,"unit":"rows/sec","total_sec":$total%.2f,"queries":$qs,"query_runs":$qruns,"sf":"$sfDir","e2e":{"rows":$rowsHeadline,"sec_16":$tHeadline%.3f,"sec_16_min":${headlineRuns.map(_._1).min}%.3f,"headline_cpus":$cpusHeadline,"variant":"$variant","runs_16":${arr(headlineRuns.map(_._1).toSeq)},"spread_16":${spread(headlineRuns.map(_._1).toSeq)}%.3f,"scale_rows":$rows,"runs_4n":${arr(times4n.toSeq)},"runs_n":${arr(timesN.toSeq)},"spread_4n":${spread(times4n.toSeq)}%.3f,"spread_n":${spread(timesN.toSeq)}%.3f,"pair_ratios":${arr(ratios)},"spread_ratios":${spread(ratios)}%.3f},"scaling":{"cpus_n":$cpusN,"cpus_4n":$cpus4n,"throughput_n":$thrN%.1f,"throughput_4n":$thr4n%.1f,"estimator":"min_of_levels","efficiency":$effMin%.3f,"efficiency_min":$effMin%.3f,"efficiency_pair_median":$effPairs%.3f,"efficiency_of_medians":$effMedians%.3f,"efficiency_4_16_single_pair":$eff416%.3f,"base_pairs":$reps,"extra_pairs":$extra,"reps_exhausted":$repsExhausted}}""")
+      f"""{"metric":"routed_turns_per_sec","value":$thrHeadline%.1f,"unit":"rows/sec","total_sec":$total%.2f,"queries":$qs,"query_runs":$qruns,"sf":"$sfDir","e2e":{"rows":$rowsHeadline,"sec_16":$tHeadline%.3f,"sec_16_min":${headlineRuns.map(_._1).min}%.3f,"headline_cpus":$cpusHeadline,"variant":"v3","runs_16":${arr(headlineRuns.map(_._1).toSeq)},"spread_16":${spread(headlineRuns.map(_._1).toSeq)}%.3f,"scale_rows":$rows,"runs_4n":${arr(times4n.toSeq)},"runs_n":${arr(timesN.toSeq)},"spread_4n":${spread(times4n.toSeq)}%.3f,"spread_n":${spread(timesN.toSeq)}%.3f,"pair_ratios":${arr(ratios)},"spread_ratios":${spread(ratios)}%.3f},"scaling":{"cpus_n":$cpusN,"cpus_4n":$cpus4n,"throughput_n":$thrN%.1f,"throughput_4n":$thr4n%.1f,"estimator":"min_of_levels","efficiency":$effMin%.3f,"efficiency_min":$effMin%.3f,"efficiency_pair_median":$effPairs%.3f,"efficiency_of_medians":$effMedians%.3f,"efficiency_4_16_single_pair":$eff416%.3f,"base_pairs":$reps,"extra_pairs":$extra,"reps_exhausted":$repsExhausted}}""")
   }
 }
 
@@ -384,49 +383,29 @@ object E2eRunner {
     * Timing covers the FULL pipeline including the limiter's verdict pass;
     * the row count is read back afterwards, outside the timed window.
     *
-    * Variants (SPARK_GRAFT_E2E):
-    *  - v3 (default): single-pass, shuffle-reuse — parse → route → ONE
-    *    (sink,bkt,salt) exchange shared by the verdict job and the write job
-    *    (SinglePassLimit.limitReusingShuffle); plain parquet sink.
-    *  - v2: single-pass via the (sink,bkt)-partitioned staging table +
-    *    directory moves (SinglePassLimit.writeLimited) — the layout for
-    *    GB-sized buckets.
-    *  - v1: v2 with the round-1 barrier exchange kept (2 shuffles).
-    *  - v0: the round-1 two-pass limiter (verdict aggregate + decision-join
-    *    write) — kept for A/B comparison.
+    * Shape (reported as variant "v3" in the bench JSON): single-pass,
+    * shuffle-reuse — parse → route → ONE (sink,bkt,salt) exchange shared by
+    * the verdict job and the write job
+    * (SinglePassLimit.limitReusingShuffle); plain parquet sink.
     */
   def e2e(spark: SparkSession, sfDir: String, outDir: String, mult: Int,
-      variant: String, salt: Int): (Double, Long) = {
+      salt: Int): (Double, Long) = {
     val turns = Transcripts.amplified(spark, sfDir, mult)
     val rules = RateLimit.defaultRules()
     val t0 = System.nanoTime()
-    variant match {
-      case "v0" =>
-        val (routed, _) = Pipeline.route(turns, spark)
-        routed.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
-          .write.mode("overwrite").parquet(outDir)
-      case "v1" =>
-        val fanned = Router.fanOut(Enrichment.enrich(Pipeline.parsedSalted(turns), spark))
-        SinglePassLimit.writeLimited(fanned, rules, outDir, saltBuckets = salt)
-      case "v2" =>
-        val fanned = Router.fanOut(Enrichment.enrich(Pipeline.parsedProjected(turns), spark))
-        SinglePassLimit.writeLimited(fanned, rules, outDir, saltBuckets = salt)
-      case "v3" =>
-        val fanned = Router.fanOut(Enrichment.enrich(Pipeline.parsedProjected(turns), spark))
-        SinglePassLimit.limitReusingShuffle(fanned, rules, saltBuckets = salt)
-          .write.mode("overwrite").parquet(outDir)
-      case other => throw new IllegalArgumentException(s"unknown e2e variant $other")
-    }
+    val fanned = Router.fanOut(Enrichment.enrich(Pipeline.parsedProjected(turns), spark))
+    SinglePassLimit.limitReusingShuffle(fanned, rules, saltBuckets = salt)
+      .write.mode("overwrite").parquet(outDir)
     val sec = (System.nanoTime() - t0) / 1e9
     (sec, spark.read.parquet(outDir).count())
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(cpusS, variant, sfDir, outDir, multS, saltS) = args
+    val Array(cpusS, sfDir, outDir, multS, saltS) = args
     val cpus = cpusS.toInt
     val spark = session(cpus)
-    e2e(spark, sfDir, s"$outDir-warm", math.min(8, multS.toInt), variant, saltS.toInt)
-    val (sec, rows) = e2e(spark, sfDir, outDir, multS.toInt, variant, saltS.toInt)
+    e2e(spark, sfDir, s"$outDir-warm", math.min(8, multS.toInt), saltS.toInt)
+    val (sec, rows) = e2e(spark, sfDir, outDir, multS.toInt, saltS.toInt)
     println(s"E2ERESULT $sec $rows")
     spark.stop()
   }

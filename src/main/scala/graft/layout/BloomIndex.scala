@@ -20,8 +20,8 @@ import graft.functions.BloomAgg
   * same bounded one-row-per-file granularity Iceberg/Delta manifests are.
   * A 1 M-key 1 % bloom is ~1.2 MB; 100 k files ≈ 120 GB of blooms — so the
   * probe runs DISTRIBUTED by default ([[selectFilesDistributed]]: the
-  * manifest filters where it lies, only surviving file names reach the
-  * driver) and the write shards the manifest across reduce tasks (no
+  * manifest is probed where it lies, and only (file, verdict) pairs reach
+  * the driver — never a bloom payload) and the write shards the manifest across reduce tasks (no
   * single-writer funnel); the write is one scan + one shuffle of
   * (file, bloom) partials.
   *
@@ -76,12 +76,12 @@ object BloomIndex {
     (kept, rows.length.toLong)
   }
 
-  /** Distributed twin of [[selectFiles]]: the manifest is FILTERED where it
+  /** Distributed twin of [[selectFiles]]: the manifest is PROBED where it
     * lies — each executor task deserializes and probes its own manifest
     * rows' blooms ([[graft.functions.BloomMightContainAny]], same hashing
-    * and same per-file short-circuit as the driver loop) — and only the
-    * surviving file NAMES are collected. The driver never holds a bloom:
-    * at the 100 k-file design point the driver form would collect ~120 GB
+    * and same per-file short-circuit as the driver loop) — and one (file
+    * name, verdict) pair per file is collected. The driver never holds a
+    * bloom: at the 100 k-file design point the driver form would collect ~120 GB
     * of filter payloads (guide §5: the driver should do almost no data
     * work); this form collects kilobytes of paths plus one boolean per file
     * — which is also why the verdict is PROJECTED rather than filtered: one

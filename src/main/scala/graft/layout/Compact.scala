@@ -143,8 +143,7 @@ object Compact {
   def readRetrying(spark: SparkSession, dir: String, attempts: Int = 40,
       backoffMs: Long = 25): org.apache.spark.sql.DataFrame = {
     require(attempts >= 1, s"attempts out of range: $attempts")
-    var last: Throwable = null
-    var i = 0
+    var i = 1
     while (i < attempts) {
       // retry ONLY the swap window's signature (path momentarily absent) —
       // a typo'd dir or a genuinely unreadable table must not spin through
@@ -152,13 +151,12 @@ object Compact {
       try return spark.read.parquet(dir)
       catch {
         case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass == "PATH_NOT_FOUND" && i < attempts - 1 =>
-          last = e
+            if e.getErrorClass == "PATH_NOT_FOUND" =>
           Thread.sleep(backoffMs)
       }
       i += 1
     }
-    throw last
+    spark.read.parquet(dir) // the last attempt surfaces its own error
   }
 
   /** The columns an existing [[Skipping]] manifest at `dir` indexes (from

@@ -47,8 +47,8 @@ object RateLimit {
     * the current/last sink mutated by [[runChain]]. `bucketKey` is any
     * order-preserving encoding of the bucket (epoch millis here, epoch hours
     * in [[SinglePassLimit]]) — the chain only ever sorts by it. `rows` rides
-    * along for the per-sink live counters (reference monitoring/stats.go
-    * analog); the chain itself only reads `bytes`. */
+    * along for the per-sink live counters and commit stats (reference
+    * monitoring/stats.go analog); the chain itself only reads `bytes`. */
   final case class Cell(origSink: String, bucketKey: Long,
       var curSink: String, var lastSink: String, bytes: Long, rows: Long = 0L,
       var alerted: Boolean = false)
@@ -161,7 +161,8 @@ object RateLimit {
     // length, not via an extra count() pass over the aggregate
     val collected = statsDf
       .groupBy(col("sink").as("orig_sink"), bucketCol(col("ts")).as("bucket"))
-      .agg(sum(octet_length(col("text"))).as("bytes"))
+      // a cell whose every text is null sums to null: count it as 0 bytes
+      .agg(coalesce(sum(octet_length(col("text"))), lit(0L)).as("bytes"))
       .limit(maxVerdictCells + 1)
       .collect()
     require(collected.length <= maxVerdictCells,

@@ -1,55 +1,36 @@
 package graft.limit
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Single-pass rate limiting: write once, verdict from a column-pruned scan,
-  * reroute as partition-directory moves.
+/** Single-pass rate limiting: one exchange serves both the verdict and the
+  * write.
   *
   * [[RateLimit.apply]] (the declarative formulation, kept as the semantic
   * spec and DuckDB-oracle path) touches the fact table twice: one aggregate
   * pass for verdicts, one write pass with the broadcast decision join.
   * Because verdicts have whole-(sink, bucket) granularity, the second pass is
   * avoidable — every row in a bucket shares one fate, so the fate can be
-  * applied to the bucket's FILES instead of its rows:
+  * applied to the bucket's SHUFFLE BLOCKS instead of re-deriving it per row
+  * ([[limitWithCells]]; SinglePassSpec proves the survivors equal
+  * RateLimit.apply's row for row).
   *
-  *   1. write the first-pass routing ONCE, partitioned by (sink, bkt) with a
-  *      precomputed int `bytes` column;
-  *   2. bucket sums from the files just written — the scan reads ONLY the
-  *      `bytes` column (sink/bkt come from directory names), ≈0.1 % of the
-  *      data;
-  *   3. run the [[RateLimit.runChain]] rule chain on those cells
-  *      (driver-side, control-plane sized);
-  *   4. fallback = MOVE the (sink, bucket) partition directory under the
-  *      fallback sink; discard = DELETE it. Metadata operations — no row is
-  *      rewritten. On a real cluster these are FileSystem renames (or an
-  *      Iceberg metadata-only partition rewrite); file checksums move with
-  *      their files, so nothing is re-read.
-  *
-  * Identical final contents to RateLimit.apply's surviving rows
-  * (SinglePassSpec proves equality row-for-row); the dropped set is deleted
-  * rather than returned — callers needing the dropped rows for audit use the
-  * two-pass path.
-  *
-  * Scale: the one exchange is keyed (sink, bkt, salt) so it doubles as the
-  * write-clustering step — each (sink, bucket) lands in `saltBuckets` tasks
-  * (hot buckets spread, north_rule), and each task holds few partition values
-  * so the dynamic-partition write stays small-file-free (~saltBuckets files
-  * per bucket directory).
+  * Staging by (sink, bucket) and applying verdicts as directory moves does
+  * not pay: per-file costs dominate at hour buckets (measurements in
+  * DESIGN.md, "Single-pass limiter").
   */
 object SinglePassLimit {
 
   /** Epoch-hour bucket — the same boundaries as RateLimit.bucketCol
     * (date_trunc 'hour' in the UTC session). Matches date_trunc ONLY when the
     * session timezone sits on a whole-hour UTC offset (enforced by
-    * [[assertWholeHourTz]] at both single-pass entry points): under e.g.
+    * [[assertWholeHourTz]] at the single-pass entry point): under e.g.
     * Asia/Kolkata (+5:30) date_trunc boundaries fall on :30 UTC and the two
     * limiter formulations would disagree on bucket membership. */
   def bucketKey(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     floor(unix_timestamp(ts) / 3600).cast("long")
 
-  /** The single-pass paths bucket on epoch hours (UTC by construction); the
+  /** The single-pass path buckets on epoch hours (UTC by construction); the
     * two-pass semantic spec buckets on date_trunc('hour') in the SESSION
     * timezone. They agree iff the session offset is a whole number of hours —
     * anything else must use the two-pass path. */
@@ -87,159 +68,24 @@ object SinglePassLimit {
         "spark.sql.session.timeZone=UTC or use RateLimit.apply")
   }
 
-  /** The staged pre-write plan: THE one exchange, keyed (sink, bucket, salt),
-    * plus the derived bkt/bytes projections. bytes/bkt are computed after the
-    * shuffle (cheap projections) so the exchange carries no derivable
-    * columns; the partitioner hash is all that crosses the wire for them. */
-  def staged(routed: DataFrame, saltBuckets: Int): DataFrame =
-    routed
-      // the sink contract columns only: enrichment dims etc. are projected
-      // out BEFORE the exchange so they never cross the wire
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts"), col("sink"))
-      .repartition(col("sink"), bucketKey(col("ts")),
-        pmod(hash(col("conv_id"), col("turn_idx")), lit(saltBuckets)))
-      .withColumn("bkt", bucketKey(col("ts")))
-      .withColumn("bytes", octet_length(col("text")))
 
-  /** Writes `routed` (pre-limit fan-out output with the standard columns
-    * conv_id, turn_idx, role, text, tool, ts, sink) to `outDir` partitioned
-    * by (sink, bkt), applies `rules` as directory moves, and returns the
-    * surviving rows as a DataFrame over `outDir`. */
-  def writeLimited(routed: DataFrame, rules: Seq[LimitRule], outDir: String,
-      saltBuckets: Int = 4, maxVerdictCells: Int = 4 << 20): DataFrame =
-    writeLimitedWithCells(routed, rules, outDir, saltBuckets, maxVerdictCells)._1
+  /** [[limitWithCells]]'s surviving rows; the caller's write is the second
+    * job. */
+  def limitReusingShuffle(routed: DataFrame, rules: Seq[LimitRule],
+      saltBuckets: Int = 32, maxVerdictCells: Int = 4 << 20): DataFrame =
+    limitWithCells(routed, rules, saltBuckets, maxVerdictCells)._1
 
-  /** [[writeLimited]] plus the post-chain verdict cells — the per-(sink,
-    * bucket) in/out/dropped volumes observed DURING the run with zero extra
-    * passes (the reference's live per-connection Stats counters,
-    * monitoring/stats.go:10-118, as run artifacts). */
-  def writeLimitedWithCells(routed: DataFrame, rules: Seq[LimitRule], outDir: String,
-      saltBuckets: Int = 4, maxVerdictCells: Int = 4 << 20): (DataFrame, Array[RateLimit.Cell]) = {
-    val (df, cells, _) = writeLimitedImpl(routed, rules, outDir, saltBuckets,
-      maxVerdictCells, computeStats = false)
-    (df, cells)
-  }
-
-  /** [[writeLimitedWithCells]] plus EXACT per-final-sink commit stats
-    * (rows, bytes, distinct convs) — computed from the same single pruned
-    * scan as the verdict cells, so the caller performs zero further passes
-    * over staged data (the round-2 [[graft.pipeline.Pipeline.run]] re-read
-    * the staged conv_id column of everything just written). */
-  def writeLimitedWithStats(routed: DataFrame, rules: Seq[LimitRule], outDir: String,
-      saltBuckets: Int = 4, maxVerdictCells: Int = 4 << 20)
-      : (DataFrame, Array[RateLimit.Cell], Map[String, (Long, Long, Long)]) =
-    writeLimitedImpl(routed, rules, outDir, saltBuckets, maxVerdictCells,
-      computeStats = true)
-
-  private def writeLimitedImpl(routed: DataFrame, rules: Seq[LimitRule], outDir: String,
-      saltBuckets: Int, maxVerdictCells: Int, computeStats: Boolean)
-      : (DataFrame, Array[RateLimit.Cell], Map[String, (Long, Long, Long)]) = {
-    val spark = routed.sparkSession
-    assertWholeHourTz(spark)
-
-    staged(routed, saltBuckets)
-      .write.mode("overwrite").partitionBy("sink", "bkt").parquet(outDir)
-
-    // Column-pruned verdict scan over what was just written (partition-
-    // directory values are type-inferred as int — cast back). With stats the
-    // ONE scan also reads conv_id and pre-aggregates at (sink, bkt, conv_id)
-    // granularity: the verdict cells re-aggregate from that cached
-    // intermediate, and the exact per-sink commit stats (incl. distinct
-    // convs, post-chain) re-aggregate from the same cache — never from the
-    // staged files again. Without stats the scan reads the bytes column only.
-    val perConv = if (computeStats)
-      Some(spark.read.parquet(outDir)
-        .groupBy(col("sink"), col("bkt").cast("long").as("bkt"), col("conv_id"))
-        .agg(sum(col("bytes")).as("bytes"), count(lit(1)).as("rows"))
-        .cache())
-    else None
-    val (cells, changed, stats) = try {
-      val cellSource = perConv.getOrElse(
-        spark.read.parquet(outDir)
-          .withColumn("bkt", col("bkt").cast("long"))
-          .withColumn("rows", lit(1L)))
-      val collected = cellSource
-        .groupBy(col("sink"), col("bkt"))
-        .agg(sum(col("bytes")).as("bytes"), sum(col("rows")).as("rows"))
-        .limit(maxVerdictCells + 1)
-        .collect()
-      require(collected.length <= maxVerdictCells,
-        s"rate-limit verdict aggregate exceeds $maxVerdictCells (sink × bucket) cells — " +
-          "bucket granularity is too fine for driver-side verdicts")
-      val cs = collected.map(r =>
-        RateLimit.Cell(r.getString(0), r.getLong(1), r.getString(0), r.getString(0),
-          r.getLong(2), r.getLong(3)))
-
-      RateLimit.runChain(cs, rules)
-      val ch = cs.filter(c => c.curSink == null || c.curSink != c.origSink)
-
-      // Exact per-FINAL-sink stats from the cached intermediate + the chain's
-      // decisions — computed BEFORE the directory moves so the cache can never
-      // fall back to recomputing from moved/deleted files.
-      val st: Map[String, (Long, Long, Long)] = perConv match {
-        case None => Map.empty
-        case Some(pc) =>
-          import spark.implicits._
-          val effective = if (ch.isEmpty) pc else {
-            val decisions = ch.toSeq
-              .map(c => (c.origSink, c.bucketKey, Option(c.curSink)))
-              .toDF("d_sink", "d_bkt", "final_sink")
-            pc.join(broadcast(decisions),
-                pc("sink") === col("d_sink") && pc("bkt") === col("d_bkt"), "left")
-              .withColumn("sink",
-                when(col("d_sink").isNotNull, col("final_sink")).otherwise(col("sink")))
-              .filter(col("sink").isNotNull) // discarded buckets
-          }
-          effective
-            .groupBy(col("sink"))
-            .agg(sum(col("rows")).as("rows"), sum(col("bytes")).as("bytes"),
-              countDistinct(col("conv_id")).as("convs"))
-            .collect()
-            .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-            .toMap
-      }
-      (cs, ch, st)
-    } finally perConv.foreach(_.unpersist()) // never leak the cache on a throw
-
-    // apply the decisions as directory moves/deletes
-    var moved = 0
-    var deleted = 0
-    changed.foreach { c =>
-      val src = Paths.get(outDir, s"sink=${c.origSink}", s"bkt=${c.bucketKey}")
-      if (Files.isDirectory(src)) {
-        if (c.curSink == null) { graft.util.Fs.deleteRecursively(src); deleted += 1 }
-        else {
-          mergeDirInto(src, Paths.get(outDir, s"sink=${c.curSink}", s"bkt=${c.bucketKey}"),
-            prefix = s"rr-${c.origSink}-")
-          moved += 1
-        }
-      }
-    }
-    (spark.read.parquet(outDir)
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts"), col("sink")),
-      cells, stats)
-  }
-
-  /** Single-pass limiting WITHOUT the partition-directory layout: the staged
-    * shuffle is shared across two jobs at the RDD level.
-    *
-    * `writeLimited` materializes the stage as (sink, bucket)-partitioned
-    * parquet so verdicts read one pruned column and reroutes are directory
-    * moves — the right layout when buckets are GB-sized. At the other end of
-    * the scale (many buckets × little data, like the sandbox fixture, or an
-    * hourly incremental run) the per-file constant costs dominate. This
-    * formulation removes the intermediate table entirely:
+  /** Single-pass limiting: the staged shuffle is shared across two jobs at
+    * the RDD level.
     *
     *   - ONE shuffle keyed (sink, bucket, salt) is written by the first job
     *     and served to both (Spark skips the map stage of the second job —
     *     the cross-job analog of ReuseExchange, see Bridge.internalRdd);
-    *   - the (sink, bucket) byte sums are accumulated on the MAP SIDE, in
-    *     the same pass that feeds the exchange (guide §2.3 "aggregate
-    *     before you shuffle", as a task-completion accumulator): job 1 only
-    *     forces the shuffle WRITE and consumes zero shuffle rows. The
-    *     round-6 form computed the sums in job 1's reduce — a full
+    *   - the (sink, bucket) byte and row sums are accumulated on the MAP
+    *     SIDE, in the same pass that feeds the exchange (guide §2.3
+    *     "aggregate before you shuffle", as a task-completion accumulator):
+    *     job 1 only forces the shuffle WRITE and consumes zero shuffle rows.
+    *     The round-6 form computed the sums in job 1's reduce — a full
     *     decompress+scan of the staged shuffle (~10 % of e2e wall at BOTH
     *     scaling levels, measured: 12.7 s of 117.9 at 2 cores, 3.4 s of
     *     34.0 at 8 — paid once per run for numbers the map side already
@@ -258,20 +104,33 @@ object SinglePassLimit {
     *
     * Exactly-once sums under retries/speculation: the accumulator is keyed
     * by MAP PARTITION ID and merged by slot REPLACEMENT, not addition — a
-    * re-run or speculative duplicate of a partition overwrites its own slot
-    * with identical (deterministic-input) content, so no double counting;
-    * Spark additionally drops accumulator updates from failed task attempts.
+    * re-run or speculative duplicate of a partition overwrites its own slot,
+    * so no double counting; Spark additionally drops accumulator updates
+    * from failed task attempts. PRECONDITION: each map partition's row
+    * multiset is deterministic (a re-run sees the same rows), and the sums
+    * do not depend on row order (they are additions) — so a replacing slot
+    * carries exactly the content it replaces. A nondeterministic `routed`
+    * (e.g. sampling without a seed, or a source whose partitions change
+    * between attempts) breaks the precondition.
     *
-    * Returns the surviving rows; the caller's write is the second job.
+    * Returns (surviving rows, post-chain verdict cells, observed metrics):
+    *   - the cells carry each (original sink, bucket)'s bytes and rows, with
+    *     the chain's final sink — the per-sink in/out/dropped volumes
+    *     observed DURING the run with zero extra passes;
+    *   - the observed metrics are `routed`'s `observe(name, …)` counters,
+    *     read from the bridged plan once job 1 ran it. An `Observation`
+    *     would never complete here: no Dataset action runs over that plan,
+    *     only its RDD.
     *
     * Contract: `routed` carries the standard columns with non-null `ts`
     * (the routed stream always does — `ts` comes from the source envelope);
     * a null ts fails fast in the verdict task rather than silently
-    * misbucketing into epoch 0. The two-pass RateLimit.apply remains the
-    * path of record for inputs needing null-bucket semantics or the
-    * dropped set. */
-  def limitReusingShuffle(routed: DataFrame, rules: Seq[LimitRule],
-      saltBuckets: Int = 32, maxVerdictCells: Int = 4 << 20): DataFrame = {
+    * misbucketing into epoch 0. A null `text` counts as 0 bytes, as
+    * `octet_length` sums do. The two-pass RateLimit.apply remains the path
+    * of record for inputs needing null-bucket semantics or the dropped set. */
+  def limitWithCells(routed: DataFrame, rules: Seq[LimitRule],
+      saltBuckets: Int = 32, maxVerdictCells: Int = 4 << 20)
+      : (DataFrame, Array[RateLimit.Cell], Map[String, Row]) = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.graftbridge.Bridge
@@ -309,7 +168,8 @@ object SinglePassLimit {
       // young-gen box on the miss path only), and a one-entry memo catches
       // consecutive same-(sink, bucket) rows — the common case, since the
       // pre-shuffle stream is in (conv, turn) order and hour buckets change
-      // far slower than rows — with a single byte-compare
+      // far slower than rows — with a single byte-compare. A slot is
+      // [bytes, rows].
       val sinkIds = new java.util.HashMap[UTF8String, Integer]()
       var sinkKeys = new Array[UTF8String](8) // sid → interned (copied) sink
       var perSink = new Array[java.util.HashMap[java.lang.Long, Array[Long]]](8)
@@ -323,8 +183,10 @@ object SinglePassLimit {
           import scala.jdk.CollectionConverters._
           acc.add(pid -> sinkIds.entrySet().iterator().asScala.flatMap { se =>
             val name = se.getKey.toString
-            perSink(se.getValue).entrySet().iterator().asScala
-              .map(be => (name, be.getKey.longValue()) -> be.getValue()(0))
+            perSink(se.getValue).entrySet().iterator().asScala.map { be =>
+              val slot = be.getValue
+              (name, be.getKey.longValue()) -> ((slot(0), slot(1)))
+            }
           }.toMap)
         }
       }
@@ -336,9 +198,10 @@ object SinglePassLimit {
               "semantics must use the two-pass RateLimit.apply")
         val bucket = Math.floorDiv(row.getLong(iTs), micros)
         val sinkU = row.getUTF8String(iSink)
-        val n = row.getUTF8String(iText).numBytes
+        val n = if (row.isNullAt(iText)) 0 else row.getUTF8String(iText).numBytes
         if (prevSlot != null && bucket == prevBucket && sinkU.equals(prevSink)) {
           prevSlot(0) += n
+          prevSlot(1) += 1
         } else {
           var sid = sinkIds.get(sinkU)
           if (sid == null) {
@@ -361,11 +224,12 @@ object SinglePassLimit {
                 s"rate-limit verdict aggregate exceeds $maxCells (sink × bucket) " +
                   "cells in one map task (pre-shuffle, so a task can see every " +
                   "cell) — bucket granularity is too fine for driver-side verdicts")
-            slot = Array(0L)
+            slot = Array(0L, 0L)
             buckets.put(boxed, slot)
             nCells += 1
           }
           slot(0) += n
+          slot(1) += 1
           prevSink = sinkKeys(sid)
           prevBucket = bucket
           prevSlot = slot
@@ -383,24 +247,19 @@ object SinglePassLimit {
     // consuming a single shuffle row — the result stage's iterator is never
     // touched, so nothing is fetched/decompressed (shuffle-read cost ≈ 0)
     internal.mapPartitions(_ => Iterator.empty[Int]).count()
-    val merged = new java.util.HashMap[(String, Long), Long]()
-    acc.value.values.foreach(_.foreach { case (k, v) =>
-      merged.merge(k, v, (a, b) => a + b)
-    })
-    require(merged.size <= maxVerdictCells,
+    val totals = acc.totals
+    require(totals.size <= maxVerdictCells,
       s"rate-limit verdict aggregate exceeds $maxVerdictCells (sink × bucket) cells — " +
         "bucket granularity is too fine for driver-side verdicts")
-    val cells = {
-      import scala.jdk.CollectionConverters._
-      merged.entrySet().iterator().asScala
-        .map(e => RateLimit.Cell(e.getKey._1, e.getKey._2, e.getKey._1,
-          e.getKey._1, e.getValue))
-        .toArray
-    }
+    val cells = totals.iterator.map { case ((sink, bucket), (bytes, rows)) =>
+      RateLimit.Cell(sink, bucket, sink, sink, bytes, rows)
+    }.toArray
 
     RateLimit.runChain(cells, rules)
     val changed = cells.filter(c => c.curSink == null || c.curSink != c.origSink)
-    if (changed.isEmpty) return Bridge.internalCreateDataFrame(spark, internal, schema)
+    val observed = projected.queryExecution.observedMetrics
+    if (changed.isEmpty)
+      return (Bridge.internalCreateDataFrame(spark, internal, schema), cells, observed)
 
     // job 2: rewrite/drop the affected buckets in-flight
     val decisions: Map[(String, Long), Option[String]] =
@@ -434,20 +293,22 @@ object SinglePassLimit {
         }
       }
     }
-    Bridge.internalCreateDataFrame(spark, mapped, schema)
+    (Bridge.internalCreateDataFrame(spark, mapped, schema), cells, observed)
   }
 
-  /** Verdict-sum accumulator for [[limitReusingShuffle]]: value is
-    * mapPartitionId → ((sink, bucket) → bytes). Merge REPLACES per-partition
-    * slots instead of adding, which is what makes the sums exactly-once
-    * under task retries and speculative duplicates (both re-produce the same
-    * deterministic slot content); Spark already drops updates from failed
-    * attempts. Driver-side consumers sum across partition slots. */
+  /** One map partition's verdict sums: (sink, bucket) → (bytes, rows). */
+  private[limit] type CellSums = Map[(String, Long), (Long, Long)]
+
+  /** Verdict-sum accumulator for [[limitWithCells]]: value is
+    * mapPartitionId → ((sink, bucket) → (bytes, rows)). Merge REPLACES
+    * per-partition slots instead of adding, which is what makes the sums
+    * exactly-once under task retries and speculative duplicates (both
+    * re-produce the same slot content, given the deterministic-partition
+    * precondition stated at [[limitWithCells]]); Spark already drops updates
+    * from failed attempts. [[totals]] adds across partition slots. */
   private[limit] final class CellSumsAccumulator
-    extends org.apache.spark.util.AccumulatorV2[
-      (Int, Map[(String, Long), Long]), Map[Int, Map[(String, Long), Long]]] {
-    private val slots = new java.util.concurrent.ConcurrentHashMap[
-      Int, Map[(String, Long), Long]]()
+    extends org.apache.spark.util.AccumulatorV2[(Int, CellSums), Map[Int, CellSums]] {
+    private val slots = new java.util.concurrent.ConcurrentHashMap[Int, CellSums]()
     override def isZero: Boolean = slots.isEmpty
     override def copy(): CellSumsAccumulator = {
       val c = new CellSumsAccumulator
@@ -455,32 +316,19 @@ object SinglePassLimit {
       c
     }
     override def reset(): Unit = slots.clear()
-    override def add(v: (Int, Map[(String, Long), Long])): Unit =
-      slots.put(v._1, v._2)
-    override def merge(other: org.apache.spark.util.AccumulatorV2[
-        (Int, Map[(String, Long), Long]), Map[Int, Map[(String, Long), Long]]]): Unit =
+    override def add(v: (Int, CellSums)): Unit = slots.put(v._1, v._2)
+    override def merge(
+        other: org.apache.spark.util.AccumulatorV2[(Int, CellSums), Map[Int, CellSums]]): Unit =
       other.value.foreach { case (pid, m) => slots.put(pid, m) }
-    override def value: Map[Int, Map[(String, Long), Long]] = {
+    override def value: Map[Int, CellSums] = {
       import scala.jdk.CollectionConverters._
       slots.asScala.toMap
     }
-  }
 
-  /** Move every visible file of `src` into `dst` (created if absent), with a
-    * `prefix` that disambiguates same-named part files from the two origins.
-    * Hadoop's LocalFileSystem sidecar checksums (.name.crc) are renamed in
-    * lock-step so they stay valid; whatever hidden files remain are deleted
-    * with the source directory. */
-  private def mergeDirInto(src: Path, dst: Path, prefix: String): Unit = {
-    Files.createDirectories(dst)
-    graft.util.Fs.listDir(src)
-      .filterNot(_.getFileName.toString.startsWith(".")).foreach { f =>
-        val name = f.getFileName.toString
-        Files.move(f, dst.resolve(prefix + name), StandardCopyOption.ATOMIC_MOVE)
-        val crc = src.resolve(s".$name.crc")
-        if (Files.exists(crc))
-          Files.move(crc, dst.resolve(s".$prefix$name.crc"), StandardCopyOption.ATOMIC_MOVE)
+    /** The sums added across partition slots. */
+    def totals: CellSums =
+      value.values.flatten.groupMapReduce(_._1)(_._2) { case ((b1, r1), (b2, r2)) =>
+        (b1 + b2, r1 + r2)
       }
-    graft.util.Fs.deleteRecursively(src)
   }
 }

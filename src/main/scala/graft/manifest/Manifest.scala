@@ -81,11 +81,14 @@ final class Manifest(root: String) {
     commitEntry(sink, runId, stats.getLong(0), stats.getLong(1), stats.getLong(3))
   }
 
-  /** Commit a sink whose data was already staged by the single-pass limiter
-    * ([[graft.limit.SinglePassLimit]]): the staged partition directory is
-    * PROMOTED into place with one atomic rename — no row is rewritten — then
-    * the manifest entry commits. A stale uncommitted target (crash between a
-    * previous promote and its commit) is replaced. */
+  /** Commit a sink whose data was already staged: [[graft.pipeline.Pipeline.run]]
+    * writes the single-pass limiter's survivors once, partitioned by sink,
+    * and each `sink=<name>` directory is PROMOTED into place here with one
+    * atomic rename — no row is rewritten — then the manifest entry commits.
+    * `rows`/`bytes`/`convs` are the caller's exact stats for the staged
+    * rows (the limiter's post-chain cells and a conv_id-only scan). A stale
+    * uncommitted target (crash between a previous promote and its commit)
+    * is replaced. */
   def promoteAndCommit(sink: String, stagedDir: java.nio.file.Path, runId: String,
       rows: Long, bytes: Long, convs: Long): Unit = {
     Files.createDirectories(manifestDir)

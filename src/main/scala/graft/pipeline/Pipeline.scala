@@ -87,17 +87,48 @@ object Pipeline {
     RateLimit.apply(fanned, cfg.limitRules)
   }
 
+  /** scan → parse → enrich → route → fan-out, with the per-stage observe()
+    * counters in place: the plan [[run]] hands to the limiter. It adds no
+    * shuffle ([[parsedProjected]]), so the limiter's (sink, bucket, salt)
+    * exchange is the job's one shuffle beyond whatever `turns` carries.
+    *
+    * Per-STAGE counters (reference /api/sources + /api/workers parity,
+    * web/api/sources.go:30-89, workers.go:27-84): each stage reports its own
+    * rows — runtime-visible metrics with zero extra passes, read back from
+    * the limiter's bridged plan. Conservation invariants (asserted in
+    * ManifestSpec): scan_rows = parse_ok + parse_quarantined; route_in =
+    * scan_rows; fanout_rows ≥ route_in (fan-out duplicates); dead-letter
+    * routed rows = quarantined + unmatched. */
+  def observedFanOut(turns: DataFrame, spark: SparkSession, cfg: Config = Config()): DataFrame = {
+    val scanned = turns.observe(ObsScan, count(lit(1)).as("rows"))
+    val parsed = parsedProjected(scanned)
+      .observe(ObsParse,
+        sum(when(col("level").isNotNull, 1L).otherwise(0L)).as("rows_ok"),
+        sum(when(col("level").isNull, 1L).otherwise(0L)).as("rows_quarantined"))
+    val targeted = Router.withTargets(Enrichment.enrich(parsed, spark), cfg.routeRules)
+      .observe(ObsRoute,
+        count(lit(1)).as("rows_in"),
+        sum(when(col("targets") === array(lit(Router.DeadLetter)), 1L)
+          .otherwise(0L)).as("rows_dead_letter"))
+    Router.explodeTargets(targeted)
+  }
+
+  private val ObsScan = "graft_scan"
+  private val ObsParse = "graft_parse"
+  private val ObsRoute = "graft_route"
+
   /** Full run with single-pass limiting, per-sink promotion, manifest commits
     * and resume. Returns the per-sink aggregate DataFrame (also persisted as
     * metrics).
     *
-    * Single-pass shape (DESIGN.md "data movement" list, round-2 revision):
-    * the routed rows are written ONCE to a staging table partitioned by
-    * (sink, bucket); limiter verdicts come from a column-pruned scan of the
-    * staged files; fallback/discard are partition-directory moves; committing
-    * a sink = one atomic directory rename + manifest entry. The round-1 shape
-    * (verdict pre-pass + full-table cache + per-sink filtered writes) touched
-    * the fact table 2+ times and pinned it in executor memory.
+    * Shape (DESIGN.md "data movement"): [[observedFanOut]] feeds
+    * [[SinglePassLimit.limitWithCells]] — one (sink, bucket, salt) exchange
+    * whose map side sums each (sink, bucket) cell's bytes and rows; the
+    * survivors are written ONCE, partitioned by sink, under `_staging/`;
+    * committing a sink = one atomic directory rename + manifest entry. The
+    * commit stats need no pass over the rows: per-sink rows/bytes and the
+    * in/out/dropped counters come from the post-chain cells, and distinct
+    * convs from one conv_id-only scan of the staged files.
     *
     * Resume note: a resumed run re-stages ALL sinks — limiter verdicts must
     * see the full (sink, bucket) volumes, including buckets whose sink is
@@ -112,67 +143,46 @@ object Pipeline {
       cfg: Config = Config(),
       failAfterSinks: Int = Int.MaxValue // test hook: simulate a mid-job kill
   ): DataFrame = {
-    val turns = Transcripts.fromEvents(spark, sfDir)
-
-    // Per-STAGE observe() counters (reference /api/sources + /api/workers
-    // parity, web/api/sources.go:30-89, workers.go:27-84): each stage of the
-    // one staging pass reports its own rows — runtime-visible metrics with
-    // zero extra passes. Conservation invariants (asserted in ManifestSpec):
-    // scan_rows = parse_ok + parse_quarantined; route_in = scan_rows;
-    // fanout_rows ≥ route_in (fan-out duplicates); dead-letter routed rows =
-    // quarantined + unmatched.
-    val obsScan = new org.apache.spark.sql.Observation(s"graft_scan_$runId")
-    val obsParse = new org.apache.spark.sql.Observation(s"graft_parse_$runId")
-    val obsRoute = new org.apache.spark.sql.Observation(s"graft_route_$runId")
-    val scanned = turns.observe(obsScan, count(lit(1)).as("rows"))
-    val parsed = parsedSalted(scanned, cfg.saltBuckets)
-      .observe(obsParse,
-        sum(when(col("level").isNotNull, 1L).otherwise(0L)).as("rows_ok"),
-        sum(when(col("level").isNull, 1L).otherwise(0L)).as("rows_quarantined"))
-    val targeted = Router.withTargets(Enrichment.enrich(parsed, spark), cfg.routeRules)
-      .observe(obsRoute,
-        count(lit(1)).as("rows_in"),
-        sum(when(col("targets") === array(lit(Router.DeadLetter)), 1L)
-          .otherwise(0L)).as("rows_dead_letter"))
-    val fanned = Router.explodeTargets(targeted)
+    val fanned = observedFanOut(Transcripts.fromEvents(spark, sfDir), spark, cfg)
 
     val manifest = new Manifest(outRoot)
     val already = manifest.committedSinks()
 
-    // observe() = runtime-visible counters with zero extra passes — the
-    // reference's live Stats (monitoring/stats.go:10-118) as Spark metrics.
-    // Attached to the staging write, the job's one pass over the fact table.
-    val obs = new org.apache.spark.sql.Observation(s"graft_metrics_$runId")
-    val observed = fanned.observe(obs,
-      count(lit(1)).as("routed_rows"),
-      sum(octet_length(col("text"))).as("routed_bytes"),
-      approx_count_distinct(col("sink")).as("sinks")) // observe() forbids exact distinct aggs
-
+    // The limiter's map-side sums are exactly-once only if each map
+    // partition's row multiset is deterministic and the sums ignore row
+    // order. Both hold here: scan → parse → enrich → route is a pure function
+    // of the input files, and the sums are additions.
+    val (survivors, cells, observed) =
+      SinglePassLimit.limitWithCells(fanned, cfg.limitRules, cfg.saltBuckets)
     val staging = s"$outRoot/_staging"
-    // cells AND exact per-final-sink commit stats from the limiter's ONE
-    // pruned scan of the staged files — run() itself performs zero passes
-    // over staged data (the round-2 shape re-read the staged conv_id column
-    // of everything just written for the countDistinct)
-    val (_, cells, stats) =
-      SinglePassLimit.writeLimitedWithStats(observed, cfg.limitRules, staging)
+    survivors.write.mode("overwrite").partitionBy("sink").parquet(staging)
+
+    // exact per-final-sink commit stats: rows/bytes from the cells the chain
+    // left in each sink; distinct convs from the staged conv_id column alone
+    val stats: Map[String, (Long, Long)] = cells.filter(_.curSink != null)
+      .groupMapReduce(_.curSink)(c => (c.rows, c.bytes)) { case ((r1, b1), (r2, b2)) =>
+        (r1 + r2, b1 + b2)
+      }
+    val convs: Map[String, Long] = spark.read.schema("conv_id STRING, sink STRING")
+      .parquet(staging)
+      .groupBy(col("sink")).agg(countDistinct(col("conv_id")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     var written = 0
     stats.keys.toSeq.sorted.filterNot(already.contains).foreach { sink =>
       if (written < failAfterSinks) {
-        val (rows, bytes, convs) = stats(sink)
+        val (rows, bytes) = stats(sink)
         manifest.promoteAndCommit(sink,
-          java.nio.file.Paths.get(staging, s"sink=$sink"), runId, rows, bytes, convs)
+          java.nio.file.Paths.get(staging, s"sink=$sink"), runId, rows, bytes, convs(sink))
         written += 1
       }
     }
 
-    // Persist the observed run metrics next to the lineage entries (A1/A2) —
-    // the staging write always ran, so obs.get never blocks. The per-sink
-    // in/out/dropped counters come from the limiter's verdict cells, i.e.
-    // they were observed DURING the run with zero extra passes — the
-    // reference's live per-connection Stats (monitoring/stats.go:10-118,
+    // Persist the observed run metrics next to the lineage entries (A1/A2).
+    // The per-sink in/out/dropped counters come from the limiter's verdict
+    // cells, i.e. they were observed DURING the run with zero extra passes —
+    // the reference's live per-connection Stats (monitoring/stats.go:10-118,
     // served at web/api/targets.go:43-121) as a run artifact.
-    val m = obs.get
     val perSinkJson = {
       final case class C(var inRows: Long = 0, var inBytes: Long = 0,
           var outRows: Long = 0, var outBytes: Long = 0,
@@ -195,20 +205,20 @@ object Pipeline {
           s""""dropped_rows":${c.droppedRows},"dropped_bytes":${c.droppedBytes}}"""
       }.mkString("{", ",", "}")
     }
-    // per-stage counters (sources/workers parity) — all observed on the one
-    // staging pass; see the conservation invariants at the observe() sites
-    val mScan = obsScan.get
-    val mParse = obsParse.get
-    val mRoute = obsRoute.get
+    // per-stage counters (sources/workers parity), observed on the limiter's
+    // one pass; see the conservation invariants at [[observedFanOut]]
+    def m(name: String, field: String): Any = observed(name).getAs[Any](field)
+    val routedRows = cells.map(_.rows).sum
     val stagesJson =
-      s"""{"scan":{"rows":${mScan("rows")}},""" +
-        s""""parse":{"rows_ok":${mParse("rows_ok")},""" +
-        s""""rows_quarantined":${mParse("rows_quarantined")}},""" +
-        s""""route":{"rows_in":${mRoute("rows_in")},""" +
-        s""""rows_dead_letter":${mRoute("rows_dead_letter")},""" +
-        s""""fanout_rows":${m("routed_rows")}}}"""
-    val metricsJson = s"""{"run_id":"$runId","routed_rows":${m("routed_rows")},""" +
-      s""""routed_bytes":${m("routed_bytes")},"sinks":${m("sinks")},""" +
+      s"""{"scan":{"rows":${m(ObsScan, "rows")}},""" +
+        s""""parse":{"rows_ok":${m(ObsParse, "rows_ok")},""" +
+        s""""rows_quarantined":${m(ObsParse, "rows_quarantined")}},""" +
+        s""""route":{"rows_in":${m(ObsRoute, "rows_in")},""" +
+        s""""rows_dead_letter":${m(ObsRoute, "rows_dead_letter")},""" +
+        s""""fanout_rows":$routedRows}}"""
+    val metricsJson = s"""{"run_id":"$runId","routed_rows":$routedRows,""" +
+      s""""routed_bytes":${cells.map(_.bytes).sum},""" +
+      s""""sinks":${cells.map(_.origSink).distinct.length},""" +
       s""""stages":$stagesJson,"per_sink":$perSinkJson}"""
     // tmp + atomic move: the metrics HTTP sidecar may scrape this file at
     // any moment, and a crash mid-write must not leave a truncated record
@@ -224,12 +234,12 @@ object Pipeline {
     if (stats.keySet.subsetOf(new Manifest(outRoot).committedSinks()))
       graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(staging))
 
-    // Final per-sink aggregate FROM THE MANIFEST ENTRIES — writeAndCommit
-    // already computed rows/bytes/convs per sink on the cached routed set, so
-    // re-reading every committed sink's parquet here (the round-1 shape) would
-    // be a complete second read of all written data at the 100 TB design
-    // point. The manifest IS the aggregate. (_metrics_* sidecar files carry
-    // no sink field — the isNotNull filter excludes them.)
+    // Final per-sink aggregate FROM THE MANIFEST ENTRIES — the commit stats
+    // already hold rows/bytes/convs per sink, so re-reading every committed
+    // sink's parquet here (the round-1 shape) would be a complete second
+    // read of all written data at the 100 TB design point. The manifest IS
+    // the aggregate. (_metrics_* sidecar files carry no sink field — the
+    // isNotNull filter excludes them.)
     manifest.entries(spark)
       .filter(col("sink").isNotNull)
       .select(col("sink"), col("row_count").cast("long").as("turns"),

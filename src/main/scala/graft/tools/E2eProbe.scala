@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graftbridge.Bridge
+
 /** Stage-level wall-clock probe of the v3 e2e pipeline (the scaling-pair
   * workload): runs one warm-up + one timed `E2eRunner.e2e` at the given
   * core count and prints per-stage walls from a listener — run it under
@@ -32,12 +34,14 @@ object E2eProbe {
     })
     val tmp = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.util.Env.scratchDir), "e2eprobe").toString
-    graft.E2eRunner.e2e(spark, sfDir, s"$tmp/warm", math.min(8, multS.toInt), "v3", 32)
-    Thread.sleep(2000) // listener bus is async: let warm-up events drain
-    stages.clear()     // before the clear, so none pollute the timed report
-    val (sec, rows) = graft.E2eRunner.e2e(spark, sfDir, s"$tmp/out", multS.toInt, "v3", 32)
+    graft.E2eRunner.e2e(spark, sfDir, s"$tmp/warm", math.min(8, multS.toInt), 32)
+    // the listener bus is async: drain the warm-up's events before the
+    // clear, so none pollute the timed report
+    Bridge.drainListenerBus(spark.sparkContext)
+    stages.clear()
+    val (sec, rows) = graft.E2eRunner.e2e(spark, sfDir, s"$tmp/out", multS.toInt, 32)
     println(f"E2EPROBE cpus=$cpus total=$sec%.2f s rows=$rows")
-    Thread.sleep(2000) // and let the timed run's last stages land before printing
+    Bridge.drainListenerBus(spark.sparkContext) // the timed run's last stages
     stages.forEach(println)
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
     spark.stop()

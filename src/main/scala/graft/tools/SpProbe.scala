@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.enrich.Enrichment
 import graft.limit.{RateLimit, SinglePassLimit}
@@ -32,7 +33,8 @@ object SpProbe {
     val tmp = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.util.Env.scratchDir), "probe").toString
     // warm
-    graft.E2eRunner.e2e(spark, sfDir, s"$tmp/warm", 8, "v3", salt)
+    graft.E2eRunner.e2e(spark, sfDir, s"$tmp/warm", 8, salt)
+    Bridge.drainListenerBus(spark.sparkContext) // async bus: no warm-up stages
     stages.clear()
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
@@ -47,6 +49,7 @@ object SpProbe {
     timed("write(job2)") {
       survived.write.mode("overwrite").parquet(s"$tmp/out")
     }
+    Bridge.drainListenerBus(spark.sparkContext)
     stages.forEach(println)
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
     spark.stop()

@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
-/** Minimal bridge to the `private[sql]` Column↔Expression converters and the
-  * InternalRow-RDD↔DataFrame boundary. Lives in an org.apache.spark.sql
-  * subpackage solely to satisfy the access modifiers; no Spark internals are
-  * modified. */
+/** Minimal bridge to the `private[sql]` Column↔Expression converters, the
+  * InternalRow-RDD↔DataFrame boundary and the `private[spark]` listener
+  * bus. Lives in an org.apache.spark.sql subpackage solely to satisfy the
+  * access modifiers; no Spark internals are modified. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -35,4 +35,10 @@ object Bridge {
     * session-level conf without mutating the caller's session for life. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Blocks until every listener event posted so far has reached every
+    * listener. The bus is asynchronous: a listener read right after a job
+    * can otherwise miss that job's last stage events. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

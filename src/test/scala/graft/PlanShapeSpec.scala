@@ -93,9 +93,11 @@ class PlanShapeSpec extends SparkSpec {
 
   test("single-pass staged plan: grok only in Projects (CSE domain), ONE exchange") {
     // the single-pass path drops the post-parse barrier exchange, so this
-    // asserts the two facts that make that safe+fast: every grok copy stays
-    // inside a Project (whole-stage codegen subexpression elimination ⇒ one
-    // regex exec per row), and the whole job has exactly one shuffle
+    // asserts, on the plan Pipeline.run hands to the limiter (observe nodes
+    // in place), the two facts that make that safe+fast: every grok copy
+    // stays inside a Project (whole-stage codegen subexpression elimination
+    // ⇒ one regex exec per row), and no shuffle runs before the limiter's
+    // own (sink, bucket, salt) exchange — the job's one shuffle.
     // synthetic turns round-tripped through parquet: the events-derived
     // fixture adds a row_number window (its own exchange) that exists only to
     // DERIVE the sandbox table — production transcripts arrive with turn_idx
@@ -105,23 +107,26 @@ class PlanShapeSpec extends SparkSpec {
     Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 10)
       .write.mode("overwrite").parquet(turnsDir)
     val turns = spark.read.parquet(turnsDir)
-    val fanned = graft.route.Router.fanOut(Enrichment.enrich(
-      Pipeline.parsedProjected(turns), spark))
-    val staged = graft.limit.SinglePassLimit.staged(fanned, saltBuckets = 32)
+    val fanned = Pipeline.observedFanOut(turns, spark)
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
-    val ops = staged.queryExecution.optimizedPlan.collect {
+    val optimized = fanned.queryExecution.optimizedPlan
+    val ops = optimized.collect {
       case p if p.expressions.exists(hasGrok) => p.getClass.getSimpleName
     }
     assert(ops.nonEmpty && ops.distinct.toSeq === Seq("Project"),
       s"grok must only appear in Project operators, found $ops")
+    val observed = optimized.collect {
+      case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics => c.name
+    }
+    assert(observed.toSet === Set("graft_scan", "graft_parse", "graft_route"))
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val phys = staged.queryExecution.executedPlan.treeString
+      val phys = fanned.queryExecution.executedPlan.treeString
       // shuffle exchanges only — the enrich BroadcastExchange is expected
       val exchanges = "Exchange hashpartitioning".r.findAllIn(phys).length
-      assert(exchanges === 1, s"single-pass plan must shuffle exactly once:\n$phys")
+      assert(exchanges === 0, s"no shuffle may run before the limiter's:\n$phys")
       assert(!phys.contains("SortMergeJoin"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -8,9 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.limit.{LimitRule, RateLimit, SinglePassLimit}
 import graft.model.RoutedTurn
 
-/** The single-pass bucket-move limiter must be observationally identical to
-  * the two-pass declarative formulation (RateLimit.apply) — same surviving
-  * rows, same final sinks — while touching the fact table once. */
+/** The single-pass shuffle-reuse limiter must be observationally identical
+  * to the two-pass declarative formulation (RateLimit.apply) — same
+  * surviving rows, same final sinks — while touching the fact table once. */
 class SinglePassSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,49 +41,41 @@ class SinglePassSpec extends SparkSpec {
       .sorted.toSeq
 
   test("single-pass survivors equal the two-pass survivors row-for-row") {
-    val out = Files.createTempDirectory("graft-spl").toString
     val (survivedTwoPass, dropped) = RateLimit.apply(fixture, rules)
-    val survivedSinglePass = SinglePassLimit.writeLimited(fixture, rules, out)
+    val (survivedSinglePass, cells, _) = SinglePassLimit.limitWithCells(fixture, rules)
     assert(canon(survivedSinglePass) === canon(survivedTwoPass))
     // the fixture exercised both actions
     assert(dropped.count() === 5L)
     assert(survivedSinglePass.filter(col("sink") === "sink_fallback").count() === 7L)
+    // the verdict cells account for exactly the rows the two-pass path drops
+    assert(cells.filter(_.curSink == null).map(_.rows).sum === 5L)
   }
 
-  test("fallback move merges into an existing bucket directory (no clobber)") {
-    val out = Files.createTempDirectory("graft-spl-merge").toString
-    SinglePassLimit.writeLimited(fixture, rules, out)
-    // h1 fallback dir holds organic (2) + rerouted (5) rows after the merge
-    val h1 = t(1).getTime / 3600000L
-    val h2 = t(2).getTime / 3600000L
-    val dir = Paths.get(out, "sink=sink_fallback", s"bkt=$h1")
-    assert(Files.isDirectory(dir))
-    val rows = spark.read.parquet(dir.toString).count()
-    assert(rows === 7L)
-    // the discarded bucket's directory is gone, and nothing remains under
-    // the breached search hours
-    assert(!Files.exists(Paths.get(out, "sink=sink_fallback", s"bkt=$h2")))
-    assert(!Files.exists(Paths.get(out, "sink=sink_search", s"bkt=$h1")))
-  }
+  /** [[fixture]] plus null-text rows: a mixed cell (sink_search h0), a
+    * null row rerouted with its breached bucket (sink_search h1 → fallback),
+    * and a cell whose every text is null (sink_a h3). A null counts as 0
+    * bytes on both paths. */
+  private def withNullText: DataFrame =
+    fixture.unionByName((
+      mk(0, 1, 0, "sink_search").map(_.copy(conv_id = "conv-null-h00", text = null)) ++
+        mk(1, 1, 0, "sink_search").map(_.copy(conv_id = "conv-null-h01", text = null)) ++
+        mk(3, 2, 0, "sink_a").map(r => r.copy(conv_id = s"conv-null-h03-${r.turn_idx}",
+          text = null))).toDF())
 
   test("shuffle-reuse survivors equal the two-pass survivors row-for-row") {
-    val (survivedTwoPass, _) = RateLimit.apply(fixture, rules)
-    val survived = SinglePassLimit.limitReusingShuffle(fixture, rules)
-    assert(canon(survived) === canon(survivedTwoPass))
-    // both limiter actions were exercised (fallback rows present, discards gone)
-    assert(survived.filter(col("sink") === "sink_fallback").count() === 7L)
+    Seq(fixture -> 7L, withNullText -> 8L).foreach { case (input, fallbackRows) =>
+      val (survivedTwoPass, dropped) = RateLimit.apply(input, rules)
+      val survived = SinglePassLimit.limitReusingShuffle(input, rules)
+      assert(canon(survived) === canon(survivedTwoPass))
+      // both limiter actions were exercised (fallback rows present, discards gone)
+      assert(dropped.count() === 5L)
+      assert(survived.filter(col("sink") === "sink_fallback").count() === fallbackRows)
+    }
   }
 
   test("shuffle-reuse with no breaches returns every row unchanged") {
     val df = (mk(0, 2, 10, "sink_search") ++ mk(1, 3, 10, "sink_a")).toDF()
     val got = SinglePassLimit.limitReusingShuffle(df, rules)
-    assert(canon(got) === canon(df))
-  }
-
-  test("no breaches → no directories move, all rows survive in place") {
-    val out = Files.createTempDirectory("graft-spl-quiet").toString
-    val df = (mk(0, 2, 10, "sink_search") ++ mk(1, 3, 10, "sink_a")).toDF()
-    val got = SinglePassLimit.writeLimited(df, rules, out)
     assert(canon(got) === canon(df))
   }
 

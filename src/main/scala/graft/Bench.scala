@@ -384,8 +384,8 @@ object E2eRunner {
     * the row count is read back afterwards, outside the timed window.
     *
     * Shape (reported as variant "v3" in the bench JSON): single-pass,
-    * shuffle-reuse — parse → route → ONE (sink,bkt,salt) exchange shared by
-    * the verdict job and the write job
+    * shuffle-reuse — parse → route → ONE (sink,bkt,salt) exchange with the
+    * verdict sums on its map side and the verdicts applied above it
     * (SinglePassLimit.limitReusingShuffle); plain parquet sink.
     */
   def e2e(spark: SparkSession, sfDir: String, outDir: String, mult: Int,

@@ -25,7 +25,10 @@ object Main {
       // keep AQE skew handling but NOT partition coalescing: the sandbox's
       // tiny pre-amplification shuffles (~2 MB) coalesce to 1 partition and
       // serialize the downstream 64x-amplified work — a small-data artifact
-      // that cannot occur at the real 10^12-row scale this job targets
+      // that cannot occur at the real 10^12-row scale this job targets.
+      // The limiter's read sits after the LAST exchange, where nothing is
+      // downstream to serialize; ApplyVerdicts coalesces it itself, by the
+      // same coalescePartitions.minPartitionSize rule
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -3,8 +3,8 @@ package graft.layout
 import java.nio.file.{Files, Path, Paths}
 
 import graft.util.Fs
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+import org.apache.spark.sql.{Column, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Small-file compaction — the lakehouse OPTIMIZE analog over plain parquet
   * dirs, closing the layout family: [[ZOrder]] writes a clustered layout,
@@ -83,7 +83,10 @@ object Compact {
         df.repartitionByRange(nOut, sortCols: _*).sortWithinPartitions(sortCols: _*)
       else df.coalesce(nOut)
     val tmp = dir.stripSuffix("/") + "__compact"
-    packed.write.mode("overwrite").parquet(tmp)
+    // the rewrite's own row count sizes any bloom rebuild below: exact, and
+    // no extra pass over the table
+    val written = Observation("graft_compact")
+    packed.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(tmp)
 
     // swap: aside-rename keeps a complete dir visible at every instant
     val dirP = Paths.get(dir)
@@ -103,14 +106,11 @@ object Compact {
     // rebuild sizes each filter to the compacted layout's actual
     // rows-per-file (ceil(total/nOut files)) — what writeIndex's contract
     // asks for ("size to the layout's target rows-per-file"). The row total
-    // comes from the STALE index's own n_rows column (one manifest row per
-    // pre-compaction file; compaction is content-preserving, so they sum to
-    // the new total) — never a count() scan of the table just rewritten.
+    // is the one the rewrite observed — not the stale index's n_rows, which
+    // misses files appended after the index was built.
     val bloomCols = bloomColsOf(dir)
     if (bloomCols.nonEmpty) {
-      val rows = spark.read.parquet(BloomIndex.indexPath(dir, bloomCols.head))
-        .agg(coalesce(sum(col("n_rows")), lit(0L)))
-        .collect()(0).getLong(0)
+      val rows = written.get("rows").asInstanceOf[Long]
       val perFile = math.max(1L, rows / math.max(1, dataFiles(dir).size) + 1)
       bloomCols.foreach(c =>
         BloomIndex.writeIndex(spark, dir, c, expectedItemsPerFile = perFile))

@@ -47,6 +47,16 @@ final class Manifest(root: String) {
 
   def sinkPath(sink: String): String = s"$root/sinks/$sink"
 
+  /** The committed sinks' current-pointer entries, read on the driver:
+    * (sink, row_count, bytes, convs), sorted by sink. */
+  def sinkEntries(): Seq[(String, Long, Long, Long)] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    committedSinks().toSeq.sorted.map { sink =>
+      val n = om.readTree(Files.readString(manifestDir.resolve(s"$sink.json")))
+      (sink, n.get("row_count").asLong, n.get("bytes").asLong, n.get("convs").asLong)
+    }
+  }
+
   /** Write one sink's routed rows (date-partitioned, so downstream readers
     * get partition pruning on `dt` — the Iceberg-style layout), then commit
     * its manifest entry.

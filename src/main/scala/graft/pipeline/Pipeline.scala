@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Transcripts
@@ -87,30 +87,40 @@ object Pipeline {
     RateLimit.apply(fanned, cfg.limitRules)
   }
 
-  /** scan → parse → enrich → route → fan-out, with the per-stage observe()
-    * counters in place: the plan [[run]] hands to the limiter. It adds no
-    * shuffle ([[parsedProjected]]), so the limiter's (sink, bucket, salt)
-    * exchange is the job's one shuffle beyond whatever `turns` carries.
+  /** The per-stage counters of one [[observedFanOut]] plan. Each is a
+    * standard `Observation`, complete once an action over that plan ran. */
+  final class StageCounters {
+    val scan: Observation = Observation(ObsScan)
+    val parse: Observation = Observation(ObsParse)
+    val route: Observation = Observation(ObsRoute)
+  }
+
+  /** scan → parse → enrich → route → fan-out, with the per-stage counters
+    * in place: the plan [[run]] hands to the limiter. It adds no shuffle
+    * ([[parsedProjected]]), so the limiter's (sink, bucket, salt) exchange
+    * is the job's one shuffle beyond whatever `turns` carries.
     *
     * Per-STAGE counters (reference /api/sources + /api/workers parity,
     * web/api/sources.go:30-89, workers.go:27-84): each stage reports its own
-    * rows — runtime-visible metrics with zero extra passes, read back from
-    * the limiter's bridged plan. Conservation invariants (asserted in
+    * rows — runtime-visible metrics with zero extra passes, complete once
+    * the staging write ran. Conservation invariants (asserted in
     * ManifestSpec): scan_rows = parse_ok + parse_quarantined; route_in =
     * scan_rows; fanout_rows ≥ route_in (fan-out duplicates); dead-letter
     * routed rows = quarantined + unmatched. */
-  def observedFanOut(turns: DataFrame, spark: SparkSession, cfg: Config = Config()): DataFrame = {
-    val scanned = turns.observe(ObsScan, count(lit(1)).as("rows"))
+  def observedFanOut(turns: DataFrame, spark: SparkSession, cfg: Config = Config())
+      : (DataFrame, StageCounters) = {
+    val counters = new StageCounters
+    val scanned = turns.observe(counters.scan, count(lit(1)).as("rows"))
     val parsed = parsedProjected(scanned)
-      .observe(ObsParse,
+      .observe(counters.parse,
         sum(when(col("level").isNotNull, 1L).otherwise(0L)).as("rows_ok"),
         sum(when(col("level").isNull, 1L).otherwise(0L)).as("rows_quarantined"))
     val targeted = Router.withTargets(Enrichment.enrich(parsed, spark), cfg.routeRules)
-      .observe(ObsRoute,
+      .observe(counters.route,
         count(lit(1)).as("rows_in"),
         sum(when(col("targets") === array(lit(Router.DeadLetter)), 1L)
           .otherwise(0L)).as("rows_dead_letter"))
-    Router.explodeTargets(targeted)
+    (Router.explodeTargets(targeted), counters)
   }
 
   private val ObsScan = "graft_scan"
@@ -121,14 +131,16 @@ object Pipeline {
     * and resume. Returns the per-sink aggregate DataFrame (also persisted as
     * metrics).
     *
-    * Shape (DESIGN.md "data movement"): [[observedFanOut]] feeds
-    * [[SinglePassLimit.limitWithCells]] — one (sink, bucket, salt) exchange
-    * whose map side sums each (sink, bucket) cell's bytes and rows; the
-    * survivors are written ONCE, partitioned by sink, under `_staging/`;
-    * committing a sink = one atomic directory rename + manifest entry. The
-    * commit stats need no pass over the rows: per-sink rows/bytes and the
-    * in/out/dropped counters come from the post-chain cells, and distinct
-    * convs from one conv_id-only scan of the staged files.
+    * Shape (DESIGN.md "data movement"): ONE data query — [[observedFanOut]]
+    * into [[SinglePassLimit.limitWithCells]] (one (sink, bucket, salt)
+    * exchange whose map side sums each (sink, bucket) cell's bytes and rows,
+    * with the verdicts applied above it) into the survivors' one write,
+    * partitioned by sink, under `_staging/`; committing a sink = one atomic
+    * directory rename + manifest entry. The commit stats need no pass over
+    * the rows: per-sink rows/bytes and the in/out/dropped counters come from
+    * the post-chain cells, the stage counters from the write's observations,
+    * and distinct convs from one conv_id-only scan of the staged files. The
+    * returned frame is built on the driver from the committed entries.
     *
     * Resume note: a resumed run re-stages ALL sinks — limiter verdicts must
     * see the full (sink, bucket) volumes, including buckets whose sink is
@@ -143,7 +155,7 @@ object Pipeline {
       cfg: Config = Config(),
       failAfterSinks: Int = Int.MaxValue // test hook: simulate a mid-job kill
   ): DataFrame = {
-    val fanned = observedFanOut(Transcripts.fromEvents(spark, sfDir), spark, cfg)
+    val (fanned, counters) = observedFanOut(Transcripts.fromEvents(spark, sfDir), spark, cfg)
 
     val manifest = new Manifest(outRoot)
     val already = manifest.committedSinks()
@@ -152,10 +164,11 @@ object Pipeline {
     // partition's row multiset is deterministic and the sums ignore row
     // order. Both hold here: scan → parse → enrich → route is a pure function
     // of the input files, and the sums are additions.
-    val (survivors, cells, observed) =
+    val (survivors, verdicts) =
       SinglePassLimit.limitWithCells(fanned, cfg.limitRules, cfg.saltBuckets)
     val staging = s"$outRoot/_staging"
     survivors.write.mode("overwrite").partitionBy("sink").parquet(staging)
+    val cells = verdicts.cells
 
     // exact per-final-sink commit stats: rows/bytes from the cells the chain
     // left in each sink; distinct convs from the staged conv_id column alone
@@ -205,16 +218,16 @@ object Pipeline {
           s""""dropped_rows":${c.droppedRows},"dropped_bytes":${c.droppedBytes}}"""
       }.mkString("{", ",", "}")
     }
-    // per-stage counters (sources/workers parity), observed on the limiter's
-    // one pass; see the conservation invariants at [[observedFanOut]]
-    def m(name: String, field: String): Any = observed(name).getAs[Any](field)
+    // per-stage counters (sources/workers parity), observed on the staging
+    // write; see the conservation invariants at [[observedFanOut]]
+    def m(o: Observation, field: String): Any = o.get(field)
     val routedRows = cells.map(_.rows).sum
     val stagesJson =
-      s"""{"scan":{"rows":${m(ObsScan, "rows")}},""" +
-        s""""parse":{"rows_ok":${m(ObsParse, "rows_ok")},""" +
-        s""""rows_quarantined":${m(ObsParse, "rows_quarantined")}},""" +
-        s""""route":{"rows_in":${m(ObsRoute, "rows_in")},""" +
-        s""""rows_dead_letter":${m(ObsRoute, "rows_dead_letter")},""" +
+      s"""{"scan":{"rows":${m(counters.scan, "rows")}},""" +
+        s""""parse":{"rows_ok":${m(counters.parse, "rows_ok")},""" +
+        s""""rows_quarantined":${m(counters.parse, "rows_quarantined")}},""" +
+        s""""route":{"rows_in":${m(counters.route, "rows_in")},""" +
+        s""""rows_dead_letter":${m(counters.route, "rows_dead_letter")},""" +
         s""""fanout_rows":$routedRows}}"""
     val metricsJson = s"""{"run_id":"$runId","routed_rows":$routedRows,""" +
       s""""routed_bytes":${cells.map(_.bytes).sum},""" +
@@ -238,11 +251,8 @@ object Pipeline {
     // already hold rows/bytes/convs per sink, so re-reading every committed
     // sink's parquet here (the round-1 shape) would be a complete second
     // read of all written data at the 100 TB design point. The manifest IS
-    // the aggregate. (_metrics_* sidecar files carry no sink field — the
-    // isNotNull filter excludes them.)
-    manifest.entries(spark)
-      .filter(col("sink").isNotNull)
-      .select(col("sink"), col("row_count").cast("long").as("turns"),
-        col("bytes").cast("long").as("bytes"), col("convs").cast("long").as("convs"))
+    // the aggregate: a few small JSON files, read on the driver.
+    import spark.implicits._
+    manifest.sinkEntries().toDF("sink", "turns", "bytes", "convs")
   }
 }

@@ -43,10 +43,10 @@ object SpProbe {
     val turns = Transcripts.amplified(spark, sfDir, mult)
     val rules = RateLimit.defaultRules()
     val fanned = Router.fanOut(Enrichment.enrich(Pipeline.parsedProjected(turns), spark))
-    val survived = timed("verdict(job1)+plan") {
+    val survived = timed("plan") {
       SinglePassLimit.limitReusingShuffle(fanned, rules, saltBuckets = salt)
     }
-    timed("write(job2)") {
+    timed("map stage+verdicts+write") {
       survived.write.mode("overwrite").parquet(s"$tmp/out")
     }
     Bridge.drainListenerBus(spark.sparkContext)

@@ -97,6 +97,28 @@ class CompactSpec extends SparkSpec {
     assert(got === want)
   }
 
+  test("bloom rebuild is sized by the compacted rows, files appended after the index included") {
+    // the stale index's n_rows covers only the files it indexed: an append
+    // made after writeIndex would undercount and undersize the rebuilt blooms
+    val dir = tmpDir()
+    rows(4096).repartition(32, col("id")).write.parquet(dir)
+    graft.layout.BloomIndex.writeIndex(spark, dir, "id", expectedItemsPerFile = 128)
+    rows(2048, from = 4096).coalesce(1).write.mode("append").parquet(dir)
+    val bytes = Compact.dataFiles(dir).map(Files.size).sum
+    assert(Compact.compact(spark, dir, targetFileBytes = bytes / 2 + 1).rewritten)
+    def index(): Set[(String, Long, Seq[Byte])] =
+      spark.read.parquet(graft.layout.BloomIndex.indexPath(dir, "id")).collect()
+        .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows"),
+          r.getAs[Array[Byte]]("bloom").toSeq)).toSet
+    val rebuilt = index()
+    // a fresh index over the compacted dir at its true rows-per-file
+    val total = spark.read.parquet(dir).count()
+    assert(total === 6144L)
+    graft.layout.BloomIndex.writeIndex(spark, dir, "id",
+      expectedItemsPerFile = total / Compact.dataFiles(dir).size + 1)
+    assert(rebuilt === index())
+  }
+
   test("clustered compaction restores pruning after appends erode the layout") {
     val dir = tmpDir()
     ZOrder.writeZOrdered(rows(8192), col("a"), col("b"), dir, nFiles = 16)

@@ -28,10 +28,22 @@ class ManifestSpec extends SparkSpec {
 
   test("clean run commits every sink and the manifest lists them") {
     val out = Files.createTempDirectory("graft-clean").toString
-    Pipeline.run(spark, sfDir, out, runId = "clean")
+    // the shipped Main's session: AQE on, AQE partition coalescing off
+    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalescing)
+    spark.conf.set(coalescing, "false")
+    try Pipeline.run(spark, sfDir, out, runId = "clean")
+    finally spark.conf.set(coalescing, prev)
     val m = new Manifest(out)
     assert(m.committedSinks().nonEmpty)
     assert(readAllSinks(out).count() > 0)
+    // right-sized staging write: the fixture shuffles a few KB, so the
+    // limiter's own read coalesces to one partition — one file per sink
+    m.committedSinks().foreach { s =>
+      val files = graft.util.Fs.listDir(java.nio.file.Paths.get(m.sinkPath(s)))
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      assert(files <= 1, s"$s committed $files files")
+    }
   }
 
   test("killed-after-2-sinks rerun equals a clean run, no duplicates") {
@@ -45,6 +57,7 @@ class ManifestSpec extends SparkSpec {
     assert(partial.size === 2, s"expected partial commit, got $partial")
     // resume: full rerun against the same outRoot
     Pipeline.run(spark, sfDir, resumeOut, runId = "r2")
+    assert(new Manifest(resumeOut).committedSinks() === new Manifest(cleanOut).committedSinks())
 
     val clean = canon(readAllSinks(cleanOut))
     val resumed = canon(readAllSinks(resumeOut))

@@ -91,6 +91,18 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  /** Synthetic turns round-tripped through parquet: the events-derived
+    * fixture adds a row_number window (its own exchange) that exists only to
+    * DERIVE the sandbox table — production transcripts arrive with turn_idx
+    * (DESIGN.md) — and a raw LocalRelation would be eagerly collapsed by
+    * ConvertToLocalRelation, leaving no plan to inspect. */
+  private def syntheticTurns(): org.apache.spark.sql.DataFrame = {
+    val turnsDir = java.nio.file.Files.createTempDirectory("graft-psp").toString
+    Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 10)
+      .write.mode("overwrite").parquet(turnsDir)
+    spark.read.parquet(turnsDir)
+  }
+
   test("single-pass staged plan: grok only in Projects (CSE domain), ONE exchange") {
     // the single-pass path drops the post-parse barrier exchange, so this
     // asserts, on the plan Pipeline.run hands to the limiter (observe nodes
@@ -98,16 +110,7 @@ class PlanShapeSpec extends SparkSpec {
     // stays inside a Project (whole-stage codegen subexpression elimination
     // ⇒ one regex exec per row), and no shuffle runs before the limiter's
     // own (sink, bucket, salt) exchange — the job's one shuffle.
-    // synthetic turns round-tripped through parquet: the events-derived
-    // fixture adds a row_number window (its own exchange) that exists only to
-    // DERIVE the sandbox table — production transcripts arrive with turn_idx
-    // (DESIGN.md) — and a raw LocalRelation would be eagerly collapsed by
-    // ConvertToLocalRelation, leaving no plan to inspect
-    val turnsDir = java.nio.file.Files.createTempDirectory("graft-psp").toString
-    Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 10)
-      .write.mode("overwrite").parquet(turnsDir)
-    val turns = spark.read.parquet(turnsDir)
-    val fanned = Pipeline.observedFanOut(turns, spark)
+    val (fanned, _) = Pipeline.observedFanOut(syntheticTurns(), spark)
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
     val optimized = fanned.queryExecution.optimizedPlan
@@ -128,6 +131,30 @@ class PlanShapeSpec extends SparkSpec {
       val exchanges = "Exchange hashpartitioning".r.findAllIn(phys).length
       assert(exchanges === 0, s"no shuffle may run before the limiter's:\n$phys")
       assert(!phys.contains("SortMergeJoin"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("limiter plan: one exchange, CellTap below it, ApplyVerdicts above, no RDD scan") {
+    // the limiter is planned as two operators around its one exchange — no
+    // RDD round trip (an RDD scan re-projects every row), and the map-side
+    // sums and the verdicts sit on either side of the same shuffle
+    import graft.limit.{ApplyVerdictsExec, CellTapExec, RateLimit, SinglePassLimit}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (fanned, _) = Pipeline.observedFanOut(syntheticTurns(), spark)
+    val limited = SinglePassLimit.limitReusingShuffle(fanned, RateLimit.defaultRules())
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = limited.queryExecution.executedPlan
+      val phys = plan.treeString
+      assert("Exchange hashpartitioning".r.findAllIn(phys).length === 1, phys)
+      assert(!phys.contains("Scan ExistingRDD"), phys)
+      val applies = plan.collect { case a: ApplyVerdictsExec => a }
+      assert(applies.size === 1, phys)
+      val exchanges = applies.head.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, phys)
+      assert(exchanges.head.collect { case t: CellTapExec => t }.size === 1, phys)
+      assert(plan.collect { case t: CellTapExec => t }.size === 1, phys)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 

@@ -42,13 +42,14 @@ class SinglePassSpec extends SparkSpec {
 
   test("single-pass survivors equal the two-pass survivors row-for-row") {
     val (survivedTwoPass, dropped) = RateLimit.apply(fixture, rules)
-    val (survivedSinglePass, cells, _) = SinglePassLimit.limitWithCells(fixture, rules)
+    val (survivedSinglePass, verdicts) = SinglePassLimit.limitWithCells(fixture, rules)
     assert(canon(survivedSinglePass) === canon(survivedTwoPass))
     // the fixture exercised both actions
     assert(dropped.count() === 5L)
     assert(survivedSinglePass.filter(col("sink") === "sink_fallback").count() === 7L)
-    // the verdict cells account for exactly the rows the two-pass path drops
-    assert(cells.filter(_.curSink == null).map(_.rows).sum === 5L)
+    // the verdict cells (filled by the first action above) account for
+    // exactly the rows the two-pass path drops
+    assert(verdicts.cells.filter(_.curSink == null).map(_.rows).sum === 5L)
   }
 
   /** [[fixture]] plus null-text rows: a mixed cell (sink_search h0), a
@@ -71,6 +72,106 @@ class SinglePassSpec extends SparkSpec {
       assert(dropped.count() === 5L)
       assert(survived.filter(col("sink") === "sink_fallback").count() === fallbackRows)
     }
+  }
+
+  private def withAqe[T](on: Boolean)(f: => T): T = {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
+    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("every action over the limiter output agrees with the two-pass limiter, AQE on and off") {
+    // the two ways the operators around the exchange can silently apply no
+    // verdicts: an operator that does not declare the columns it reads loses
+    // `ts` to column pruning (a count reads no column), and with AQE off a
+    // codegen'd Project sits between ApplyVerdicts and the shuffle it must
+    // wait for
+    def rowKeys(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
+      rows.map(r => s"${r.getAs[String]("conv_id")}|${r.getAs[Int]("turn_idx")}|" +
+        s"${r.getAs[String]("sink")}|${r.getAs[String]("text")}").sorted.toSeq
+    def sinkCounts(df: DataFrame): Map[String, Long] =
+      df.groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    for (aqe <- Seq(true, false); (input, fallbackRows) <- Seq(fixture -> 7L, withNullText -> 8L))
+      withAqe(aqe) {
+        val (twoPass, _) = RateLimit.apply(input, rules)
+        val (survived, verdicts) = SinglePassLimit.limitWithCells(input, rules)
+        val want = canon(twoPass)
+        assert(rowKeys(survived.collect()) === want, s"first action, aqe=$aqe")
+        assert(rowKeys(survived.collect()) === want, s"second action, aqe=$aqe")
+        assert(survived.filter(col("sink") === "sink_fallback").count() === fallbackRows,
+          s"fallback count, aqe=$aqe")
+        assert(sinkCounts(survived) === sinkCounts(twoPass), s"per-sink counts, aqe=$aqe")
+        assert(verdicts.cells.filter(_.curSink == null).map(_.rows).sum === 5L, s"aqe=$aqe")
+      }
+  }
+
+  test("the operators' SQL metrics match the verdict cells after a write") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.limit.{ApplyVerdictsExec, CellTapExec}
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executed.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-spm").toString + "/out"
+    val (survived, verdicts) = SinglePassLimit.limitWithCells(fixture, rules)
+    // as the shipped Main runs: AQE coalescing off, so the partition count
+    // below is the limiter's own choice
+    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalescing)
+    spark.conf.set(coalescing, "false")
+    spark.listenerManager.register(listener)
+    try {
+      survived.write.mode("overwrite").parquet(out)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(coalescing, prev)
+    }
+    object Plans extends AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    val plan = executed.asScala.toSeq
+      .filter(p => Plans.find(p)(_.isInstanceOf[ApplyVerdictsExec]).nonEmpty) match {
+      case Seq(p) => p
+      case ps => fail(s"${ps.size} limiter writes captured")
+    }
+    val tap = Plans.collect(plan) { case t: CellTapExec => t }.head
+    val apply = Plans.collect(plan) { case a: ApplyVerdictsExec => a }.head
+    def metric(p: SparkPlan, name: String): Long = p.metrics(name).value
+    val cells = verdicts.cells
+    val routedRows = cells.map(_.rows).sum
+    assert(routedRows === fixture.count())
+    assert(metric(tap, "rows") === routedRows)
+    // each map task sums every cell it sees; together they see each at least once
+    assert(metric(tap, "cells") >= cells.length)
+    assert(metric(apply, "rowsIn") === routedRows)
+    val rerouted = cells.filter(c => c.curSink != null && c.curSink != c.origSink).map(_.rows).sum
+    val dropped = cells.filter(_.curSink == null).map(_.rows).sum
+    assert(rerouted === 5L && dropped === 5L)
+    assert(metric(apply, "rerouted") === rerouted)
+    assert(metric(apply, "dropped") === dropped)
+    // a few KB shuffled over 4 shuffle partitions: one output partition,
+    // hence one file
+    assert(survived.sparkSession.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(metric(apply, "partitions") === 1L)
+    assert(graft.layout.Compact.dataFiles(out).count(_.toString.endsWith(".parquet")) === 1)
+  }
+
+  test("the map side fails fast on a null ts and on more cells than the cap") {
+    def failsWith(df: DataFrame, msg: String): Unit = {
+      val e = intercept[org.apache.spark.SparkException](df.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(msg))), e)
+    }
+    val nullTs = fixture.withColumn("ts",
+      when(col("sink") === "sink_a", lit(null).cast("timestamp")).otherwise(col("ts")))
+    failsWith(SinglePassLimit.limitReusingShuffle(nullTs, rules), "requires non-null ts")
+    // one map task sees all six cells: the in-task cap trips, not the driver's
+    failsWith(SinglePassLimit.limitReusingShuffle(fixture.coalesce(1), rules, maxVerdictCells = 1),
+      "cells in one map task")
   }
 
   test("shuffle-reuse with no breaches returns every row unchanged") {

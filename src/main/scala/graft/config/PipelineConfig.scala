@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.expr
 import graft.pipeline.Pipeline
 import graft.route.RouteRule
 import graft.limit.LimitRule
+import graft.manifest.Records
 
 /** Declarative YAML pipeline config — the engine's "query language", the
   * direct translation of the reference's routing YAML
@@ -29,8 +30,6 @@ import graft.limit.LimitRule
   * }}}
   */
 object PipelineConfig {
-
-  private val NamePattern = "^[a-zA-Z0-9-_]+$".r // reference config/config.go:13
 
   /** "10KB" / "2MB" / "512" → bytes (reference P9, bytefmt.ToBytes). */
   def parseBytes(s: String): Long = {
@@ -66,7 +65,7 @@ object PipelineConfig {
 
     val routes = asList("routes").map { e =>
       val sink = str(e, "sink")
-      require(NamePattern.matches(sink), s"invalid sink name: $sink") // F5
+      Records.requireName("sink", sink) // F5
       RouteRule(sink, expr(str(e, "predicate")))
     }
     require(routes.nonEmpty, "config needs at least one route")
@@ -77,8 +76,10 @@ object PipelineConfig {
         s"action must be fallback|discard|alert: $action") // F5
       val fallback = e.get("fallback").map(_.toString)
       require(action != "fallback" || fallback.nonEmpty, "fallback action needs 'fallback' sink")
+      val sink = str(e, "sink")
+      (sink +: fallback.toSeq).foreach(Records.requireName("sink", _)) // F5
       LimitRule(
-        sink = str(e, "sink"),
+        sink = sink,
         bytesPerBucket = parseBytes(str(e, "throughput")),
         avgOverBuckets = e.get("average_over").map(_.toString.toInt).getOrElse(1),
         action = action,

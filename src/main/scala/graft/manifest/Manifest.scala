@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Records.{SinkEntry, SnapshotRecord, StreamMarker}
+
 /** Lineage/metrics manifest with write-then-commit semantics + idempotent resume.
   *
   * Reference analog: the Consul-KV dedup set keyed by event hash
@@ -19,6 +21,9 @@ import org.apache.spark.sql.functions._
   *   <root>/_snapshots/snap-NNN.json   append-only numbered commit log
   *                                     ([[appendSnapshot]] — optimistic
   *                                     concurrency, records never rewritten)
+  * Every record is a [[Records]] case class written by [[Records.writeAtomic]]
+  * (the snapshot claim keeps its own hard-link protocol) and read back by the
+  * tolerant [[Records.readAll]].
   * On a real cluster the same protocol maps onto Iceberg snapshot commits —
   * the unit of commit is a sink partition, the manifest is the catalog.
   *
@@ -34,62 +39,19 @@ final class Manifest(root: String) {
 
   def committedSinks(): Set[String] = {
     if (!Files.isDirectory(manifestDir)) return Set.empty
-    val s = Files.list(manifestDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".json") && !n.startsWith("_"))
-        .map(_.stripSuffix(".json"))
-        .toSet
-    } finally s.close()
+    graft.util.Fs.listDir(manifestDir)
+      .map(_.getFileName.toString)
+      .collect { case n if Records.isSinkEntry(n) => n.stripSuffix(".json") }
+      .toSet
   }
 
   def sinkPath(sink: String): String = s"$root/sinks/$sink"
 
   /** The committed sinks' current-pointer entries, read on the driver:
     * (sink, row_count, bytes, convs), sorted by sink. */
-  def sinkEntries(): Seq[(String, Long, Long, Long)] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    committedSinks().toSeq.sorted.map { sink =>
-      val n = om.readTree(Files.readString(manifestDir.resolve(s"$sink.json")))
-      (sink, n.get("row_count").asLong, n.get("bytes").asLong, n.get("convs").asLong)
-    }
-  }
-
-  /** Write one sink's routed rows (date-partitioned, so downstream readers
-    * get partition pruning on `dt` — the Iceberg-style layout), then commit
-    * its manifest entry.
-    * Ordering: data → fsync'd temp manifest → atomic move. A crash anywhere
-    * before the move leaves the sink uncommitted; resume rewrites it
-    * (overwrite mode makes the rewrite idempotent). */
-  /** Target rows per output file — sized so a file is a few hundred MB of
-    * transcript text at production row widths. */
-  val TargetRowsPerFile: Long = 4L * 1024 * 1024
-
-  def writeAndCommit(sink: String, rows: DataFrame, runId: String): Unit = {
-    Files.createDirectories(manifestDir)
-    Files.createDirectories(tmpDir)
-    val stats = rows
-      .agg(count(lit(1)).as("rows"),
-        coalesce(sum(octet_length(col("text"))), lit(0L)).as("bytes"),
-        coalesce(countDistinct(to_date(col("ts"))), lit(1L)).as("days"),
-        countDistinct(col("conv_id")).as("convs"))
-      .collect()(0)
-    val days = math.max(1L, stats.getLong(2))
-    // small-file control: cluster rows so each (dt, salt) lands in exactly one
-    // task => ~filesPerDay files per date partition, instead of
-    // tasks x dates tiny files (the classic partitionBy small-file explosion)
-    val filesPerDay = math.max(1L,
-      math.min(1024L, stats.getLong(0) / days / TargetRowsPerFile + 1)).toInt
-    val nParts = math.max(1, math.min(8192L, days * filesPerDay).toInt)
-    rows
-      .withColumn("dt", to_date(col("ts")))
-      .repartition(nParts, col("dt"),
-        pmod(hash(col("conv_id"), col("turn_idx")), lit(filesPerDay)))
-      .write.mode("overwrite").partitionBy("dt").parquet(sinkPath(sink))
-    commitEntry(sink, runId, stats.getLong(0), stats.getLong(1), stats.getLong(3))
-  }
+  def sinkEntries(): Seq[(String, Long, Long, Long)] =
+    Records.readAll[SinkEntry](manifestDir, Records.isSinkEntry)
+      .map(e => (e.sink, e.rowCount, e.bytes, e.convs)).sortBy(_._1)
 
   /** Commit a sink whose data was already staged: [[graft.pipeline.Pipeline.run]]
     * writes the single-pass limiter's survivors once, partitioned by sink,
@@ -98,11 +60,10 @@ final class Manifest(root: String) {
     * `rows`/`bytes`/`convs` are the caller's exact stats for the staged
     * rows (the limiter's post-chain cells and a conv_id-only scan). A stale
     * uncommitted target (crash between a previous promote and its commit)
-    * is replaced. */
+    * is replaced. A process crash anywhere before the entry's rename leaves
+    * the sink uncommitted, so resume promotes it again. */
   def promoteAndCommit(sink: String, stagedDir: java.nio.file.Path, runId: String,
       rows: Long, bytes: Long, convs: Long): Unit = {
-    Files.createDirectories(manifestDir)
-    Files.createDirectories(tmpDir)
     val target = Paths.get(sinkPath(sink))
     if (Files.exists(target)) deleteRecursively(target)
     Files.createDirectories(target.getParent)
@@ -112,23 +73,10 @@ final class Manifest(root: String) {
 
   private def commitEntry(sink: String, runId: String, rows: Long, bytes: Long,
       convs: Long): Unit = {
-    val snap = appendSnapshot(sid => snapshotRecord(sid, sink, runId, rows, bytes, convs))
-    val entry =
-      s"""{"run_id":"$runId","sink":"$sink","row_count":$rows,""" +
-        s""""bytes":$bytes,"convs":$convs,"snapshot_id":$snap,""" +
-        s""""committed_ts":"${java.time.Instant.now()}"}"""
-    val tmp = tmpDir.resolve(s"$sink.json")
-    Files.writeString(tmp, entry)
-    Files.move(tmp, manifestDir.resolve(s"$sink.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val snap = appendSnapshot(SnapshotRecord(_, runId, sink, "commit", rows, bytes, convs))
+    Records.writeAtomic(manifestDir, s"$sink.json",
+      SinkEntry(runId, sink, rows, bytes, convs, snap, Records.now()))
   }
-
-  private def snapshotRecord(snapshotId: Long, sink: String, runId: String,
-      rows: Long, bytes: Long, convs: Long): String =
-    s"""{"snapshot_id":$snapshotId,"parent_id":${snapshotId - 1},""" +
-      s""""run_id":"$runId","sink":"$sink","op":"commit","row_count":$rows,""" +
-      s""""bytes":$bytes,"convs":$convs,""" +
-      s""""committed_ts":"${java.time.Instant.now()}"}"""
 
   /** Append-only, snapshot-numbered commit log — the Iceberg-shaped half of
     * the manifest. Each commit claims snapshot N+1 by ATOMICALLY hard-linking
@@ -143,14 +91,12 @@ final class Manifest(root: String) {
     * @param record builds the record body for a CANDIDATE snapshot id (the
     *        id lands inside the record, so it is re-rendered per attempt)
     * @return the claimed snapshot id */
-  def appendSnapshot(record: Long => String): Long = {
+  def appendSnapshot(record: Long => SnapshotRecord): Long = {
     Files.createDirectories(snapshotDir)
-    Files.createDirectories(tmpDir)
     var attempt = currentSnapshotId() + 1
     while (true) {
-      val tmp = tmpDir.resolve(s"snap-$attempt-${java.util.UUID.randomUUID()}.json")
-      Files.writeString(tmp, record(attempt))
-      val target = snapshotDir.resolve(f"snap-$attempt%08d.json")
+      val tmp = Records.writeTmp(snapshotDir, s"snap-$attempt", record(attempt))
+      val target = snapshotDir.resolve(Records.snapshotName(attempt))
       try {
         try Files.createLink(target, tmp)
         catch {
@@ -204,7 +150,7 @@ final class Manifest(root: String) {
     if (!Files.isDirectory(snapshotDir)) return 0L
     graft.util.Fs.listDir(snapshotDir)
       .map(_.getFileName.toString)
-      .collect { case n if n.startsWith("snap-") && n.endsWith(".json") =>
+      .collect { case n if Records.isSnapshot(n) =>
         n.stripPrefix("snap-").stripSuffix(".json").toLong }
       .foldLeft(0L)(math.max)
   }
@@ -228,23 +174,18 @@ final class Manifest(root: String) {
 
   import Manifest.Retention
 
-  private def retentionPath = snapshotDir.resolve("_retention.json")
+  private val RetentionFile = "_retention.json"
+  private def retentionPath = snapshotDir.resolve(RetentionFile)
 
   /** Current retention state (underscore-prefixed, so it is invisible to the
     * path-based snapshot readers and [[snapshots]]). */
-  def retention(): Retention = {
-    if (!Files.exists(retentionPath)) return Retention.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = om.readTree(Files.readString(retentionPath))
-    import scala.jdk.CollectionConverters._
-    val bases = Option(n.get("bases")).map { b =>
-      b.properties().asScala.map { e =>
-        e.getKey -> Retention.Base(
-          e.getValue.get("max_batch").asLong, e.getValue.get("n_batches").asLong)
-      }.toMap
-    }.getOrElse(Map.empty[String, Retention.Base])
-    Retention(n.get("horizon").asLong, bases)
-  }
+  def retention(): Retention =
+    if (!Files.exists(retentionPath)) Retention.empty
+    else Records.mapper.readValue(retentionPath.toFile, classOf[Retention])
+
+  /** Every parseable commit-log record; mid-write records are skipped. */
+  private def snapshotLog(): Seq[SnapshotRecord] =
+    Records.readAll[SnapshotRecord](snapshotDir, Records.isSnapshot)
 
   /** Retention sweep over the append-only snapshot log — the batch-side
     * analog of [[graft.cdc.CdcStream.vacuum]] (Iceberg's expireSnapshots):
@@ -272,35 +213,14 @@ final class Manifest(root: String) {
     * @return the snapshot ids expired by THIS sweep */
   def expireSnapshots(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"keepLast out of range: $keepLast")
-    if (!Files.isDirectory(snapshotDir)) return Seq.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    // (id, sink, op, batchId) per parseable record — mid-write records are
-    // skipped like every other log reader here
-    val records = graft.util.Fs.listDir(snapshotDir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("snap-") && n.endsWith(".json")
-      }
-      .flatMap { p =>
-        try {
-          val n = om.readTree(Files.readString(p))
-          val batch =
-            if (n.hasNonNull("op") && n.get("op").asText == "stream_commit")
-              Some(n.get("run_id").asText.stripPrefix("stream-batch-").toLong)
-            else None
-          Some((n.get("snapshot_id").asLong,
-            if (n.hasNonNull("sink")) n.get("sink").asText else "",
-            batch, p))
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
+    val records = snapshotLog()
     if (records.isEmpty) return Seq.empty
     val prev = retention()
-    val head = records.map(_._1).max
+    val head = records.map(_.snapshotId).max
     val horizon = math.max(prev.horizon, head - keepLast + 1)
-    val latestPerSink = records.groupBy(_._2).view.mapValues(_.map(_._1).max).toMap
-    val expire = records.filter { case (id, sink, _, _) =>
-      id < horizon && id != latestPerSink(sink)
-    }
+    val latestPerSink = records.groupMapReduce(_.sink)(_.snapshotId)(math.max)
+    val expire = records.filter(r =>
+      r.snapshotId < horizon && r.snapshotId != latestPerSink(r.sink))
     // Fold in ascending batch order and skip batches at or below the sink's
     // recorded maxBatch: a crash AFTER the durable write but BEFORE the
     // record deletes leaves already-compacted records on disk, and the next
@@ -309,25 +229,16 @@ final class Manifest(root: String) {
     // completeness check. Per-sink batch ids are monotone, so
     // batch <= maxBatch ⇔ already compacted (this is what makes re-expiry
     // actually idempotent, as the scaladoc promises).
-    val bases = expire.sortBy(_._3.getOrElse(-1L)).foldLeft(prev.bases) {
-      case (acc, (_, sink, Some(batch), _)) =>
+    val bases = expire.flatMap(r => r.streamBatch.map(r.sink -> _)).sortBy(_._2)
+      .foldLeft(prev.bases) { case (acc, (sink, batch)) =>
         val b = acc.getOrElse(sink, Retention.Base(-1L, 0L))
         if (batch <= b.maxBatch) acc
         else acc.updated(sink, Retention.Base(batch, b.nBatches + 1))
-      case (acc, _) => acc
-    }
+      }
     // durable state FIRST (atomic replace), record deletes after
-    val body = s"""{"horizon":$horizon,"bases":{""" +
-      bases.toSeq.sortBy(_._1).map { case (s, b) =>
-        s""""$s":{"max_batch":${b.maxBatch},"n_batches":${b.nBatches}}"""
-      }.mkString(",") + "}}"
-    Files.createDirectories(tmpDir)
-    val tmp = tmpDir.resolve(s"_retention-${java.util.UUID.randomUUID()}.json")
-    Files.writeString(tmp, body)
-    Files.move(tmp, retentionPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    expire.foreach { case (_, _, _, p) => Files.deleteIfExists(p) }
-    expire.map(_._1).sorted
+    Records.writeAtomic(snapshotDir, RetentionFile, Retention(horizon, bases))
+    expire.foreach(r => Files.deleteIfExists(snapshotDir.resolve(Records.snapshotName(r.snapshotId))))
+    expire.map(_.snapshotId).sorted
   }
 
   // ---- streaming micro-batch commit (exactly-once across replays) ----
@@ -351,14 +262,12 @@ final class Manifest(root: String) {
     * (sink, batch): each record is appended immediately after its sink's
     * promotion, and a replay that meets an already-promoted target appends
     * the record only if the previous attempt died inside that sink's
-    * move→append window ([[streamAuditedSinks]]) — neither lost nor
+    * move→append window (the log already holds its record) — neither lost nor
     * duplicated audit rows. A fully-committed batch short-circuits on its
     * marker file. */
   def commitStreamBatch(batch: DataFrame, batchId: Long): Unit = {
-    Files.createDirectories(manifestDir)
-    Files.createDirectories(tmpDir)
-    val marker = manifestDir.resolve(s"_stream_batch_$batchId.json")
-    if (Files.exists(marker)) return // replay of a fully-committed batch
+    val marker = s"_stream_batch_$batchId.json"
+    if (Files.exists(manifestDir.resolve(marker))) return // replay of a fully-committed batch
     val spark = batch.sparkSession
     // stage the WHOLE batch once, partitioned by sink (one job, no per-sink
     // re-filtering of the batch plan)
@@ -391,14 +300,12 @@ final class Manifest(root: String) {
       // partition-escapes (space, '/', ':', '%') would break that round trip
       // and commit a dir no reader resolves. Enforce the identifier contract
       // up front, naming the offender, before anything is promoted.
-      stagedStats.keys.foreach { sink =>
-        require(sink != null && sink.matches("[A-Za-z0-9_][A-Za-z0-9_.-]*"),
-          s"sink name must be a [A-Za-z0-9_.-]+ identifier, got: ${Option(sink).getOrElse("null")}")
-      }
+      stagedStats.keys.foreach(Records.requireName("sink", _))
       // replay recovery: sinks whose audit record already reached the log (a
       // crash can land between a sink's move and its append — only consulted
       // when a replay actually meets an already-promoted target)
-      lazy val alreadyLogged = streamAuditedSinks(batchId)
+      lazy val alreadyLogged =
+        snapshotLog().filter(_.streamBatch.contains(batchId)).map(_.sink).toSet
       var appended = 0
       sinkDirs.foreach { dir =>
         val sink = dir.getFileName.toString.stripPrefix("sink=")
@@ -415,45 +322,17 @@ final class Manifest(root: String) {
         // identical content, so the staged stats equal the promoted dir's
         if (promoted || !alreadyLogged(sink)) {
           val (rows, bytes, convs) = stagedStats(sink)
-          appendSnapshot(sid => streamSnapshotRecord(sid, sink, batchId, rows, bytes, convs))
+          appendSnapshot(SnapshotRecord(_, s"${Records.StreamRunPrefix}$batchId", sink,
+            Records.StreamCommit, rows, bytes, convs))
           appended += 1
         }
       }
       appended
     }
     val appended = try promoteStaged() finally deleteRecursively(staging)
-    val tmpMarker = tmpDir.resolve(s"_stream_batch_$batchId-${java.util.UUID.randomUUID()}.json")
-    Files.writeString(tmpMarker,
-      s"""{"batch_id":$batchId,"sinks":$appended,""" +
-        s""""committed_ts":"${java.time.Instant.now()}"}""")
-    Files.move(tmpMarker, marker,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Records.writeAtomic(manifestDir, marker,
+      StreamMarker(batchId, appended, Records.now()))
   }
-
-  /** Sinks with a committed-stream audit record for `batchId` — the replay
-    * recovery read; tolerant of mid-write records like every log reader. */
-  private def streamAuditedSinks(batchId: Long): Set[String] = {
-    if (!Files.isDirectory(snapshotDir)) return Set.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val runId = s"stream-batch-$batchId"
-    graft.util.Fs.listDir(snapshotDir)
-      .filter(_.getFileName.toString.startsWith("snap-"))
-      .flatMap { p =>
-        try {
-          val n = om.readTree(Files.readString(p))
-          if (n.hasNonNull("run_id") && n.get("run_id").asText == runId &&
-            n.hasNonNull("sink")) Some(n.get("sink").asText)
-          else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }.toSet
-  }
-
-  private def streamSnapshotRecord(snapshotId: Long, sink: String, batchId: Long,
-      rows: Long, bytes: Long, convs: Long): String =
-    s"""{"snapshot_id":$snapshotId,"parent_id":${snapshotId - 1},""" +
-      s""""run_id":"stream-batch-$batchId","sink":"$sink","op":"stream_commit",""" +
-      s""""row_count":$rows,"bytes":$bytes,"convs":$convs,""" +
-      s""""committed_ts":"${java.time.Instant.now()}"}"""
 
   /** Snapshot-isolation (time-travel) read over a STREAMING sink: only the
     * batch directories whose stream-commit audit record has
@@ -480,19 +359,9 @@ final class Manifest(root: String) {
           "the read cannot be served without risking partial data; size keepLast " +
           "above every reader's pin age")
     if (!Files.isDirectory(snapshotDir)) return spark.emptyDataFrame
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val liveIds = graft.util.Fs.listDir(snapshotDir)
-      .filter(_.getFileName.toString.startsWith("snap-"))
-      .flatMap { p =>
-        try {
-          val n = om.readTree(Files.readString(p))
-          if (n.hasNonNull("op") && n.get("op").asText == "stream_commit" &&
-            n.hasNonNull("sink") && n.get("sink").asText == sink &&
-            n.get("snapshot_id").asLong <= snapshotId)
-            Some(n.get("run_id").asText.stripPrefix("stream-batch-").toLong)
-          else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }.distinct
+    val liveIds = snapshotLog()
+      .filter(r => r.sink == sink && r.snapshotId <= snapshotId)
+      .flatMap(_.streamBatch).distinct
     // expired prefix: every batch dir at or below the compacted base — the
     // dirs themselves are the record of what the expired records committed
     val base = ret.bases.get(sink)
@@ -540,8 +409,7 @@ final class Manifest(root: String) {
 
   /** One committed sink's rows WITH the sink column restored — promoted
     * directories carry the sink only in the path (it was a partition column
-    * in staging), while writeAndCommit-written sinks carry it as data; this
-    * normalizes both layouts. */
+    * in staging). */
   def sinkRows(spark: SparkSession, sink: String): DataFrame =
     spark.read.parquet(sinkPath(sink)).withColumn("sink", lit(sink))
 

@@ -2,9 +2,12 @@ package graft.manifest
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
+import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+
+import Records.{SinkEntry, isRunRecord, isSinkEntry, isSnapshot}
 
 /** Minimal live-metrics HTTP surface over the manifest directory — the A4
   * analog of the reference's JSON monitoring API (web/api/api.go:8-14,
@@ -43,23 +46,10 @@ final class MetricsHttp(root: String, port: Int,
   private val snapshotDir = Paths.get(root, "_snapshots")
   private var server: Option[HttpServer] = None
 
-  private def listJson(filter: String => Boolean,
-      dir: java.nio.file.Path = manifestDir): String = {
-    if (!Files.isDirectory(dir)) return "[]"
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    graft.util.Fs.listDir(dir)
-      .filter(p => filter(p.getFileName.toString))
-      .sortBy(_.getFileName.toString)
-      // skip mid-write/truncated files instead of corrupting the whole
-      // array — on no-hard-link filesystems a snapshot's content no longer
-      // appears atomically with its name (Manifest.appendSnapshot fallback)
-      .flatMap { p =>
-        val s = Files.readString(p)
-        try { om.readTree(s); Some(s) }
-        catch { case scala.util.control.NonFatal(_) => None }
-      }
-      .mkString("[", ",", "]")
-  }
+  /** The parseable records of `dir` as one JSON array; a file another
+    * process is mid-writing, or a crash left truncated, is skipped. */
+  private def listJson(keep: String => Boolean, dir: java.nio.file.Path = manifestDir): String =
+    Records.mapper.writeValueAsString(Records.readAll[JsonNode](dir, keep))
 
   /** Single response writer shared by every route. */
   private def respond(ex: HttpExchange, code: Int, payload: String, ct: String): Unit = {
@@ -70,33 +60,36 @@ final class MetricsHttp(root: String, port: Int,
     try os.write(bytes) finally os.close()
   }
 
-  /** A monitoring sidecar degrades, it never drops connections: every route
-    * funnels through this — a body() failure is a 500 with a JSON error,
-    * not an unanswered exchange (client-side connection reset). */
-  private def handler(body: () => String,
-      contentType: String = "application/json"): HttpHandler = new HttpHandler {
-    override def handle(ex: HttpExchange): Unit =
-      try {
-        val (code, payload, ct) =
-          try (200, body(), contentType)
-          catch { case e: Exception =>
-            (500, s"""{"error":${jsonString(e.toString)}}""", "application/json") }
-        respond(ex, code, payload, ct)
-      } finally ex.close()
-  }
+  /** A non-200 answer with a JSON error body. */
+  private final class HttpError(val code: Int, msg: String) extends Exception(msg)
 
-  private def jsonFiles(filter: String => Boolean): Seq[com.fasterxml.jackson.databind.JsonNode] = {
-    if (!Files.isDirectory(manifestDir)) return Seq.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    graft.util.Fs.listDir(manifestDir)
-      .filter(p => filter(p.getFileName.toString))
-      .sortBy(_.getFileName.toString)
-      // a live scraper must not crash on a file another process is mid-write
-      // or left truncated by a crash — skip what doesn't parse, serve the rest
-      .flatMap(p =>
-        try Some(om.readTree(Files.readString(p)))
-        catch { case scala.util.control.NonFatal(_) => None })
-  }
+  private def errorJson(msg: String): String = Records.mapper.writeValueAsString(Map("error" -> msg))
+
+  /** The one handler behind every route. A monitoring sidecar degrades, it
+    * never drops connections: an [[HttpError]] is answered with its code, any
+    * other body() failure is a 500 with a JSON error, never an unanswered
+    * exchange (client-side connection reset). */
+  private def handler(body: HttpExchange => String,
+      contentType: String = "application/json"): HttpHandler = ex =>
+    try {
+      val (code, payload, ct) =
+        try (200, body(ex), contentType)
+        catch {
+          case e: HttpError => (e.code, errorJson(e.getMessage), "application/json")
+          case e: Exception => (500, errorJson(e.toString), "application/json")
+        }
+      respond(ex, code, payload, ct)
+    } finally ex.close()
+
+  /** The request's query parameters; malformed percent-encoding is a 400. */
+  private def params(ex: HttpExchange): Map[String, String] =
+    try Option(ex.getRequestURI.getQuery).getOrElse("")
+      .split("&").filter(_.contains("=")).map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        k -> java.net.URLDecoder.decode(v, "UTF-8")
+      }.toMap
+    catch { case e: IllegalArgumentException =>
+      throw new HttpError(400, s"bad query string: ${e.getMessage}") }
 
   /** Prometheus text exposition (version 0.0.4) over the same manifest cells
     * — the reference serves /metrics via promhttp (web/server.go:32; counters
@@ -118,17 +111,17 @@ final class MetricsHttp(root: String, port: Int,
     def counter(name: String, help: String,
         rows: Seq[(String, Long)], label: String = "sink"): Unit =
       metric(name, help, "counter", rows, label)
-    val entries = jsonFiles(n => n.endsWith(".json") && !n.startsWith("_"))
+    val entries = Records.readAll[SinkEntry](manifestDir, isSinkEntry)
     counter("graft_sink_rows_total", "Rows committed per sink",
-      entries.map(e => e.get("sink").asText -> e.get("row_count").asLong))
+      entries.map(e => e.sink -> e.rowCount))
     counter("graft_sink_bytes_total", "Text bytes committed per sink",
-      entries.map(e => e.get("sink").asText -> e.get("bytes").asLong))
+      entries.map(e => e.sink -> e.bytes))
     // gauge, not counter: a re-committed sink re-counts its distinct convs,
     // so the value can legitimately decrease
     metric("graft_sink_convs", "Distinct conversations committed per sink",
-      "gauge", entries.map(e => e.get("sink").asText -> e.get("convs").asLong), "sink")
+      "gauge", entries.map(e => e.sink -> e.convs), "sink")
 
-    val runs = jsonFiles(n => n.startsWith("_metrics_") && n.endsWith(".json"))
+    val runs = Records.readAll[JsonNode](manifestDir, isRunRecord)
     sb ++= s"# HELP graft_runs_total Completed pipeline runs\n" +
       s"# TYPE graft_runs_total counter\ngraft_runs_total ${runs.size}\n"
     // per-sink limiter counters summed across runs
@@ -164,67 +157,32 @@ final class MetricsHttp(root: String, port: Int,
     sb.result()
   }
 
-  /** Query-param-aware handler (the plain one ignores the request URI). */
-  /** Query-param-aware [[handler]]: a malformed query string (bad
-    * percent-encoding → URLDecoder throws) is a 400, body() failures a 500. */
-  private def paramHandler(body: Map[String, String] => String,
-      contentType: String = "application/json"): HttpHandler = new HttpHandler {
-    override def handle(ex: HttpExchange): Unit =
-      try {
-        val status =
-          try Right(
-            Option(ex.getRequestURI.getQuery).getOrElse("")
-              .split("&").filter(_.contains("=")).map { kv =>
-                val Array(k, v) = kv.split("=", 2)
-                k -> java.net.URLDecoder.decode(v, "UTF-8")
-              }.toMap)
-          catch { case e: IllegalArgumentException => Left(400 -> e.getMessage) }
-        val (code, payload, ct) = status match {
-          case Right(params) =>
-            try (200, body(params), contentType)
-            catch { case e: Exception =>
-              (500, s"""{"error":${jsonString(e.toString)}}""", "application/json") }
-          case Left((code, msg)) =>
-            (code, s"""{"error":${jsonString(s"bad query string: $msg")}}""",
-              "application/json")
-        }
-        respond(ex, code, payload, ct)
-      } finally ex.close()
-  }
-
-  private def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Live executor roster + per-executor task/storage stats — the cluster
     * view. In Spark the "nodes" the reference proxies with `?node=` are the
     * executors, and the driver's status tracker already aggregates their
     * heartbeats, so this is a read, not a fan-out of HTTP calls. */
-  private def clusterBody(params: Map[String, String]): String = spark match {
-    case None =>
-      """{"mode":"sidecar","error":"no live SparkSession attached","executors":[]}"""
-    case Some(s) =>
-      val st = s.sparkContext.statusTracker
-      val node = params.get("node")
-      val execs = st.getExecutorInfos.toSeq
-        .map(e => (s"${e.host}:${e.port}", e))
-        .filter { case (id, _) => node.forall(_ == id) }
-        .map { case (id, e) =>
-          s"""{"node":"$id","running_tasks":${e.numRunningTasks()},""" +
-            s""""cache_size":${e.cacheSize()},""" +
-            s""""used_onheap_storage":${e.usedOnHeapStorageMemory()},""" +
-            s""""used_offheap_storage":${e.usedOffHeapStorageMemory()},""" +
-            s""""total_onheap_storage":${e.totalOnHeapStorageMemory()},""" +
-            s""""total_offheap_storage":${e.totalOffHeapStorageMemory()}}"""
-        }
-      s"""{"mode":"live","executors":[${execs.mkString(",")}],""" +
-        s""""default_parallelism":${s.sparkContext.defaultParallelism},""" +
-        s""""active_jobs":${st.getActiveJobIds().mkString("[", ",", "]")},""" +
-        s""""active_stages":${st.getActiveStageIds().mkString("[", ",", "]")}}"""
+  private def clusterBody(ex: HttpExchange): String = {
+    val node = params(ex).get("node")
+    Records.mapper.writeValueAsString(spark match {
+      case None =>
+        Map("mode" -> "sidecar", "error" -> "no live SparkSession attached",
+          "executors" -> Seq.empty)
+      case Some(s) =>
+        val st = s.sparkContext.statusTracker
+        Map("mode" -> "live",
+          "executors" -> st.getExecutorInfos.toSeq
+            .filter(e => node.forall(_ == s"${e.host}:${e.port}"))
+            .map(e => Map("node" -> s"${e.host}:${e.port}",
+              "running_tasks" -> e.numRunningTasks(),
+              "cache_size" -> e.cacheSize(),
+              "used_onheap_storage" -> e.usedOnHeapStorageMemory(),
+              "used_offheap_storage" -> e.usedOffHeapStorageMemory(),
+              "total_onheap_storage" -> e.totalOnHeapStorageMemory(),
+              "total_offheap_storage" -> e.totalOffHeapStorageMemory())),
+          "default_parallelism" -> s.sparkContext.defaultParallelism,
+          "active_jobs" -> st.getActiveJobIds().toSeq,
+          "active_stages" -> st.getActiveStageIds().toSeq)
+    })
   }
 
   private def htmlEsc(s: String): String =
@@ -235,13 +193,13 @@ final class MetricsHttp(root: String, port: Int,
     * cells and live roster the JSON routes serve, no scripts, rendered
     * per request so it is always current. Anything but "/" under the root
     * context is a 404 (the JDK server routes unmatched paths here). */
-  private def indexBody(): String = {
-    val entries = jsonFiles(n => n.endsWith(".json") && !n.startsWith("_"))
-    val runs = jsonFiles(n => n.startsWith("_metrics_") && n.endsWith(".json"))
+  private def indexBody(ex: HttpExchange): String = {
+    if (ex.getRequestURI.getPath != "/") throw new HttpError(404, "not found")
+    val entries = Records.readAll[SinkEntry](manifestDir, isSinkEntry)
+    val runs = Records.readAll[JsonNode](manifestDir, isRunRecord)
     val sinkRows = entries.map { e =>
-      s"<tr><td>${htmlEsc(e.get("sink").asText)}</td>" +
-        s"<td>${e.get("row_count").asLong}</td><td>${e.get("bytes").asLong}</td>" +
-        s"<td>${e.get("convs").asLong}</td></tr>"
+      s"<tr><td>${htmlEsc(e.sink)}</td>" +
+        s"<td>${e.rowCount}</td><td>${e.bytes}</td><td>${e.convs}</td></tr>"
     }.mkString
     val execRows = spark.toSeq.flatMap { s =>
       s.sparkContext.statusTracker.getExecutorInfos.toSeq.map { e =>
@@ -271,36 +229,18 @@ final class MetricsHttp(root: String, port: Int,
   /** Starts the server; returns the bound port (use port=0 for ephemeral). */
   def start(): Int = {
     val s = HttpServer.create(new InetSocketAddress(port), 0)
-    s.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        try {
-          val (code, payload, ct) =
-            if (ex.getRequestURI.getPath == "/")
-              try (200, indexBody(), "text/html; charset=utf-8")
-              catch { case e: Exception =>
-                (500, s"""{"error":${jsonString(e.toString)}}""", "application/json") }
-            else (404, """{"error":"not found"}""", "application/json")
-          respond(ex, code, payload, ct)
-        } finally ex.close()
-    })
-    s.createContext("/sinks",
-      handler(() => listJson(n => n.endsWith(".json") && !n.startsWith("_"))))
-    s.createContext("/runs",
-      handler(() => listJson(n => n.startsWith("_metrics_") && n.endsWith(".json"))))
-    s.createContext("/healthz", handler(() => "\"ok\""))
-    s.createContext("/snapshots",
-      handler(() => listJson(n => n.startsWith("snap-") && n.endsWith(".json"),
-        dir = snapshotDir)))
+    s.createContext("/", handler(indexBody, contentType = "text/html; charset=utf-8"))
+    s.createContext("/sinks", handler(_ => listJson(isSinkEntry)))
+    s.createContext("/runs", handler(_ => listJson(isRunRecord)))
+    s.createContext("/healthz", handler(_ => "\"ok\""))
+    s.createContext("/snapshots", handler(_ => listJson(isSnapshot, dir = snapshotDir)))
     // the expire-snapshots state: the horizon below which pinned reads fail
     // fast, and the per-sink compacted bases (Manifest.expireSnapshots)
-    s.createContext("/retention", handler { () =>
-      val p = snapshotDir.resolve("_retention.json")
-      if (Files.exists(p)) Files.readString(p)
-      else """{"horizon":0,"bases":{}}"""
-    })
+    s.createContext("/retention",
+      handler(_ => Records.mapper.writeValueAsString(new Manifest(root).retention())))
     s.createContext("/metrics",
-      handler(() => prometheusBody(), contentType = "text/plain; version=0.0.4"))
-    s.createContext("/cluster", paramHandler(clusterBody))
+      handler(_ => prometheusBody(), contentType = "text/plain; version=0.0.4"))
+    s.createContext("/cluster", handler(clusterBody))
     s.setExecutor(null) // single-threaded: a monitoring sidecar, not a data path
     s.start()
     server = Some(s)

@@ -8,7 +8,9 @@ import graft.parse.GrokParser
 import graft.enrich.Enrichment
 import graft.route.{RouteRule, Router}
 import graft.limit.{LimitRule, RateLimit, SinglePassLimit}
-import graft.manifest.Manifest
+import graft.manifest.{Manifest, Records}
+import graft.manifest.Records.{ParseCounts, RouteCounts, RunRecord, ScanCounts, SinkCounters,
+  Stages}
 
 /** End-to-end job: scan → parse → enrich → route → fan-out → rate-limit →
   * per-sink writes + manifest commit + metrics.
@@ -146,6 +148,9 @@ object Pipeline {
     * see the full (sink, bucket) volumes, including buckets whose sink is
     * already committed, or fallback accounting would change across a resume.
     * Only uncommitted sinks are promoted.
+    *
+    * `runId` and every configured sink name must pass
+    * [[Records.requireName]]; they are checked before any Spark job runs.
     */
   def run(
       spark: SparkSession,
@@ -155,6 +160,9 @@ object Pipeline {
       cfg: Config = Config(),
       failAfterSinks: Int = Int.MaxValue // test hook: simulate a mid-job kill
   ): DataFrame = {
+    Records.requireName("run id", runId)
+    (cfg.routeRules.map(_.sink) ++ cfg.limitRules.flatMap(r => r.sink +: r.fallbackSink.toSeq))
+      .foreach(Records.requireName("sink", _))
     val (fanned, counters) = observedFanOut(Transcripts.fromEvents(spark, sfDir), spark, cfg)
 
     val manifest = new Manifest(outRoot)
@@ -196,52 +204,22 @@ object Pipeline {
     // cells, i.e. they were observed DURING the run with zero extra passes —
     // the reference's live per-connection Stats (monitoring/stats.go:10-118,
     // served at web/api/targets.go:43-121) as a run artifact.
-    val perSinkJson = {
-      final case class C(var inRows: Long = 0, var inBytes: Long = 0,
-          var outRows: Long = 0, var outBytes: Long = 0,
-          var droppedRows: Long = 0, var droppedBytes: Long = 0)
-      val bySink = scala.collection.mutable.SortedMap[String, C]()
-      cells.foreach { c =>
-        val in = bySink.getOrElseUpdate(c.origSink, C())
-        in.inRows += c.rows; in.inBytes += c.bytes
-        if (c.curSink == null) {
-          val d = bySink.getOrElseUpdate(c.lastSink, C())
-          d.droppedRows += c.rows; d.droppedBytes += c.bytes
-        } else {
-          val out = bySink.getOrElseUpdate(c.curSink, C())
-          out.outRows += c.rows; out.outBytes += c.bytes
-        }
-      }
-      bySink.map { case (s, c) =>
-        s""""$s":{"in_rows":${c.inRows},"in_bytes":${c.inBytes},""" +
-          s""""out_rows":${c.outRows},"out_bytes":${c.outBytes},""" +
-          s""""dropped_rows":${c.droppedRows},"dropped_bytes":${c.droppedBytes}}"""
-      }.mkString("{", ",", "}")
-    }
+    val perSink = cells.flatMap { c =>
+      Seq(c.origSink -> SinkCounters(inRows = c.rows, inBytes = c.bytes),
+        if (c.curSink == null) c.lastSink -> SinkCounters(droppedRows = c.rows, droppedBytes = c.bytes)
+        else c.curSink -> SinkCounters(outRows = c.rows, outBytes = c.bytes))
+    }.groupMapReduce(_._1)(_._2)(_ + _)
     // per-stage counters (sources/workers parity), observed on the staging
     // write; see the conservation invariants at [[observedFanOut]]
-    def m(o: Observation, field: String): Any = o.get(field)
+    def n(o: Observation, field: String): Long = o.get(field).asInstanceOf[Long]
     val routedRows = cells.map(_.rows).sum
-    val stagesJson =
-      s"""{"scan":{"rows":${m(counters.scan, "rows")}},""" +
-        s""""parse":{"rows_ok":${m(counters.parse, "rows_ok")},""" +
-        s""""rows_quarantined":${m(counters.parse, "rows_quarantined")}},""" +
-        s""""route":{"rows_in":${m(counters.route, "rows_in")},""" +
-        s""""rows_dead_letter":${m(counters.route, "rows_dead_letter")},""" +
-        s""""fanout_rows":$routedRows}}"""
-    val metricsJson = s"""{"run_id":"$runId","routed_rows":$routedRows,""" +
-      s""""routed_bytes":${cells.map(_.bytes).sum},""" +
-      s""""sinks":${cells.map(_.origSink).distinct.length},""" +
-      s""""stages":$stagesJson,"per_sink":$perSinkJson}"""
-    // tmp + atomic move: the metrics HTTP sidecar may scrape this file at
-    // any moment, and a crash mid-write must not leave a truncated record
-    val metricsTmp = java.nio.file.Paths.get(outRoot, "_tmp", s"_metrics_$runId.json")
-    java.nio.file.Files.createDirectories(metricsTmp.getParent)
-    java.nio.file.Files.writeString(metricsTmp, metricsJson)
-    java.nio.file.Files.move(metricsTmp,
-      java.nio.file.Paths.get(outRoot, "_manifest", s"_metrics_$runId.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val stages = Stages(ScanCounts(n(counters.scan, "rows")),
+      ParseCounts(n(counters.parse, "rows_ok"), n(counters.parse, "rows_quarantined")),
+      RouteCounts(n(counters.route, "rows_in"), n(counters.route, "rows_dead_letter"), routedRows))
+    // atomic: the metrics HTTP sidecar may scrape this file at any moment
+    Records.writeAtomic(java.nio.file.Paths.get(outRoot, "_manifest"), s"_metrics_$runId.json",
+      RunRecord(runId, routedRows, cells.map(_.bytes).sum, cells.map(_.origSink).distinct.length,
+        stages, perSink))
 
     // drop the staging residue once every staged sink is committed
     if (stats.keySet.subsetOf(new Manifest(outRoot).committedSinks()))

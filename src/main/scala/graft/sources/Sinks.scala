@@ -7,9 +7,9 @@ import org.apache.spark.sql.DataFrame
   *  - K1 blackhole (target/blackhole/server.go): the `noop` format — full
   *    execution, discarded output; used by Bench for timing.
   *  - K2 stdout (target/stdout/server.go): console show.
-  *  - K3 logz.io-style table (target/logzio/server.go): per-sink parquet via
-  *    [[graft.manifest.Manifest.writeAndCommit]] (date-partitioned,
-  *    file-count-controlled, manifest-committed) — the primary sink.
+  *  - K3 logz.io-style table (target/logzio/server.go): the per-sink parquet
+  *    that [[graft.pipeline.Pipeline.run]] stages, promotes and commits
+  *    through [[graft.manifest.Manifest.promoteAndCommit]].
   */
 object Sinks {
 
@@ -20,8 +20,4 @@ object Sinks {
   /** K2: print to stdout (driver) — debugging only, never at scale. */
   def stdout(df: DataFrame, limit: Int = 20): Unit =
     df.show(limit, truncate = false)
-
-  /** K3: committed per-sink table (delegates to the manifest writer). */
-  def table(df: DataFrame, outRoot: String, sink: String, runId: String): Unit =
-    new graft.manifest.Manifest(outRoot).writeAndCommit(sink, df, runId)
 }

@@ -31,9 +31,11 @@ object Curate {
           countDistinct(col("pack_id"), col("shard")).as("packs"),
           sum(col("n_tokens")).as("tokens"))
         .collect()
-        .map(r => s""""${r.getString(0)}":{"docs":${r.getLong(1)},"packs":${r.getLong(2)},"tokens":${r.getLong(3)}}""")
-        .sorted
-      println(s"""{"curate":{${stats.mkString(",")}},"out":"${args(1)}"}""")
+        .map(r => r.getString(0) ->
+          Map("docs" -> r.getLong(1), "packs" -> r.getLong(2), "tokens" -> r.getLong(3)))
+        .toMap
+      println(graft.manifest.Records.mapper.writeValueAsString(
+        Map("curate" -> stats, "out" -> args(1))))
     } finally spark.stop()
   }
 }

@@ -63,6 +63,19 @@ class ConfigSpec extends SparkSpec {
         |    throughput: 1KB
         |    action: fallback
         |""".stripMargin))
+    // limit and fallback sinks follow the same name rule as route sinks
+    Seq(("a/b", "c"), ("a", "c:d")).foreach { case (sink, fallback) =>
+      intercept[IllegalArgumentException](PipelineConfig.fromYaml(
+        s"""routes:
+           |  - sink: a
+           |    predicate: "role = 'x'"
+           |limits:
+           |  - sink: "$sink"
+           |    throughput: 1KB
+           |    action: fallback
+           |    fallback: "$fallback"
+           |""".stripMargin))
+    }
   }
 
   test("YAML-configured routing matches the programmatic default rules") {

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import graft.pipeline.Pipeline
-import graft.manifest.Manifest
+import graft.manifest.{Manifest, Records}
+import graft.manifest.Records.SnapshotRecord
 
 /** Idempotent-resume semantics: a killed run, rerun, must produce sink
   * contents identical to a clean run with zero duplicates — the inversion of
@@ -254,7 +255,7 @@ class ManifestSpec extends SparkSpec {
       assert(om.readTree(get("/cluster?node=nope:0")).get("executors").size() === 0)
       // a malformed query must get an ANSWER (4xx), never a dropped exchange
       // (connection reset). The JDK server pre-validates the request URI and
-      // answers its own 400 for an invalid percent escape; paramHandler's
+      // answers its own 400 for an invalid percent escape; the handler's
       // try/catch is the second line of defense for anything that gets
       // through (and turns body() failures into 500s). Raw socket: the JDK
       // http client would refuse to send the malformed URI at all.
@@ -400,13 +401,14 @@ class ManifestSpec extends SparkSpec {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-ret2").toString
     val m = new Manifest(out)
-    val rows = Seq(("conv-1", 1, "user", "t", "t", new java.sql.Timestamp(1000L), "alpha"))
-      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
-    m.writeAndCommit("alpha", rows, runId = "r1") // snapshot id 1 — alpha's only commit
+    val staged = java.nio.file.Paths.get(out, "_staging", "sink=alpha")
+    Seq(("conv-1", 1, "user", "t", "t", new java.sql.Timestamp(1000L)))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .write.parquet(staged.toString)
+    m.promoteAndCommit("alpha", staged, "r1", 1L, 1L, 1L) // snapshot id 1 — alpha's only commit
     (0 until 5).foreach(i => m.appendSnapshot(sid =>
-      s"""{"snapshot_id":$sid,"parent_id":${sid - 1},"run_id":"x$i","sink":"beta",""" +
-        s""""op":"commit","row_count":0,"bytes":0,"convs":0,""" +
-        s""""committed_ts":"2026-01-01T00:00:00Z"}"""))
+      SnapshotRecord(sid, sid - 1, s"x$i", "beta", "commit", 0L, 0L, 0L,
+        "2026-01-01T00:00:00Z")))
     assert(m.currentSnapshotId() === 6L)
     // horizon 5: ids 1..4 qualify, but id 1 is alpha's latest → kept
     val expired = m.expireSnapshots(keepLast = 2)
@@ -428,9 +430,8 @@ class ManifestSpec extends SparkSpec {
       val claimed = (0 until 8).map { i =>
         pool.submit(new java.util.concurrent.Callable[Long] {
           override def call(): Long = m.appendSnapshot(sid =>
-            s"""{"snapshot_id":$sid,"parent_id":${sid - 1},"run_id":"t$i",""" +
-              s""""sink":"s$i","op":"commit","row_count":$i,"bytes":0,"convs":0,""" +
-              s""""committed_ts":"2026-01-01T00:00:00Z"}""")
+            SnapshotRecord(sid, sid - 1, s"t$i", s"s$i", "commit", i.toLong, 0L, 0L,
+              "2026-01-01T00:00:00Z"))
         })
       }.map(_.get())
       assert(claimed.toSet === (1L to 8L).toSet, s"ids not contiguous: $claimed")
@@ -463,5 +464,62 @@ class ManifestSpec extends SparkSpec {
       .map(s => spark.read.parquet(m.sinkPath(s)).count()).sum
     assert(remaining.count() === routedAll.count() - committedCount)
     assert(remaining.filter(col("sink").isin(m.committedSinks().toSeq: _*)).count() === 0)
+  }
+
+  test("a run id or sink that is not a name fails before any work, leaving nothing behind") {
+    val parent = Files.createTempDirectory("graft-names")
+    Seq("a\"b", "a/b").foreach { runId =>
+      val out = parent.resolve("out").toString
+      intercept[IllegalArgumentException] { Pipeline.run(spark, sfDir, out, runId = runId) }
+      assert(!Files.exists(parent.resolve("out")), s"run id $runId left files behind")
+    }
+    val badFallback = Pipeline.Config(limitRules = Seq(
+      graft.limit.LimitRule("sink_search", 1L, 1, "fallback", Some("a:b"))))
+    intercept[IllegalArgumentException] {
+      Pipeline.run(spark, sfDir, parent.resolve("out").toString, runId = "ok", cfg = badFallback)
+    }
+    assert(!Files.exists(parent.resolve("out")))
+  }
+
+  test("truncated records are skipped by every reader: HTTP routes, sweep, time travel") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-trunc").toString
+    val m = new Manifest(out)
+    def batch(ids: Seq[Int]) = ids
+      .map(i => (s"conv-0000$i", i, "user", s"text $i", "t", new java.sql.Timestamp(i * 1000L), "s1"))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
+    m.commitStreamBatch(batch(Seq(1)), 0L) // snapshot 1
+    m.commitStreamBatch(batch(Seq(2)), 1L) // snapshot 2
+    val manifestDir = java.nio.file.Paths.get(out, "_manifest")
+    val snapDir = java.nio.file.Paths.get(out, "_snapshots")
+    Records.writeAtomic(manifestDir, "_metrics_good.json", Records.RunRecord("good", 3L, 30L, 1,
+      Records.Stages(Records.ScanCounts(3L), Records.ParseCounts(3L, 0L),
+        Records.RouteCounts(3L, 0L, 3L)),
+      Map("s1" -> Records.SinkCounters(inRows = 3L, outRows = 3L))))
+    Files.writeString(manifestDir.resolve("_metrics_x.json"), """{"run_id":"x","routed_ro""")
+    Files.writeString(snapDir.resolve("snap-00000000.json"),
+      """{"snapshot_id":0,"parent_id":-1,"run_id":"stream-batch-9","sink":"s1","op":"stream_co""")
+
+    val srv = new graft.manifest.MetricsHttp(out, 0)
+    val port = srv.start()
+    try {
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val runs = om.readTree(get2(port, "/runs"))
+      assert(runs.size() === 1 && runs.get(0).get("run_id").asText() === "good")
+      val snaps = om.readTree(get2(port, "/snapshots"))
+      assert(snaps.size() === 2, snaps.toString)
+      val prom = get2(port, "/metrics")
+      assert(prom.contains("graft_runs_total 1\n"), prom)
+      assert(prom.contains("graft_sink_in_rows_total{sink=\"s1\"} 3\n"), prom)
+    } finally srv.stop()
+
+    // the pin sees both committed batches; the truncated record names batch 9
+    def ids(df: DataFrame): Set[Int] =
+      if (df.columns.isEmpty) Set.empty
+      else df.select("turn_idx").collect().map(_.getInt(0)).toSet
+    assert(ids(m.streamSinkAsOf(spark, "s1", 2L)) === Set(1, 2))
+    assert(m.expireSnapshots(keepLast = 1) === Seq(1L))
+    assert(m.retention() === Manifest.Retention(2L, Map("s1" -> Manifest.Retention.Base(0L, 1L))))
+    assert(ids(m.streamSinkAsOf(spark, "s1", 2L)) === Set(1, 2))
   }
 }

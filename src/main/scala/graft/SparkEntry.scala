@@ -8,7 +8,7 @@ import graft.parse.GrokParser
 import graft.enrich.Enrichment
 import graft.route.Router
 import graft.agg.SinkMetrics
-import graft.limit.RateLimit
+import graft.limit.{RateLimit, SinglePassLimit}
 import graft.dedup.{ExactDedup, MinHashLSH, NgramJaccard, SimHashDedup}
 import graft.similarity.Ann
 import graft.text.TextAnalysis
@@ -31,7 +31,7 @@ object SparkEntry {
   private def parsedTurns(s: SparkSession, dir: String): DataFrame =
     GrokParser.parse(turns(s, dir))
   private def routed(s: SparkSession, dir: String): DataFrame =
-    Router.fanOut(graft.pipeline.Pipeline.parsedSalted(turns(s, dir)))
+    Router.fanOut(graft.pipeline.Pipeline.parsedProjected(turns(s, dir)))
 
   // ---- shared derivations for the temporal-join queries ----
   /** 6 h — config-snapshot cadence for the as-of/range families. */
@@ -238,12 +238,12 @@ object SparkEntry {
       RateLimit.bucketBytes(routed(s, dir))
         .select(col("sink"), unix_timestamp(col("bucket")).as("bucket_epoch"),
           col("bucket_bytes"))),
-    // L4+R3/R4: full limiter chain (fallback then discard) — surviving per-sink totals
-    "q_limit_final" -> ((s, dir) => {
-      val (survived, _) = RateLimit.apply(routed(s, dir), RateLimit.defaultRules(150L, 120L))
-      survived.groupBy(col("sink"))
-        .agg(count(lit(1)).as("turns"), sum(octet_length(col("text"))).as("bytes"))
-    }),
+    // L4+R3/R4: full limiter chain (fallback then discard) — surviving per-sink
+    // totals, through the single-pass limiter Pipeline.run ships
+    "q_limit_final" -> ((s, dir) =>
+      SinglePassLimit.limitReusingShuffle(routed(s, dir), RateLimit.defaultRules(150L, 120L))
+        .groupBy(col("sink"))
+        .agg(count(lit(1)).as("turns"), sum(octet_length(col("text"))).as("bytes"))),
     // R4: discarded rows (full keys, for row-set equality)
     "q_limit_dropped" -> ((s, dir) => {
       val (_, dropped) = RateLimit.apply(routed(s, dir), RateLimit.defaultRules(150L, 120L))

@@ -129,24 +129,18 @@ object RateLimit {
     * by earlier rules), sliding mean over the trailing avgOverBuckets
     * non-empty buckets, breach => fallback rewrite or discard.
     *
+    * `maxVerdictCells` guards the driver-side verdict collect: the
+    * aggregate is bounded by #sinks × #buckets, which is control-plane sized
+    * ONLY if the bucket granularity is coarse (hours). A misconfigured
+    * granularity (e.g. per-second buckets over a year) would otherwise
+    * silently collect millions of rows.
+    *
     * Returns (surviving routed rows with final `sink`, dropped rows).
     */
-  /** @param statsSource optional cheaper plan producing the SAME routed rows,
-    *        used only for the verdict aggregate — e.g. the unsalted routing
-    *        plan, whose aggregate shuffles only map-side-combined
-    *        (sink, bucket) partials instead of paying the salt exchange's
-    *        full-table round trip. */
-  /** @param maxVerdictCells guard on the driver-side verdict collect: the
-    *        aggregate is bounded by #sinks × #buckets, which is control-plane
-    *        sized ONLY if the bucket granularity is coarse (hours). A
-    *        misconfigured granularity (e.g. per-second buckets over a year)
-    *        would otherwise silently collect millions of rows. */
   def apply(routed: DataFrame, rules: Seq[LimitRule],
-      statsSource: Option[DataFrame] = None,
       maxVerdictCells: Int = 4 << 20): (DataFrame, DataFrame) = {
     if (rules.isEmpty) return (routed, routed.limit(0))
     val spark = routed.sparkSession
-    val statsDf = statsSource.getOrElse(routed)
 
     // Deliberately NOT persisting the routed set between the verdict pass and
     // the decision join: measured on this box, a DISK_ONLY staging cache
@@ -159,7 +153,7 @@ object RateLimit {
     // pass 1 (eager): (orig_sink, bucket, bytes)
     // limit(max+1) keeps the guard free: the check runs on the collected
     // length, not via an extra count() pass over the aggregate
-    val collected = statsDf
+    val collected = routed
       .groupBy(col("sink").as("orig_sink"), bucketCol(col("ts")).as("bucket"))
       // a cell whose every text is null sums to null: count it as 0 bytes
       .agg(coalesce(sum(octet_length(col("text"))), lit(0L)).as("bytes"))

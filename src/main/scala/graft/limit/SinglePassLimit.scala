@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * write.
   *
   * [[RateLimit.apply]] (the declarative formulation, kept as the semantic
-  * spec and DuckDB-oracle path) touches the fact table twice: one aggregate
-  * pass for verdicts, one write pass with the broadcast decision join.
+  * spec and as the path of the dropped set) touches the fact table twice:
+  * one aggregate pass for verdicts, one write pass with the broadcast
+  * decision join.
   * Because verdicts have whole-(sink, bucket) granularity, the second pass is
   * avoidable — every row in a bucket shares one fate, so the fate can be
   * applied to the bucket's rows as they leave the one exchange instead of

@@ -25,13 +25,13 @@ import graft.manifest.Records.{ParseCounts, RouteCounts, RunRecord, ScanCounts, 
   * Scale design:
   *  - single scan of the fact table feeds every sink (array+explode router,
   *    not per-sink scans);
-  *  - the only shuffles are the per-sink/per-conv aggregates and the
-  *    rate-limit verdict aggregation (all map-side-combined, output rows ≪
-  *    input rows); verdict joins back are broadcasts;
-  *  - the routed stream is salted-repartitioned before the per-sink writes so
-  *    one hot conversation cannot pin a single output task (reference analog:
-  *    one slow target blocking its channel, broker/connector.go:315-318 —
-  *    unhandled there, handled here per north_rule);
+  *  - the job's one shuffle is the limiter's (sink, bucket, salt) exchange:
+  *    its map side sums each (sink, bucket) cell, and the verdicts are
+  *    applied to the rows as they leave it — no verdict join;
+  *  - the salt in that exchange's key spreads a hot conversation over many
+  *    write tasks, so one conversation cannot pin a single output task
+  *    (reference analog: one slow target blocking its channel,
+  *    broker/connector.go:315-318 — unhandled there; SkewSpec checks it);
   *  - AQE enabled in session conf handles residual skew at runtime.
   */
 object Pipeline {
@@ -42,52 +42,17 @@ object Pipeline {
       saltBuckets: Int = 32
   )
 
-  /** Parse, then salted-repartition on (conv_id, hash(turn_idx) % salt).
-    *
-    * The repartition serves three purposes at once:
-    *  1. skew: a hot conversation spreads over `saltBuckets` tasks
-    *     (north_rule "salted repartitioning"), AQE handles the rest;
-    *  2. expression barrier: downstream operators reference the parsed
-    *     fields as exchange-output ATTRIBUTES — without it, Catalyst's alias
-    *     inlining re-evaluates the grok regex at every reference (measured
-    *     44 copies in the optimized plan, and the route stage ran slower on
-    *     more cores);
-    *  3. reuse: the rate-limit verdict aggregates and the main routed stream
-    *     consume the SAME exchange (ReusedExchange), so the scan+parse runs
-    *     exactly once per job.
-    */
-  def parsedSalted(turns: DataFrame, saltBuckets: Int = 32): DataFrame =
-    GrokParser.parse(turns)
-      // project BEFORE the exchange: the pipeline needs only `level` from the
-      // parse (routing predicate + quarantine flag); carrying dur_ms/status/
-      // payload (payload ≈ a copy of text) would nearly double the shuffled
-      // bytes of the job's one big exchange
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts"), col("level"))
-      .repartition(col("conv_id"), pmod(hash(col("turn_idx")), lit(saltBuckets)))
-
-  /** parse → project, WITHOUT the barrier exchange — for plans whose one
-    * shuffle is the single-pass limiter's (sink, bucket, salt) exchange.
-    * Safe only because route references to `level` collapse into ONE Project,
-    * where whole-stage codegen's subexpression elimination evaluates the grok
-    * regex once per row (PlanShapeSpec asserts this on the single-pass plan). */
+  /** parse → project, with no exchange: the parse under [[run]] and under
+    * every routed SparkEntry query. The pipeline needs only `level` from the
+    * parse (routing predicate + quarantine flag), so the other parsed fields
+    * are dropped here. Grok runs once per row only because the route
+    * references to `level` collapse into ONE Project, where whole-stage
+    * codegen's subexpression elimination evaluates the regex once
+    * (PlanShapeSpec asserts this on the shipped plan and the routed leaves). */
   def parsedProjected(turns: DataFrame): DataFrame =
     GrokParser.parse(turns)
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts"), col("level"))
-
-  /** parse → salt-repartition → enrich → route → limit;
-    * returns (routedFinal, dropped). */
-  def route(turns: DataFrame, spark: SparkSession, cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val parsed = parsedSalted(turns, cfg.saltBuckets)
-    val enriched = Enrichment.enrich(parsed, spark)
-    val fanned = Router.fanOut(enriched, cfg.routeRules)
-    // Verdict statistics reuse the SAME salted plan as the write path.
-    // (Measured alternative: an unsalted stats plan avoids the exchange
-    // round trip but loses the exchange's expression barrier, so the grok
-    // work re-inflates — 3x slower end to end. The exchange pays for itself.)
-    RateLimit.apply(fanned, cfg.limitRules)
-  }
 
   /** The per-stage counters of one [[observedFanOut]] plan. Each is a
     * standard `Observation`, complete once an action over that plan ran. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Schema and statistics drift between two snapshots of a table — the third
-  * quality primitive: [[graft.tools.Profile]]-style stats describe ONE drop,
+  * quality primitive: per-column [[profile]] stats describe ONE drop,
   * [[Expectations]] gate it against declared invariants, and Drift catches
   * what nobody declared: the upstream producer that silently dropped a
   * column, started emitting NULL languages, or re-keyed ids so the distinct

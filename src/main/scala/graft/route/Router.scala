@@ -61,9 +61,10 @@ object Router {
     * explode_outer, not explode: `targets` is never empty (the dead-letter
     * default guarantees size >= 1) so both are semantically identical, but
     * plain explode makes the optimizer infer a `size(targets) > 0` filter
-    * that gets pushed below the salt exchange with the whole targets
-    * expression (grok included) inlined into it — a per-row re-evaluation
-    * the outer variant avoids. */
+    * that gets pushed down with the whole targets expression (grok
+    * included) inlined into it — a Filter outside the one Project where
+    * subexpression elimination evaluates grok once, so a second per-row
+    * regex run the outer variant avoids. */
   def fanOut(parsed: DataFrame, rules: Seq[RouteRule] = defaultRules): DataFrame =
     explodeTargets(withTargets(parsed, rules))
 

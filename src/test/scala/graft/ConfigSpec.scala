@@ -4,6 +4,7 @@ import graft.config.PipelineConfig
 import graft.model.Transcripts
 import graft.parse.GrokParser
 import graft.route.Router
+import graft.limit.SinglePassLimit
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 
@@ -93,9 +94,12 @@ class ConfigSpec extends SparkSpec {
   test("YAML config drives the full pipeline") {
     val cfg = PipelineConfig.fromYaml(yaml)
     val turns = Transcripts.synthetic(spark, 20, 6)
-    val (routed, dropped) = Pipeline.route(turns, spark, cfg)
+    val (routed, verdicts) = SinglePassLimit.limitWithCells(
+      Pipeline.observedFanOut(turns, spark, cfg)._1, cfg.limitRules, cfg.saltBuckets)
     assert(routed.count() > 0)
-    assert(dropped.count() >= 0)
+    // the dropped rows are the rows of the cells the chain discarded
+    val dropped = verdicts.cells.filter(_.curSink == null).map(_.rows).sum
+    assert(dropped >= 0)
     assert(routed.filter(col("sink") === "nonexistent").count() === 0)
   }
 }

@@ -457,7 +457,10 @@ class ManifestSpec extends SparkSpec {
     Pipeline.run(spark, sfDir, out, runId = "r3", failAfterSinks = 2)
     val m = new Manifest(out)
     val turns = graft.model.Transcripts.fromEvents(spark, sfDir)
-    val (routedAll, _) = Pipeline.route(turns, spark)
+    // the rows Pipeline.run commits: the shipped limiter's survivors
+    val cfg = Pipeline.Config()
+    val routedAll = graft.limit.SinglePassLimit.limitReusingShuffle(
+      Pipeline.observedFanOut(turns, spark, cfg)._1, cfg.limitRules, cfg.saltBuckets)
     val remaining = m.antiJoinResume(spark,
       routedAll.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"))
     val committedCount = m.committedSinks().toSeq

@@ -18,17 +18,25 @@ class PlanShapeSpec extends SparkSpec {
     // Catalyst inlines the parse aliases into many expression copies, but as
     // long as every copy sits in a SINGLE Project operator, runtime
     // subexpression elimination evaluates the regex once per row. Copies
-    // spread across Filters/Generates would each re-execute it.
-    val (routed, _) = Pipeline.route(Transcripts.fromEvents(spark, sfDir), spark)
-    val out = routed.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
+    // spread across Filters/Generates would each re-execute it. Checked on
+    // every SparkEntry query over the routed stream: their parse has no
+    // barrier exchange in front of the route, as in Pipeline.run. Read at
+    // sf0.01: at sf0.001 the limiter drops nothing, so q_limit_dropped's
+    // plan folds to an empty relation with no grok left to check.
+    val routedLeaves = Seq("q_route_counts", "q_routed_rows", "q_sink_agg",
+      "q_sink_conv_spans", "q_limit_alerts", "q_limit_buckets", "q_limit_final",
+      "q_limit_dropped", "q_resume_antijoin", "q_top_convs")
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
-    val ops = out.queryExecution.optimizedPlan.collect {
-      case p if p.expressions.exists(hasGrok) => p.getClass.getSimpleName
+    routedLeaves.foreach { name =>
+      val out = graft.SparkEntry.queries(name)(spark, sfDir.replace("sf0.001", "sf0.01"))
+      val ops = out.queryExecution.optimizedPlan.collect {
+        case p if p.expressions.exists(hasGrok) => p.getClass.getSimpleName
+      }
+      assert(ops.distinct.toSeq === Seq("Project"),
+        s"$name: grok must only appear in Project operators, found $ops")
+      assert(ops.size <= 2, s"$name: grok-bearing operators: $ops")
     }
-    assert(ops.distinct.toSeq === Seq("Project"),
-      s"grok must only appear in Project operators, found $ops")
-    assert(ops.size <= 2, s"grok-bearing operators: $ops")
   }
 
   test("enrichment is a broadcast hash join, not a shuffle join") {
@@ -212,10 +220,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("limit-chain plan reuses the salted exchange instead of rescanning") {
-    val (routed, _) = Pipeline.route(Transcripts.fromEvents(spark, sfDir), spark)
+    val (fanned, _) = Pipeline.observedFanOut(Transcripts.fromEvents(spark, sfDir), spark)
+    val routed = graft.limit.SinglePassLimit.limitReusingShuffle(fanned,
+      graft.limit.RateLimit.defaultRules())
     val physical = routed.queryExecution.optimizedPlan.toString
     val scans = "parquet".r.findAllIn(physical).length
     assert(scans <= 1, s"the returned routed plan must scan the fact table once " +
-      s"(verdicts are precomputed driver-side), found $scans:\n" + physical.take(3000))
+      s"(verdicts come from the one exchange's map side), found $scans:\n" +
+      physical.take(3000))
   }
 }

@@ -115,7 +115,7 @@ object Bench {
     // core the 2-core level crosses a GC-thrash cliff as amplification grows
     // (measured: its wall time went superlinear between ×768 and ×1024),
     // which made the scaling ratio swing with the heap, not the engine.
-    val perCoreMb = sys.env.getOrElse("SPARK_GRAFT_MB_PER_CORE", "3072").toInt
+    val perCoreMb = 3072
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -126,8 +126,6 @@ object Bench {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val gcFlags = sys.env.getOrElse("SPARK_GRAFT_CHILD_GC", "")
-      .split(" ").filter(_.nonEmpty).toSeq
     // cpuset-pin the child to `cpus` PHYSICAL cores (what a real container's
     // cgroup does). Without it the 4-thread level's threads roam all 32
     // cores, borrowing the whole chip's cache/turbo by scheduler mood —
@@ -140,7 +138,7 @@ object Bench {
     val cmd = pin ++ Seq(javaBin,
       s"-XX:ActiveProcessorCount=$cpus",
       s"-Xmx${cpus.toLong * perCoreMb}m",
-      "-Dspark.ui.enabled=false") ++ gcFlags ++ addOpens ++ Seq(
+      "-Dspark.ui.enabled=false") ++ addOpens ++ Seq(
       "-cp", System.getProperty("java.class.path"),
       "graft.E2eRunner", cpus.toString, sfDir, outDir,
       mult.toString, salt.toString)
@@ -160,7 +158,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpusQuery = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpusQuery = Session.cpus
     // Scaling pair N=2 → 4N=8: the N→4N evidence emulates two CLUSTER SIZES,
     // so each level must behave like an independent slice of per-node
     // resources. On this one box that emulation holds only below the shared
@@ -168,11 +166,10 @@ object Bench {
     // ~0.8 at 4→16 (upper level AT the knee), and 16→32 is negative-scaling.
     // The full 2/4/8/16/32 curve is published in BENCH.md; the headline
     // throughput is still measured at 16 cores (the box's best level).
-    val cpus4n = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_4N", "8").toInt, cpusQuery)
+    val cpus4n = math.min(8, cpusQuery)
     val cpusN = math.max(1, cpus4n / 4)
-    val cpusHeadline = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_CPUS", "16").toInt
-    val salt = sys.env.getOrElse("SPARK_GRAFT_SALT", "32").toInt
+    val cpusHeadline = 16
+    val salt = 32
     // sink scratch on tmpfs: a single shared disk would serialize the sink
     // I/O that a real cluster spreads over per-node storage (see util.Env)
     val tmp = java.nio.file.Files.createTempDirectory(
@@ -209,8 +206,8 @@ object Bench {
     // where pairwise-median read 0.800 / - / 0.862 / 0.776 / 0.897 and
     // ratio-of-medians 0.787 / 0.875 / 0.859 / 0.827 / 0.866. Both median
     // estimators and every raw run time are still printed (auditable).
-    val scaleMult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "768").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val scaleMult = 768
+    val reps = 3
     val times4n = scala.collection.mutable.ArrayBuffer[Double]()
     val timesN = scala.collection.mutable.ArrayBuffer[Double]()
     var rows = 0L
@@ -258,8 +255,8 @@ object Bench {
     // the memory-bandwidth knee at 1024 and amortizes fixed cost better.)
     // Same noise rule as the scaling pairs: >10 % spread adds up to 2 reps
     // (round-2 accepted a silent 31 % spread as a median of 2).
-    val mult = sys.env.getOrElse("SPARK_GRAFT_BENCH_MULT", "1024").toInt
-    val headlineReps = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_REPS", "2").toInt
+    val mult = 1024
+    val headlineReps = 2
     val headlineRuns = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
     (1 to headlineReps).foreach { i =>
       headlineRuns += forkedE2e(cpusHeadline, sfDir, s"$tmp/outh_$i", mult, salt)
@@ -277,13 +274,11 @@ object Bench {
       f"""{"phase":"headline_done","rows":$rowsHeadline,"sec_16":$tHeadline%.3f,"runs_16":${arr(headlineRuns.map(_._1).toSeq)},"throughput_16":$thrHeadline%.1f}""")
 
     // ---- phase 3: per-operator timings at full width (with one warm-up) ----
-    // (SPARK_GRAFT_QUERIES=0 skips them — e2e-only experiment mode)
     // Each query is timed `qreps` times (median); a >10 % spread triggers one
     // extra rep — round-2's single-shot timings let a co-tenant print a 15.96 s
     // q_dedup_exact on unchanged code with nothing in the output saying so.
-    val runQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") != "0"
-    val qreps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "2").toInt
-    val queryTimes = if (runQueries) {
+    val qreps = 2
+    val queryTimes = {
       val spark = E2eRunner.session(cpusQuery)
       SparkEntry.queries("q_route_counts")(spark, sfDir).count() // warm-up JIT/codegen
       // bucketed-fact ingest (the prepaid shuffle) runs OUTSIDE the timed
@@ -306,23 +301,19 @@ object Bench {
       }
       spark.stop()
       ts
-    } else Seq.empty[(String, Seq[Double])]
+    }
 
     // ---- phase 4: one diagnostic 4→16 pair (self-describing evidence) ----
     // the chosen 2→8 pair is where this box emulates independent cluster
     // slices; the 4→16 pair straddles its shared-memory knee. Published
     // alongside so the pair choice is auditable, not hidden.
-    val diagPair = sys.env.getOrElse("SPARK_GRAFT_DIAG_PAIR", "1") != "0"
-    val (diag16, diag4) = if (diagPair) {
-      val (t16, _) = forkedE2e(16, sfDir, s"$tmp/outd16", scaleMult, salt)
-      val (t4, _) = forkedE2e(4, sfDir, s"$tmp/outd4", scaleMult, salt)
-      (t16, t4)
-    } else (0.0, 0.0)
+    val (diag16, _) = forkedE2e(16, sfDir, s"$tmp/outd16", scaleMult, salt)
+    val (diag4, _) = forkedE2e(4, sfDir, s"$tmp/outd4", scaleMult, salt)
 
     // clean the tmpfs scratch so repeated runs don't accumulate
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
 
-    val eff416 = if (diagPair) (diag4 / diag16) / 4.0 else 0.0
+    val eff416 = (diag4 / diag16) / 4.0
     val qs = queryTimes.map { case (k, v) =>
       "\"" + k + f"\":${median(v)}%.3f" }.mkString("{", ",", "}")
     val qruns = queryTimes.map { case (k, v) =>
@@ -340,42 +331,15 @@ object Bench {
   * `E2ERESULT <sec> <rows>`. */
 object E2eRunner {
 
-  def session(cpus: Int): SparkSession = {
-    // partitions per core: measured A/B at reps=3 medians — factor 1 → 0.835
-    // efficiency / 3.46M rows/s, factor 2 → 0.823 / 3.35M (within noise of
-    // each other; 1 wave avoids the extra per-task constant costs)
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_FACTOR", "1").toInt * cpus
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
-      // sink-file codec: zstd. Measured A/B (min over 5 pinned 16-core e2e
-      // runs each, BENCH.md): zstd 26.9 s ≤ snappy 27.7 s ≤ lz4 29.6 s ≪
-      // uncompressed 40.7 s (bigger writes are memory-bandwidth-bound even
-      // on tmpfs), and zstd's files are 1.77× smaller than snappy's on this
-      // data — equal-or-better CPU plus the 100 TB storage/IO economics.
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep AQE skew handling but NOT partition coalescing: the sandbox's
-      // tiny pre-amplification shuffles (~2 MB) coalesce to 1 partition and
-      // serialize the downstream amplified work — a small-data artifact
-      // that cannot occur at the real 10^12-row scale this job targets
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.local.dir", graft.util.Env.localDir)
-      // bucketed-table ingest lands on the scratch tmpfs, not the repo cwd /
-      // shared disk (same reasoning as the sink scratch)
-      .config("spark.sql.warehouse.dir",
-        s"${graft.util.Env.scratchDir}/graft-warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  def session(cpus: Int): SparkSession = Session.local(s"graft-bench-$cpus", cpus,
+    // sink-file codec: zstd. Measured A/B (min over 5 pinned 16-core e2e
+    // runs each, BENCH.md): zstd 26.9 s ≤ snappy 27.7 s ≤ lz4 29.6 s ≪
+    // uncompressed 40.7 s (bigger writes are memory-bandwidth-bound even
+    // on tmpfs), and zstd's files are 1.77× smaller than snappy's on this
+    // data — equal-or-better CPU plus the 100 TB storage/IO economics.
+    "spark.sql.parquet.compression.codec" -> "zstd",
+    // shuffle and spill files on tmpfs when there is one (see util.Env)
+    "spark.local.dir" -> graft.util.Env.localDir)
 
   /** e2e routed pipeline: scan → parse → enrich → route → limit → parquet.
     * The input is deterministically amplified `mult`× so compute dominates

@@ -45,8 +45,6 @@ object PipelineConfig {
     (v * mult).toLong
   }
 
-  final case class Parsed(config: Pipeline.Config)
-
   def fromYaml(yaml: String): Pipeline.Config = {
     val loaded = new org.yaml.snakeyaml.Yaml()
       .load[java.util.Map[String, Object]](yaml)

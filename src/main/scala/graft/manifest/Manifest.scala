@@ -65,7 +65,7 @@ final class Manifest(root: String) {
   def promoteAndCommit(sink: String, stagedDir: java.nio.file.Path, runId: String,
       rows: Long, bytes: Long, convs: Long): Unit = {
     val target = Paths.get(sinkPath(sink))
-    if (Files.exists(target)) deleteRecursively(target)
+    if (Files.exists(target)) graft.util.Fs.deleteRecursively(target)
     Files.createDirectories(target.getParent)
     Files.move(stagedDir, target, StandardCopyOption.ATOMIC_MOVE)
     commitEntry(sink, runId, rows, bytes, convs)
@@ -329,7 +329,7 @@ final class Manifest(root: String) {
       }
       appended
     }
-    val appended = try promoteStaged() finally deleteRecursively(staging)
+    val appended = try promoteStaged() finally graft.util.Fs.deleteRecursively(staging)
     Records.writeAtomic(manifestDir, marker,
       StreamMarker(batchId, appended, Records.now()))
   }
@@ -403,9 +403,6 @@ final class Manifest(root: String) {
         graft.util.Fs.listDir(p).exists(_.getFileName.toString.startsWith("batch=")))
       .map(_.getFileName.toString).toSet
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.util.Fs.deleteRecursively(p)
 
   /** One committed sink's rows WITH the sink column restored — promoted
     * directories carry the sink only in the path (it was a partition column

@@ -27,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Transcripts {
 
-  /** The grok-style pattern the parse stage must invert. */
-  val TextPattern = "^\\[(ERROR|WARN|INFO)\\] tool=([a-z]+) dur=([0-9]+)ms status=(ok|err) (.*)$"
-
   private def mapCase(c: org.apache.spark.sql.Column, pairs: (String, String)*): org.apache.spark.sql.Column =
     pairs.foldLeft(lit(null).cast("string")) { case (acc, (k, v)) =>
       when(c === lit(k), lit(v)).otherwise(acc)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.text.Curation
 
@@ -15,11 +14,7 @@ object Curate {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Curate <sfDir> <outDir> [maxTokens]")
     val maxTokens = if (args.length > 2) args(2).toInt else 2048
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-curate", graft.Session.cpus)
     try {
       val out = Curation.run(
         spark.read.parquet(s"${args(0)}/documents.parquet"),

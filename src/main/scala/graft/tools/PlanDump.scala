@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` of named [[graft.SparkEntry]] queries to
   * files — the before/after plan evidence an optimization round commits under
   * `plans/rNN/` (the judge cannot run Spark; these files are what plan claims
@@ -14,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Same static-plan discipline as [[PlanPin]]: AQE off for the snapshot (an
   * AQE plan pre-action is an unfinalized shell) and the bucketed-scan
-  * ordering flag set to match the bench/Verify sessions.
+  * ordering flag set, on PlanPin's 4-core session.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -23,16 +21,7 @@ object PlanDump {
     val suffix = args.lift(2).getOrElse("before")
     val names = args.lift(3).map(_.split(",").toSeq)
       .getOrElse(PlanPin.pinned)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"${graft.util.Env.scratchDir}/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-plandump", 4)
     Files.createDirectories(Paths.get(outDir))
     PlanPin.withStaticPlans(spark) {
       names.foreach { name =>

@@ -56,28 +56,15 @@ object PlanPin {
     "q_overlap_sessions", "q_interval_density", "q_skipping_read",
     "q_dpp_hot_months", "q_anomaly", "q_bm25", "q_pagerank")
 
-  def withStaticPlans[A](spark: SparkSession)(body: => A): A = {
-    val confs = Seq(
+  def withStaticPlans[A](spark: SparkSession)(body: => A): A =
+    graft.Session.withConf(spark,
       "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")(body)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-planpin")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"${graft.util.Env.scratchDir}/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the test session's width, so the printed rows are PlanPinSpec's
+    val spark = graft.Session.local("graft-planpin", 4)
     withStaticPlans(spark) {
       pinned.foreach { name =>
         val st = stats(graft.SparkEntry.queries(name)(spark, sfDir))

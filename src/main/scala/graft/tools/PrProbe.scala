@@ -9,9 +9,7 @@ object PrProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.lift(1).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.E2eRunner.session(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.E2eRunner.session(graft.Session.cpus)
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

@@ -1,11 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted per-query timing: the per-query phase of [[graft.Bench]] for an
   * arbitrary subset, without the scaling/headline phases — for re-baselining
   * one regressed query on a quiet box or A/B-ing a plan change quickly.
   * Same session shape and noop-write measurement as Bench's phase 3.
+  *
+  * Every named leaf first runs once untimed: a leaf's cold run (class
+  * loading, codegen, JIT) ran 1.4–3.3× its warm reps at sf0.01 and would
+  * otherwise sit in its median and its min. The timed reps then go
+  * round-robin (rep 1 of every leaf, then rep 2, ...), so a slow spell on
+  * a shared box spreads over all leaves instead of landing on one.
   *
   * Usage: runMain graft.tools.QTime <sfDir> <reps> <query>[,query...]
   */
@@ -15,17 +19,16 @@ object QTime {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(Seq("q_minhash_pairs"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark: SparkSession = graft.E2eRunner.session(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries("q_route_counts")(spark, sfDir).count() // warm-up
-    names.foreach { name =>
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+    val spark = graft.E2eRunner.session(graft.Session.cpus)
+    def once(name: String): Double = {
+      val t0 = System.nanoTime()
+      graft.SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    names.foreach(once) // warm-up, untimed
+    val runsByLeaf = (1 to reps).map(_ => names.map(once)).transpose
+    names.zip(runsByLeaf).foreach { case (name, runs) =>
       // Bench's median (even rep counts average the middle two) — a QTime
       // re-baseline must report the same statistic as the headline it A/Bs
       val med = graft.Bench.median(runs)

@@ -1,15 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: SparkEntry.entry must return rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-smoke", graft.Session.cpus)
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

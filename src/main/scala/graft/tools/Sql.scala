@@ -1,20 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL runner with the graft extensions loaded — the SQL-facing
   * surface of the engine. Registers the testdata tables by name.
   * Usage: runMain graft.tools.Sql <sfDir> "<sql>" */
 object Sql {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, sql) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-sql", graft.Session.cpus,
+      "spark.sql.extensions" -> classOf[graft.GraftExtensions].getName)
     Seq("events", "documents", "embeddings", "lineitem", "orders", "customer")
       .foreach { t =>
         val p = s"$sfDir/$t.parquet"

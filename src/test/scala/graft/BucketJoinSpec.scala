@@ -12,17 +12,14 @@ class BucketJoinSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("bucketed fact join runs with zero exchanges and zero sorts before the SMJ") {
-    val confs = Seq(
+    try Session.withConf(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       // Spark ≥3.0 stopped propagating bucket-file sort order by default
       // because it is only sound with ONE file per bucket — exactly what
       // writeBucketed's pre-write repartition-on-key guarantees, which is
       // what this conf exists for
-      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       Tpch.writeBucketed(spark.read.parquet(s"$sfDir/orders.parquet"),
         "b_orders", "o_orderkey", buckets = 8)
       Tpch.writeBucketed(spark.read.parquet(s"$sfDir/lineitem.parquet"),
@@ -53,7 +50,6 @@ class BucketJoinSpec extends SparkSpec {
         df.collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
       assert(canon(joined) === canon(shuffled))
     } finally {
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }

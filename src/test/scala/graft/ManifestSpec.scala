@@ -30,11 +30,9 @@ class ManifestSpec extends SparkSpec {
   test("clean run commits every sink and the manifest lists them") {
     val out = Files.createTempDirectory("graft-clean").toString
     // the shipped Main's session: AQE on, AQE partition coalescing off
-    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(coalescing)
-    spark.conf.set(coalescing, "false")
-    try Pipeline.run(spark, sfDir, out, runId = "clean")
-    finally spark.conf.set(coalescing, prev)
+    Session.withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      Pipeline.run(spark, sfDir, out, runId = "clean")
+    }
     val m = new Manifest(out)
     assert(m.committedSinks().nonEmpty)
     assert(readAllSinks(out).count() > 0)

@@ -80,9 +80,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("route+fanout stays inside whole-stage codegen (no interpreted HOFs)") {
     // static (non-AQE) plan shows WholeStageCodegen wrapping without running
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val routed = graft.route.Router.fanOut(
         GrokParser.parse(Transcripts.fromEvents(spark, sfDir)))
       val physical = routed.queryExecution.executedPlan.treeString
@@ -96,7 +94,7 @@ class PlanShapeSpec extends SparkSpec {
       val grokLine = physical.split("\n").find(_.contains("grok_extract")).get
       assert(grokLine.trim.stripPrefix("+- ").stripPrefix(":- ").startsWith("*("),
         s"grok project not codegen'd: $grokLine")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   /** Synthetic turns round-tripped through parquet: the events-derived
@@ -131,15 +129,13 @@ class PlanShapeSpec extends SparkSpec {
       case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics => c.name
     }
     assert(observed.toSet === Set("graft_scan", "graft_parse", "graft_route"))
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val phys = fanned.queryExecution.executedPlan.treeString
       // shuffle exchanges only — the enrich BroadcastExchange is expected
       val exchanges = "Exchange hashpartitioning".r.findAllIn(phys).length
       assert(exchanges === 0, s"no shuffle may run before the limiter's:\n$phys")
       assert(!phys.contains("SortMergeJoin"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("limiter plan: one exchange, CellTap below it, ApplyVerdicts above, no RDD scan") {
@@ -150,9 +146,7 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val (fanned, _) = Pipeline.observedFanOut(syntheticTurns(), spark)
     val limited = SinglePassLimit.limitReusingShuffle(fanned, RateLimit.defaultRules())
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = limited.queryExecution.executedPlan
       val phys = plan.treeString
       assert("Exchange hashpartitioning".r.findAllIn(phys).length === 1, phys)
@@ -163,7 +157,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(exchanges.size === 1, phys)
       assert(exchanges.head.collect { case t: CellTapExec => t }.size === 1, phys)
       assert(plan.collect { case t: CellTapExec => t }.size === 1, phys)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("LSH banding plans are HOF-free (no interpreted ArrayTransform/ArrayFilter)") {
@@ -189,9 +183,7 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       // every exchange in the candidate-pair stage carries ids only — the
       // round-3 formulation shuffled both embedding arrays through the
       // distinct (~2·d·4 bytes per candidate instead of 16)
@@ -216,7 +208,7 @@ class PlanShapeSpec extends SparkSpec {
             e.isInstanceOf[ArrayAggregate])) => p.getClass.getSimpleName
       }
       assert(hofs.isEmpty, s"interpreted HOFs in minhash pairs plan: $hofs")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("limit-chain plan reuses the salted exchange instead of rescanning") {

@@ -23,23 +23,15 @@ class RuntimeFilterSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def withRuntimeFilterConfs[A](body: => A): A = {
-    val confs = Seq(
+  private def withRuntimeFilterConfs[A](body: => A): A =
+    Session.withConf(spark,
       // fixture-scale stand-ins for sizes a 100 TB fact clears by default
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
       // keep the join a shuffle join: a broadcast join already hash-probes
       // the small side, so the rule (correctly) declines to add a bloom
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   test("a selective dim filter injects might_contain into the fact scan; rows unchanged") {
     val expected = { // same join, rule inactive at default thresholds

@@ -74,11 +74,8 @@ class SinglePassSpec extends SparkSpec {
     }
   }
 
-  private def withAqe[T](on: Boolean)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+  private def withAqe[T](on: Boolean)(f: => T): T =
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> on.toString)(f)
 
   test("every action over the limiter output agrees with the two-pass limiter, AQE on and off") {
     // the two ways the operators around the exchange can silently apply no
@@ -120,16 +117,12 @@ class SinglePassSpec extends SparkSpec {
     val (survived, verdicts) = SinglePassLimit.limitWithCells(fixture, rules)
     // as the shipped Main runs: AQE coalescing off, so the partition count
     // below is the limiter's own choice
-    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(coalescing)
-    spark.conf.set(coalescing, "false")
-    spark.listenerManager.register(listener)
-    try {
-      survived.write.mode("overwrite").parquet(out)
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.set(coalescing, prev)
+    Session.withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      spark.listenerManager.register(listener)
+      try {
+        survived.write.mode("overwrite").parquet(out)
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
     }
     object Plans extends AdaptiveSparkPlanHelper
     import scala.jdk.CollectionConverters._
@@ -181,13 +174,10 @@ class SinglePassSpec extends SparkSpec {
   }
 
   test("whole-hour TZ guard: modern whole-hour zones pass, half-hour eras/rules reject") {
-    val prev = spark.conf.get("spark.sql.session.timeZone")
     def accepts(tz: String): Boolean =
-      try {
-        spark.conf.set("spark.sql.session.timeZone", tz)
+      try Session.withConf(spark, "spark.sql.session.timeZone" -> tz) {
         SinglePassLimit.assertWholeHourTz(spark); true
       } catch { case _: IllegalArgumentException => false }
-      finally spark.conf.set("spark.sql.session.timeZone", prev)
     assert(accepts("UTC"))
     // pre-1900 LMT transitions (−4:56:02 / +9:18:59) must NOT trip the
     // guard — every geographic zone has one, and no epoch row feels it

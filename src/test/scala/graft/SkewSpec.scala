@@ -15,11 +15,8 @@ class SkewSpec extends SparkSpec {
     // otherwise merges to 1 partition regardless of salting): AQE's for the
     // control, the limiter's read-side rule (minPartitionSize) for the
     // salted plan
-    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
     // conv-00000 gets 400 extra turns: ~51% of all rows
     val turns = Transcripts.synthetic(spark, nConvs = 39, turnsPerConv = 10,
       hotConvExtraTurns = 400)
@@ -48,9 +45,6 @@ class SkewSpec extends SparkSpec {
       .collect().map(_.getLong(1))
     assert(uSizes.max >= turns.count() * 2 / 5,
       "control: unsalted repartition should concentrate the hot conv")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -3,26 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, lazy). */
+/** Shared local session for all suites (one JVM-wide session, lazy), built
+  * with the shipped settings ([[Session.local]]) on 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    // managed tables (bucketed-join fixtures) land on scratch, not the repo
-    // cwd's spark-warehouse/ (same placement as the bench session)
-    .config("spark.sql.warehouse.dir",
-      s"${graft.util.Env.scratchDir}/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("graft-test", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = TestSpark.spark
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = TestSpark.spark
 }

@@ -187,11 +187,8 @@ class TextAnalysisSpec extends SparkSpec {
     // autoBroadcastJoinThreshold=-1 models the 100 TB reality where the
     // planner's size estimate refuses broadcast — isolating the explicit
     // broadcast() hint, which is exactly what the guard makes conditional
-    val prevs = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       val guarded = TextAnalysis.stripFrequentUnits(docs, minDf = 2, sep = " ",
         maxBroadcastUnits = 10)
@@ -207,7 +204,7 @@ class TextAnalysisSpec extends SparkSpec {
       val allHot = TextAnalysis.stripFrequentUnits(docs, minDf = 1, sep = " ",
         maxBroadcastUnits = 10)
       assert(allHot.count() === 0L, "every unit hot => every doc emptied and dropped")
-    } finally prevs.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("stratified sampling: rate extremes, md5-threshold membership, stratum independence") {

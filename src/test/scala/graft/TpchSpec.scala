@@ -61,9 +61,7 @@ class TpchSpec extends SparkSpec {
   }
 
   test("plan shapes: tiny dims broadcast, top-k avoids global sort, filters push down, no cartesian") {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val nv = Tpch.nationVolume(spark, sfDir).queryExecution.executedPlan.toString
       assert(nv.contains("BroadcastHashJoin"), "nation/region must broadcast")
       assert(!nv.contains("CartesianProduct"), "no cartesian in the 6-way join")
@@ -78,13 +76,11 @@ class TpchSpec extends SparkSpec {
       assert(ic.contains("LeftAnti"), "idle customers must plan a LEFT ANTI join")
       assert(ic.contains("GreaterThan(o_totalprice,400000.0)"),
         "price filter must reach the orders parquet scan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("semi-join: waiting orders plan LEFT SEMI with the flag filter pushed down") {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val df = Tpch.ordersWithReturns(spark, sfDir)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("LeftSemi"), s"EXISTS shape must plan LEFT SEMI:\n$plan")
@@ -103,7 +99,7 @@ class TpchSpec extends SparkSpec {
         .filter(col("l_returnflag") === "R")
         .select(col("l_orderkey")).distinct().count()
       assert(n === viaDistinct, "semi-join must count each matching order exactly once")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("rollup: one Expand pass, levels sum consistently") {
@@ -116,14 +112,12 @@ class TpchSpec extends SparkSpec {
     def cents(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.getAs[Long]("revenue_cents")).sum
     assert(cents(grand) === cents(nationSub), "nation subtotals must sum to the grand total")
     assert(cents(grand) === cents(leaves), "leaves must sum to the grand total")
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = Tpch.revenueRollup(spark, sfDir).queryExecution.executedPlan.toString
       assert(plan.contains("Expand"),
         "rollup must compute all grouping levels in one Expand pass, not one scan per level")
       assert("Expand".r.findAllIn(plan).length === 1, s"exactly one Expand:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("cube: four grouping sets, gid bit order, each margin sums to the grand total") {
@@ -144,22 +138,17 @@ class TpchSpec extends SparkSpec {
     for (g <- Seq(0L, 1L, 2L))
       assert(cents(byGid(g)) === grand, s"gid=$g margin must sum to the grand total")
     // one Expand pass, like rollup
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = Tpch.revenueCube(spark, sfDir).queryExecution.executedPlan.toString
       assert("Expand".r.findAllIn(plan).length === 1, s"exactly one Expand:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("bucketed revenue: zero exchange and zero sort on the fact join, parity with plain join") {
     // deliberately does NOT set bucketedTableScan.outputOrdering here: the
     // sort elision must come from the conf-scoped clone inside
     // revenueByPriorityBucketed, not from test session state
-    val confs = Seq("spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    try Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val df = Tpch.revenueByPriorityBucketed(spark, sfDir)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"fact spine must be an SMJ:\n${plan.take(800)}")
@@ -187,7 +176,6 @@ class TpchSpec extends SparkSpec {
         d.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
       assert(canon(df) === canon(plain))
     } finally {
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.sql(s"DROP TABLE IF EXISTS graft_orders_bkt_${java.lang.Integer.toHexString(sfDir.hashCode)}")
       spark.sql(s"DROP TABLE IF EXISTS graft_lineitem_bkt_${java.lang.Integer.toHexString(sfDir.hashCode)}")
     }
@@ -214,28 +202,21 @@ class TpchSpec extends SparkSpec {
     // lingering autoBroadcastJoinThreshold=-1 would silently disable every
     // later broadcast in the bucketed query
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevThr = spark.conf.getOption(key)
-    spark.conf.set("spark.sql.adaptive.enabled", "false") // static plan asserts
-    try {
-      assert(prevThr.isEmpty || prevThr.get != "-1")
-      spark.conf.set(key, "-1")
-      val noBhj = Tpch.revenueByPriorityBucketed(spark, sfDir)
-      assert(!noBhj.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-        "with the threshold off, customer must not broadcast (sanity of the probe)")
-      spark.conf.unset(key)
+    // static plan asserts; a failed assert must not leak -1 (or skip the
+    // tables cleanup) into the suite-shared session
+    try Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      assert(!spark.conf.getAll.contains(key), "the unset below must return to the default")
+      // withConf unsets the key on exit, as it was absent before
+      Session.withConf(spark, key -> "-1") {
+        val noBhj = Tpch.revenueByPriorityBucketed(spark, sfDir)
+        assert(!noBhj.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+          "with the threshold off, customer must not broadcast (sanity of the probe)")
+      }
       val withBhj = Tpch.revenueByPriorityBucketed(spark, sfDir)
       assert(withBhj.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
         "after the caller unsets the threshold, the clone must return to the " +
           "default (broadcast the small dim) instead of keeping the stale -1")
     } finally {
-      // a failed assert must not leak -1 (or drop the tables cleanup) into
-      // the suite-shared session
-      prevThr match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.sql(s"DROP TABLE IF EXISTS graft_orders_bkt_${java.lang.Integer.toHexString(sfDir.hashCode)}")
       spark.sql(s"DROP TABLE IF EXISTS graft_lineitem_bkt_${java.lang.Integer.toHexString(sfDir.hashCode)}")
     }
@@ -246,16 +227,13 @@ class TpchSpec extends SparkSpec {
     // many × the others. Thresholds lowered so the 60k-row fixture crosses
     // them; broadcast disabled so the join stays sort-merge (at 100 TB a
     // fact⋈fact join IS sort-merge — this is the shape under test).
-    val confs = Seq(
+    Session.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       // repartition(8) first: AQE splits a skewed reduce partition at MAP
       // OUTPUT granularity, and the single-file fixture scan is one mapper —
       // a real fact table always has many (at 100 TB, thousands)
@@ -271,9 +249,6 @@ class TpchSpec extends SparkSpec {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE must split the hot partition (OptimizeSkewedJoin):\n$finalPlan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

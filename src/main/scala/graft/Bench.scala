@@ -40,62 +40,6 @@ import graft.route.Router
   */
 object Bench {
 
-  /** Headline per-operator timings (subset of SparkEntry.queries that
-    * represents each operator family without double-running near-identical
-    * plans). Each is fully materialized via a noop write.
-    *
-    * THE CANONICAL LIST IS [[graft.tools.PlanPin.pinned]] — Bench aliases it
-    * so a query can never be headline-timed without its plan being pinned
-    * (the drift PlanPinSpec alone could not catch, since it only ties the
-    * spec table to PlanPin). The commented grouping below documents WHY each
-    * family member is in the set; the assert keeps the documentation honest. */
-  private lazy val headline: Seq[String] = {
-    val canonical = graft.tools.PlanPin.pinned
-    assert(canonical == documentedHeadline,
-      "Bench's documented headline drifted from PlanPin.pinned — update both")
-    canonical
-  }
-
-  private val documentedHeadline = Seq(
-    "q_routed_rows", "q_sink_agg", "q_conv_spans", "q_enrich_agg",
-    "q_limit_final", "q_dedup_exact", "q_minhash_pairs", "q_simhash",
-    "q_ann_lsh", "q_token_stats", "q_quality", "q_langid",
-    // round-3 flagship: the 8-stage curation DAG as one linear plan.
-    // (q_ann_pq is excluded: its time is ~95% one-off k-means index BUILD,
-    // which would misrepresent the query phase — the ANN query family is
-    // already represented by q_ann_lsh.)
-    "q_curation_full",
-    // round-4 relational join family: the fact⋈fact shuffle join with a
-    // broadcast dim (Q3-shaped) and the 6-way Q5-shaped join
-    "q_tpch_revenue", "q_tpch_nation_volume",
-    // round-5: the same Q3 shape over BUCKETED facts — the ingest-prepaid
-    // (zero-exchange) join; its bucketed tables are written once in the
-    // phase-3 warm-up (that shuffle is the INGEST cost by design, not a
-    // per-query cost — timing it per rep would misstate both stories)
-    "q_tpch_bucketed_revenue",
-    // round-5 operator wave: broadcast as-of join (codegen binary search),
-    // CDC changelog compaction (group-limit winners + anti-join), funnel
-    // (N chained windows over one exchange)
-    "q_asof_config", "q_cdc_upsert", "q_funnel",
-    // round-6: interval⋈interval overlap join (both sides binned,
-    // exactly-once via the first-overlap-bucket rule) and sweep-line
-    // interval density (two-level distributed prefix sum)
-    "q_overlap_sessions", "q_interval_density",
-    // round-6: file-level data skipping — the read-time payoff of the
-    // z-ordered layout (ingest, like bucketing, is prepaid in the phase-3
-    // warm-up; the timed reps measure what a point/box query costs forever
-    // after: a manifest read + the few intersecting files)
-    "q_skipping_read",
-    // round-6: dynamic partition pruning — the runtime hot-month dim prunes
-    // the partitioned fact scan to k of ~80 month dirs (ingest prepaid)
-    "q_dpp_hot_months",
-    // round-6 operator wave 2: rolling median/MAD anomaly flags (one window
-    // per key over the aggregated series), BM25 retrieval (zero-exchange:
-    // stats pass + TakeOrdered scan), and integer PageRank (5 iterations of
-    // src-join + dst-agg over the supplier⋈customer graph — the iterative
-    // shuffle workload the headline otherwise lacks)
-    "q_anomaly", "q_bm25", "q_pagerank")
-
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -294,7 +238,9 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
         (System.nanoTime() - t0) / 1e9
       }
-      val ts = headline.map { name =>
+      // the headline per-operator timings are the plan-pinned queries, so
+      // none is timed without its plan pinned; each runs as a noop write
+      val ts = graft.tools.PlanPin.pinned.map { name =>
         val runs = scala.collection.mutable.ArrayBuffer.fill(qreps)(once(name))
         if (spread(runs.toSeq) > 0.10) runs += once(name)
         name -> runs.toSeq

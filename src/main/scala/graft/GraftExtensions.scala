@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 import graft.functions.{CosineSim, HyperplaneSig, MinHashSignature, NormalizeNfc, SimHash64, WordShingles}
 import graft.parse.GrokExtract
+import graft.GraftTableFunctions.{exactInt, longArg, strArg}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * expressions as SQL functions, so `spark.sql` users get the same codegen'd
@@ -43,19 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def intArg(e: Expression, name: String): Int = e match {
     case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(s"$name must be an int literal, got $other")
-  }
-  private def strArg(e: Expression, name: String): String = e match {
-    case Literal(s, org.apache.spark.sql.types.StringType) if s != null => s.toString
-    case other => throw new IllegalArgumentException(s"$name must be a string literal, got $other")
-  }
-  private def longArg(e: Expression, name: String): Long = e match {
-    case Literal(v: Int, _) => v.toLong
-    case Literal(v: Long, _) => v
-    case other => throw new IllegalArgumentException(s"$name must be an integer literal, got $other")
-  }
-  private def exactInt(v: Long, name: String): Int = {
-    require(v >= Int.MinValue && v <= Int.MaxValue, s"$name out of int range: $v")
-    v.toInt
   }
   private def doubleArg(e: Expression, name: String): Double = e match {
     case Literal(v: Double, _) => v

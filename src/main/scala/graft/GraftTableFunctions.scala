@@ -35,12 +35,13 @@ import graft.temporal.TemporalJoin
   */
 object GraftTableFunctions {
 
-  private def strArg(e: Expression, name: String): String = e match {
+  // literal-argument readers, shared with GraftExtensions' scalar functions
+  private[graft] def strArg(e: Expression, name: String): String = e match {
     case Literal(s, StringType) if s != null => s.toString
     case other =>
       throw new IllegalArgumentException(s"$name must be a string literal, got $other")
   }
-  private def longArg(e: Expression, name: String): Long = e match {
+  private[graft] def longArg(e: Expression, name: String): Long = e match {
     case Literal(v: Int, _) => v.toLong
     case Literal(v: Long, _) => v
     case other =>
@@ -50,7 +51,7 @@ object GraftTableFunctions {
     if (args.length > i) Some(longArg(args(i), name)) else None
   /** longArg + int-range check: a silently-wrapped `.toInt` would run the
     * operator with a drastically different parameter instead of erroring. */
-  private def exactInt(v: Long, name: String): Int = {
+  private[graft] def exactInt(v: Long, name: String): Int = {
     require(v >= Int.MinValue && v <= Int.MaxValue, s"$name out of int range: $v")
     v.toInt
   }

@@ -226,7 +226,7 @@ object SparkEntry {
       RateLimit.breachVerdicts(routed(s, dir),
           graft.limit.LimitRule("sink_search", 150L, 3, "alert", None))
         .filter(col("breached"))
-        .select(col("sink"), unix_timestamp(col("bucket")).as("bucket_epoch"),
+        .select(col("sink"), (col("bucket") * 3600).as("bucket_epoch"),
           floor(col("avg_bytes")).cast("long").as("avg_bytes_floor"))),
     // R1 broadcast enrich: per-(team, cost_class) rollup
     "q_enrich_agg" -> ((s, dir) =>
@@ -236,7 +236,7 @@ object SparkEntry {
     // L1: tumbling per-(sink, bucket) byte sums
     "q_limit_buckets" -> ((s, dir) =>
       RateLimit.bucketBytes(routed(s, dir))
-        .select(col("sink"), unix_timestamp(col("bucket")).as("bucket_epoch"),
+        .select(col("sink"), (col("bucket") * 3600).as("bucket_epoch"),
           col("bucket_bytes"))),
     // L4+R3/R4: full limiter chain (fallback then discard) — surviving per-sink
     // totals, through the single-pass limiter Pipeline.run ships

@@ -25,7 +25,7 @@ import graft.manifest.Records
   *   - sink: sink_search
   *     throughput: 10KB        # bytes per bucket
   *     average_over: 3         # sliding mean over trailing buckets (L4)
-  *     action: fallback        # fallback | discard
+  *     action: fallback        # fallback | discard | alert
   *     fallback: sink_fallback
   * }}}
   */
@@ -68,19 +68,16 @@ object PipelineConfig {
     }
     require(routes.nonEmpty, "config needs at least one route")
 
+    // LimitRule checks its action, fallback sink and window (F5)
     val limits = asList("limits").map { e =>
-      val action = str(e, "action")
-      require(Set("fallback", "discard", "alert")(action),
-        s"action must be fallback|discard|alert: $action") // F5
       val fallback = e.get("fallback").map(_.toString)
-      require(action != "fallback" || fallback.nonEmpty, "fallback action needs 'fallback' sink")
       val sink = str(e, "sink")
       (sink +: fallback.toSeq).foreach(Records.requireName("sink", _)) // F5
       LimitRule(
         sink = sink,
         bytesPerBucket = parseBytes(str(e, "throughput")),
         avgOverBuckets = e.get("average_over").map(_.toString.toInt).getOrElse(1),
-        action = action,
+        action = str(e, "action"),
         fallbackSink = fallback)
     }
 

@@ -43,9 +43,11 @@ final class Verdicts extends Serializable {
 
 /** Below the limiter's (sink, bucket, salt) exchange: sums each
   * (sink, bucket) cell's text bytes and rows on the map side while every
-  * row passes through untouched. `sink`, `ts` and `text` are constructor
-  * expressions, so they are this node's references and column pruning
-  * keeps them below it even when no consumer above reads them.
+  * row passes through untouched. The bucket is [[RateLimit.bucket]], the
+  * epoch hour of `ts`, whatever the session time zone. `sink`, `ts` and
+  * `text` are constructor expressions, so they are this node's references
+  * and column pruning keeps them below it even when no consumer above
+  * reads them.
   *
   * PRECONDITION (exactly-once sums): each map partition's row multiset is
   * deterministic and the sums ignore row order. The sums land in
@@ -117,7 +119,6 @@ final case class CellTapExec(sink: Attribute, ts: Attribute, text: Attribute,
     val iSink = child.output.indexWhere(_.exprId == sink.exprId)
     val rowsMetric = longMetric("rows")
     val cellsMetric = longMetric("cells")
-    val micros = SinglePassLimit.MicrosPerBucket
 
     // The cell cap is enforced INSIDE the task (a misconfigured bucket
     // granularity must fail in the executor while its map is still small,
@@ -155,7 +156,7 @@ final case class CellTapExec(sink: Attribute, ts: Attribute, text: Attribute,
               "source envelope always sets it); rows needing null-bucket " +
               "semantics must use the two-pass RateLimit.apply")
         rowsMetric += 1
-        val bucket = Math.floorDiv(row.getLong(iTs), micros)
+        val bucket = RateLimit.bucket(row.getLong(iTs))
         val buckets = sinks(row.getUTF8String(iSink))
         if (!(buckets eq prevBuckets) || bucket != prevBucket) {
           var slot = buckets.getOrNull(bucket)
@@ -326,7 +327,7 @@ object ApplyVerdictsExec {
       val buckets = sinks(row.getUTF8String(iSink))
       val target =
         if (buckets == null) null
-        else buckets.getOrNull(Math.floorDiv(row.getLong(iTs), SinglePassLimit.MicrosPerBucket))
+        else buckets.getOrNull(RateLimit.bucket(row.getLong(iTs)))
       if (target == null) row
       else if (target.sink == null) { dropped += 1; null }
       else {

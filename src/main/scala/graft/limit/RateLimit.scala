@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Reference semantics (limiter/limiter.go):
   *  - L1 time-bucketed byte counters keyed floor(now/interval)   → tumbling window agg
+  *    over [[RateLimit.bucket]], the epoch hour every limiter formulation
+  *    shares (no session-timezone dependence)
   *  - L4 sliding-average check: mean of the last `buckets` intervals vs limit
   *                                                                → analytic window frame
   *  - breach dispatch (broker/connector.go:268-313): action=fallback rewrites
@@ -27,9 +29,18 @@ final case class LimitRule(
     sink: String,
     bytesPerBucket: Long,
     avgOverBuckets: Int,
-    action: String, // "fallback" | "discard"
+    action: String, // "fallback" | "discard" | "alert"
     fallbackSink: Option[String]
-)
+) {
+  // checked when the rule is built, not when a breach first dispatches on it
+  // after the whole map stage ran (reference F5 validators, config/config.go:51)
+  require(Set("fallback", "discard", "alert")(action),
+    s"action must be fallback|discard|alert: $action")
+  require(action != "fallback" || fallbackSink.nonEmpty,
+    s"fallback action on $sink needs a fallback sink")
+  require(avgOverBuckets >= 1, s"average_over must be >= 1 bucket: $avgOverBuckets")
+  require(bytesPerBucket >= 0, s"negative bytes per bucket: $bytesPerBucket")
+}
 
 object RateLimit {
 
@@ -41,12 +52,23 @@ object RateLimit {
     LimitRule("sink_fallback", fallbackLimit, 3, "discard", None)
   )
 
-  def bucketCol(ts: Column): Column = date_trunc("hour", ts)
+  private final val MicrosPerHour = 3600L * 1000 * 1000
+
+  /** The limiter's bucket, defined once for every formulation: the epoch
+    * hour of a TimestampType value's epoch micros — the reference's
+    * floor(now/interval), rounding toward −∞ before 1970. A plain method, so
+    * the per-row operator loops inline it. */
+  def bucket(epochMicros: Long): Long = Math.floorDiv(epochMicros, MicrosPerHour)
+
+  /** [[bucket]] as a long Column over a TIMESTAMP or TIMESTAMP_NTZ `ts`.
+    * unix_timestamp floors the micros to seconds, and floor(s / 3600) of the
+    * double quotient is exact for every representable second, so the value
+    * equals [[bucket]]'s. */
+  def bucketCol(ts: Column): Column = floor(unix_timestamp(ts) / 3600)
 
   /** One verdict cell: the byte volume of one (original sink, bucket), with
-    * the current/last sink mutated by [[runChain]]. `bucketKey` is any
-    * order-preserving encoding of the bucket (epoch millis here, epoch hours
-    * in [[SinglePassLimit]]) — the chain only ever sorts by it. `rows` rides
+    * the current/last sink mutated by [[runChain]]. `bucketKey` is the
+    * [[bucket]] (epoch hour) on every path. `rows` rides
     * along for the per-sink live counters and commit stats (reference
     * monitoring/stats.go analog); the chain itself only reads `bytes`. */
   final case class Cell(origSink: String, bucketKey: Long,
@@ -163,10 +185,8 @@ object RateLimit {
       s"rate-limit verdict aggregate exceeds $maxVerdictCells (sink × bucket) cells — " +
         "bucket granularity is too fine for driver-side verdicts; coarsen bucketCol " +
         "or raise maxVerdictCells")
-    val bucketTs = collected.map(r => r.getTimestamp(1).getTime -> r.getTimestamp(1)).toMap
     val cells = collected
-      .map(r => Cell(r.getString(0), r.getTimestamp(1).getTime, r.getString(0),
-        r.getString(0), r.getLong(2)))
+      .map(r => Cell(r.getString(0), r.getLong(1), r.getString(0), r.getString(0), r.getLong(2)))
 
     runChain(cells, rules)
 
@@ -175,7 +195,7 @@ object RateLimit {
 
     import spark.implicits._
     val decisions = spark.createDataset(changed.toSeq.map(c =>
-      (c.origSink, bucketTs(c.bucketKey), Option(c.curSink), c.lastSink)))
+      (c.origSink, c.bucketKey, Option(c.curSink), c.lastSink)))
       .toDF("orig_sink", "d_bucket", "final_sink", "last_sink")
 
     val joined = routed.join(

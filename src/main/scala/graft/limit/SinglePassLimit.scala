@@ -1,6 +1,6 @@
 package graft.limit
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Single-pass rate limiting: one exchange serves both the verdict and the
@@ -16,63 +16,14 @@ import org.apache.spark.sql.functions._
   * re-deriving it per row ([[limitWithCells]]; SinglePassSpec proves the
   * survivors equal RateLimit.apply's row for row).
   *
+  * Both formulations bucket by [[RateLimit.bucket]], the epoch hour, so they
+  * agree in every session time zone.
+  *
   * Staging by (sink, bucket) and applying verdicts as directory moves does
   * not pay: per-file costs dominate at hour buckets (measurements in
   * DESIGN.md, "Single-pass limiter").
   */
 object SinglePassLimit {
-
-  /** Epoch-hour bucket — the same boundaries as RateLimit.bucketCol
-    * (date_trunc 'hour' in the UTC session). Matches date_trunc ONLY when the
-    * session timezone sits on a whole-hour UTC offset (enforced by
-    * [[assertWholeHourTz]] at the single-pass entry point): under e.g.
-    * Asia/Kolkata (+5:30) date_trunc boundaries fall on :30 UTC and the two
-    * limiter formulations would disagree on bucket membership. */
-  def bucketKey(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(unix_timestamp(ts) / 3600).cast("long")
-
-  /** [[bucketKey]] over TimestampType's epoch micros, as the limiter's
-    * operators compute it per row. */
-  private[limit] val MicrosPerBucket = 3600L * 1000 * 1000
-
-  /** The single-pass path buckets on epoch hours (UTC by construction); the
-    * two-pass semantic spec buckets on date_trunc('hour') in the SESSION
-    * timezone. They agree iff the session offset is a whole number of hours —
-    * anything else must use the two-pass path. */
-  private[graft] def assertWholeHourTz(spark: SparkSession): Unit = {
-    val tz = spark.conf.get("spark.sql.session.timeZone")
-    val rules = java.time.ZoneId.of(tz).getRules
-    // EVERY offset the zone's rules can produce must be whole-hour — not
-    // just the offset at this instant: a DST-varying zone like
-    // Australia/Lord_Howe (+10:30 standard, +11:00 DST) would pass a
-    // now()-only check half the year and still misbucket standard-time rows
-    import scala.jdk.CollectionConverters._
-    // ... and the HISTORICAL fixed transitions, not only the recurring
-    // rules: a zone with a past non-whole-hour offset and no recurring DST
-    // (Asia/Singapore was +7:30 until 1982 — its 1982 transition has
-    // offsetBefore +7:30) would otherwise pass the guard while its old-era
-    // rows still misbucket. Era-bounded at the epoch: EVERY geographic zone
-    // has a pre-1900 LMT transition at a seconds-precision offset
-    // (America/New_York −4:56:02, Asia/Tokyo +9:18:59, ...), so scanning
-    // all history would reject every named zone. Post-1970 offsets cover
-    // any timestamp log data can carry; rows BEFORE 1970 in such a zone
-    // would still misbucket — if that ever matters, use RateLimit.apply
-    // (the two-pass path has no timezone restriction).
-    val epoch = java.time.Instant.EPOCH
-    val offsets = rules.getOffset(java.time.Instant.now()) +:
-      (rules.getTransitionRules.asScala.toSeq.flatMap(tr =>
-        Seq(tr.getOffsetBefore, tr.getOffsetAfter)) ++
-        rules.getTransitions.asScala.toSeq
-          .filter(_.getInstant.isAfter(epoch))
-          .flatMap(t => Seq(t.getOffsetBefore, t.getOffsetAfter)))
-    val bad = offsets.find(_.getTotalSeconds % 3600 != 0)
-    require(bad.isEmpty,
-      s"single-pass rate limiting requires a whole-hour-offset session timezone " +
-        s"(got $tz, which can sit at offset ${bad.get}): epoch-hour buckets would " +
-        "disagree with the two-pass date_trunc('hour') spec — set " +
-        "spark.sql.session.timeZone=UTC or use RateLimit.apply")
-  }
-
 
   /** [[limitWithCells]]'s surviving rows. */
   def limitReusingShuffle(routed: DataFrame, rules: Seq[LimitRule],
@@ -127,7 +78,6 @@ object SinglePassLimit {
     import org.apache.spark.sql.graftbridge.Bridge
 
     val spark = routed.sparkSession
-    assertWholeHourTz(spark)
     LimiterStrategy.register(spark)
     val projected = routed
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
@@ -135,7 +85,7 @@ object SinglePassLimit {
     def attr(name: String) = projected.output.find(_.name == name).get
     val shuffled = Bridge.ofRows(spark,
         CellTap(attr("sink"), attr("ts"), attr("text"), maxVerdictCells, projected))
-      .repartition(col("sink"), bucketKey(col("ts")),
+      .repartition(col("sink"), RateLimit.bucketCol(col("ts")),
         pmod(hash(col("conv_id"), col("turn_idx")), lit(saltBuckets)))
     val verdicts = new Verdicts
     (Bridge.ofRows(spark, ApplyVerdicts(attr("sink"), attr("ts"), rules, maxVerdictCells,

@@ -20,21 +20,6 @@ final case class Turn(
     ts: Timestamp
 )
 
-/** Turn after the grok/regex parse stage. Null parsed fields ⇒ quarantined
-  * (reference analog: decode-error drop + counter, broker/worker.go:70-74). */
-final case class ParsedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: Timestamp,
-    level: String,
-    dur_ms: Option[Int],
-    status: String,
-    payload: String
-)
-
 /** A turn stamped with its destination sink, post fan-out.
   * Reference analog: `TargetMessage` (message/protobuf.proto:11-15). */
 final case class RoutedTurn(
@@ -45,25 +30,4 @@ final case class RoutedTurn(
     tool: String,
     ts: Timestamp,
     sink: String
-)
-
-/** Per-sink aggregate row — the engine's GROUP BY metrics
-  * (reference analog: per-connection Stats, monitoring/stats.go:10-118). */
-final case class SinkAggregate(
-    sink: String,
-    turns: Long,
-    bytes: Long,
-    convs: Long
-)
-
-/** Lineage manifest entry: one committed unit of routed output.
-  * Reference analog: the Consul-KV dedup set (source/nomad/worker.go:114-127),
-  * inverted to write-then-commit so resume is idempotent (SURVEY.md §4.3). */
-final case class ManifestEntry(
-    run_id: String,
-    sink: String,
-    part_id: Int,
-    row_count: Long,
-    bytes: Long,
-    committed_ts: Timestamp
 )

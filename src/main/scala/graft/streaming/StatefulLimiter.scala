@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.limit.LimitRule
+import graft.limit.{LimitRule, RateLimit}
+import graft.model.RoutedTurn
 
 /** Streaming ONLINE rate limiter — the faithful analog of the reference's
   * feedback-loop limiter (limiter/limiter.go: every delivery increments the
@@ -28,10 +29,6 @@ object StatefulLimiter extends Serializable {
       conv_id: String, turn_idx: Int, role: String, text: String,
       tool: String, ts: java.sql.Timestamp, sink: String, dropped: Boolean)
 
-  final case class In(
-      conv_id: String, turn_idx: Int, role: String, text: String,
-      tool: String, ts: java.sql.Timestamp, sink: String)
-
   /** Limiter state for one routing group: trailing per-(target sink, bucket)
     * byte counts. Keyed by target sink so a group's rerouted rows account
     * against the FALLBACK's budget, not the primary's. (Fallback volume
@@ -39,8 +36,6 @@ object StatefulLimiter extends Serializable {
     * topology keeps fallback sinks reroute-only, so this matches the
     * reference's one-limiter-per-target behavior for the default config.) */
   final case class SinkState(buckets: Map[String, Map[Long, Long]])
-
-  private def bucketOf(ts: java.sql.Timestamp): Long = ts.getTime / 3600000L
 
   /** @param maxGroupRowsPerTrigger hard bound on the per-sink rows buffered
     *        for one micro-batch. The within-batch ts sort (determinism across
@@ -59,18 +54,19 @@ object StatefulLimiter extends Serializable {
 
     routed
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
-      .as[In]
+      .as[RoutedTurn]
       .groupByKey(_.sink)
       .flatMapGroupsWithState[SinkState, LimitedTurn](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sink: String, rows: Iterator[In], state: GroupState[SinkState]) =>
+        (sink: String, rows: Iterator[RoutedTurn], state: GroupState[SinkState]) =>
           var buckets = state.getOption.map(_.buckets)
             .getOrElse(Map.empty[String, Map[Long, Long]])
           val out = scala.collection.mutable.ArrayBuffer[LimitedTurn]()
 
-          def admit(row: In, intoSink: String, depth: Int): Unit = {
+          def admit(row: RoutedTurn, intoSink: String, depth: Int): Unit = {
             val rule = ruleBySink.get(intoSink)
-            val b = bucketOf(row.ts)
+            // hour boundaries are whole millis, so millis bucket as micros do
+            val b = RateLimit.bucket(row.ts.getTime * 1000L)
             val bytes = row.text.getBytes("UTF-8").length.toLong
             rule match {
               case None =>
@@ -118,7 +114,7 @@ object StatefulLimiter extends Serializable {
             }
           }
 
-          val buf = new scala.collection.mutable.ArrayBuffer[In]()
+          val buf = new scala.collection.mutable.ArrayBuffer[RoutedTurn]()
           rows.foreach { r =>
             if (buf.length >= maxGroupRowsPerTrigger)
               throw new IllegalStateException(

@@ -51,18 +51,12 @@ object Search {
     * stopword cutoff; terms in ~every document carry no signal and dominate
     * index size).
     *
-    * @param broadcastVocab how df is attached to the tf rows. `true`
-    *        (default): force-broadcast the post-cutoff vocabulary — right
-    *        whenever it fits an executor (the term dictionary every search
-    *        engine holds per node), and a hard hint so the planner's missing
-    *        statistics on the aggregate subtree can't demote it. `false`:
-    *        plain shuffle join, for the corpus whose surviving vocabulary
-    *        (minDf=2 keeps the doubleton long tail) outgrows broadcast — the
-    *        tf side re-shuffles by term, but joins (unlike the round-6
-    *        window) are AQE-skew-splittable, so a hot term costs extra
-    *        partitions, not one straggler task. */
+    * df is attached to the tf rows by force-broadcasting the post-cutoff
+    * vocabulary — right whenever it fits an executor (the term dictionary
+    * every search engine holds per node), and a hard hint so the planner's
+    * missing statistics on the aggregate subtree can't demote it. */
   def postings(docs: DataFrame, idCol: String, textCol: String,
-      minDf: Long, maxDfPercent: Int, broadcastVocab: Boolean = true): DataFrame = {
+      minDf: Long, maxDfPercent: Int): DataFrame = {
     require(minDf >= 1, s"minDf out of range: $minDf")
     require(maxDfPercent >= 1 && maxDfPercent <= 100,
       s"maxDfPercent out of range: $maxDfPercent")
@@ -79,7 +73,7 @@ object Search {
       .crossJoin(broadcast(n))
       .filter(col("df") >= minDf && col("df") * 100 <= col("n") * maxDfPercent)
       .select(col("term"), col("df"))
-    tf.join(if (broadcastVocab) broadcast(vocab) else vocab, "term")
+    tf.join(broadcast(vocab), "term")
       .select(col("term"), col("doc_id"), col("tf"), col("df"))
   }
 

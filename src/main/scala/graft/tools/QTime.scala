@@ -5,11 +5,14 @@ package graft.tools
   * one regressed query on a quiet box or A/B-ing a plan change quickly.
   * Same session shape and noop-write measurement as Bench's phase 3.
   *
-  * Every named leaf first runs once untimed: a leaf's cold run (class
-  * loading, codegen, JIT) ran 1.4–3.3× its warm reps at sf0.01 and would
-  * otherwise sit in its median and its min. The timed reps then go
-  * round-robin (rep 1 of every leaf, then rep 2, ...), so a slow spell on
-  * a shared box spreads over all leaves instead of landing on one.
+  * The named leaves first run in untimed round-robin rounds until a
+  * round's total is within 5 % of the previous round's, for at most 6
+  * rounds: a leaf's cold run (class loading, codegen, JIT) ran 1.4–3.3× its
+  * warm reps at sf0.01, and after one warm-up round the reps still fell for
+  * 3–5 rounds while the driver's planner JIT warmed. The round totals print
+  * on one `QTIME warmup` line. The timed reps then go round-robin (rep 1 of
+  * every leaf, then rep 2, ...), so a slow spell on a shared box spreads
+  * over all leaves instead of landing on one.
   *
   * Usage: runMain graft.tools.QTime <sfDir> <reps> <query>[,query...]
   */
@@ -26,7 +29,11 @@ object QTime {
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
-    names.foreach(once) // warm-up, untimed
+    def round(): Double = names.map(once).sum
+    val warmup = scala.collection.mutable.ArrayBuffer(round(), round())
+    def settled = math.abs(warmup.last - warmup.init.last) <= 0.05 * warmup.init.last
+    while (warmup.size < 6 && !settled) warmup += round()
+    println(warmup.map(r => f"$r%.2f").mkString("QTIME warmup rounds=[", ",", "]"))
     val runsByLeaf = (1 to reps).map(_ => names.map(once)).transpose
     names.zip(runsByLeaf).foreach { case (name, runs) =>
       // Bench's median (even rep counts average the middle two) — a QTime

@@ -4,7 +4,7 @@ import graft.config.PipelineConfig
 import graft.model.Transcripts
 import graft.parse.GrokParser
 import graft.route.Router
-import graft.limit.SinglePassLimit
+import graft.limit.{LimitRule, SinglePassLimit}
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 
@@ -64,6 +64,16 @@ class ConfigSpec extends SparkSpec {
         |    throughput: 1KB
         |    action: fallback
         |""".stripMargin))
+    intercept[IllegalArgumentException](PipelineConfig.fromYaml(
+      """routes:
+        |  - sink: a
+        |    predicate: "role = 'x'"
+        |limits:
+        |  - sink: a
+        |    throughput: 1KB
+        |    average_over: 0
+        |    action: discard
+        |""".stripMargin))
     // limit and fallback sinks follow the same name rule as route sinks
     Seq(("a/b", "c"), ("a", "c:d")).foreach { case (sink, fallback) =>
       intercept[IllegalArgumentException](PipelineConfig.fromYaml(
@@ -77,6 +87,20 @@ class ConfigSpec extends SparkSpec {
            |    fallback: "$fallback"
            |""".stripMargin))
     }
+  }
+
+  test("a misconfigured limit rule fails when it is built, before any Spark job") {
+    // each used to surface only in the limiter's verdict step, after the
+    // whole map stage ran (or, for average_over 0, never: 0/0 never breaches)
+    def rejects(rule: => LimitRule, msg: String): Unit =
+      assert(intercept[IllegalArgumentException](rule).getMessage.contains(msg))
+    rejects(LimitRule("sink_search", 50, 1, "fallback", None), "needs a fallback sink")
+    rejects(LimitRule("sink_search", 50, 1, "explode", None), "action must be")
+    rejects(LimitRule("sink_search", 50, 0, "discard", None), "average_over")
+    rejects(LimitRule("sink_search", -1, 1, "discard", None), "negative bytes")
+    // the valid forms still build: alert and discard need no fallback sink
+    LimitRule("sink_search", 50, 1, "alert", None)
+    LimitRule("sink_search", 0, 3, "fallback", Some("sink_fallback"))
   }
 
   test("YAML-configured routing matches the programmatic default rules") {

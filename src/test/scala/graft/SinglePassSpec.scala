@@ -173,18 +173,49 @@ class SinglePassSpec extends SparkSpec {
     assert(canon(got) === canon(df))
   }
 
-  test("whole-hour TZ guard: modern whole-hour zones pass, half-hour eras/rules reject") {
-    def accepts(tz: String): Boolean =
-      try Session.withConf(spark, "spark.sql.session.timeZone" -> tz) {
-        SinglePassLimit.assertWholeHourTz(spark); true
-      } catch { case _: IllegalArgumentException => false }
-    assert(accepts("UTC"))
-    // pre-1900 LMT transitions (−4:56:02 / +9:18:59) must NOT trip the
-    // guard — every geographic zone has one, and no epoch row feels it
-    assert(accepts("America/New_York"), "pre-epoch LMT offset wrongly rejected")
-    assert(accepts("Asia/Tokyo"))
-    assert(!accepts("Asia/Kolkata"), "current +5:30 must reject")
-    assert(!accepts("Asia/Singapore"), "historic post-epoch +7:30 (until 1982) must reject")
-    assert(!accepts("Australia/Lord_Howe"), "recurring +10:30 standard time must reject")
+  /** Traffic on both sides of :30 UTC boundaries, stamped from UTC
+    * instants: a limiter that bucketed in the session zone would split
+    * each of these epoch hours in two, and neither half breaches alone. */
+  private def acrossHalfHours: DataFrame = {
+    def at(utc: String, n: Int, textLen: Int, sink: String): Seq[RoutedTurn] =
+      (0 until n).map(i => RoutedTurn(s"conv-$sink-$utc-$i", i, "user", "x" * textLen,
+        "search", Timestamp.from(java.time.Instant.parse(utc)), sink))
+    (at("1969-12-31T23:10:00Z", 2, 20, "sink_search") ++ // epoch hour −1: 80 > 50
+      at("1969-12-31T23:50:00Z", 2, 20, "sink_search") ++
+      at("1970-01-01T00:20:00Z", 1, 10, "sink_search") ++ // hour 0: 10, kept
+      // Asia/Singapore sat at +7:30 until 1982
+      at("1975-06-01T00:15:00Z", 2, 20, "sink_search") ++ // hour 47448: 80 > 50
+      at("1975-06-01T00:45:00Z", 2, 20, "sink_search") ++
+      // July: Australia/Lord_Howe on standard time, +10:30
+      at("2024-07-01T00:10:00Z", 2, 20, "sink_search") ++ // hour 477720: 80 > 50
+      at("2024-07-01T00:50:00Z", 2, 20, "sink_search") ++
+      at("2024-07-01T00:40:00Z", 2, 30, "sink_fallback") ++ // 60 + 80 rerouted > 120
+      at("2024-07-01T01:20:00Z", 1, 10, "sink_search") ++ // hour 477721: 10, kept
+      at("2024-07-01T02:05:00Z", 3, 20, "sink_search") ++ // hour 477722: 60 > 50
+      at("2024-07-01T00:35:00Z", 2, 10, "sink_a")).toDF()
+  }
+
+  test("single-pass and two-pass limiters agree in every session zone") {
+    // (original sink, epoch hour) → final sink; null = discarded
+    val changed = Map[(String, Long), String](
+      ("sink_search", -1L) -> "sink_fallback", ("sink_search", 47448L) -> "sink_fallback",
+      ("sink_search", 477720L) -> null, ("sink_search", 477722L) -> "sink_fallback",
+      ("sink_fallback", 477720L) -> null)
+    for (tz <- Seq("Asia/Kolkata", "Australia/Lord_Howe", "Asia/Singapore"))
+      Session.withConf(spark, "spark.sql.session.timeZone" -> tz) {
+        val input = acrossHalfHours
+        val (twoPass, dropped) = RateLimit.apply(input, rules)
+        val (survived, verdicts) = SinglePassLimit.limitWithCells(input, rules)
+        assert(canon(survived) === canon(twoPass), tz)
+        val breached = RateLimit.breachVerdicts(input, rules.head)
+          .filter(col("breached")).collect().map(_.getAs[Long]("bucket")).toSet
+        assert(breached === Set(-1L, 47448L, 477720L, 477722L), tz)
+        val cells = verdicts.cells
+        assert(cells.filter(c => c.curSink != c.origSink)
+          .map(c => (c.origSink, c.bucketKey) -> c.curSink).toMap === changed, tz)
+        // 4 rerouted then discarded + 2 organic fallback rows in hour 477720
+        assert(dropped.count() === 6L, tz)
+        assert(cells.filter(_.curSink == null).map(_.rows).sum === 6L, tz)
+      }
   }
 }

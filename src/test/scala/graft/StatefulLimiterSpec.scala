@@ -128,4 +128,24 @@ class StatefulLimiterSpec extends SparkSpec {
     assert(all("b00") === true, s"state must persist across batches: $all")
     assert(!all("a00") && !all("a01"), s"got $all")
   }
+
+  test("hours before 1970 round toward minus infinity, as the batch limiters' do") {
+    // 23:30Z on 1969-12-31 is epoch hour −1 and 00:30Z on 1970-01-01 is hour
+    // 0: each 40-byte row fits the 60-byte bucket alone, both together do not
+    val rows = Seq("1969-12-31T23:30:00Z", "1970-01-01T00:30:00Z").zipWithIndex.map {
+      case (utc, i) => RoutedTurn(s"e$i", i, "user", "x" * 40, "search",
+        java.sql.Timestamp.from(java.time.Instant.parse(utc)), "sink_search")
+    }
+    val dir = Files.createTempDirectory("graft-slim5").toString
+    rows.toDF().write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(rows.toDF().schema).parquet(dir)
+    val limited = StatefulLimiter.limitStream(stream,
+      Seq(LimitRule("sink_search", 60, 1, "discard", None)))
+    val q = limited.writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("slim5_out").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val out = spark.table("slim5_out").collect()
+      .map(r => r.getAs[String]("conv_id") -> r.getAs[Boolean]("dropped")).toMap
+    assert(out === Map("e0" -> false, "e1" -> false))
+  }
 }

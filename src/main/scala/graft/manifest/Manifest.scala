@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import Records.{SinkEntry, SnapshotRecord, StreamMarker}
+import Records.{RunRecord, SinkEntry, SnapshotRecord, StreamMarker}
 
 /** Lineage/metrics manifest with write-then-commit semantics + idempotent resume.
   *
@@ -23,7 +23,9 @@ import Records.{SinkEntry, SnapshotRecord, StreamMarker}
   *                                     concurrency, records never rewritten)
   * Every record is a [[Records]] case class written by [[Records.writeAtomic]]
   * (the snapshot claim keeps its own hard-link protocol) and read back by the
-  * tolerant [[Records.readAll]].
+  * tolerant [[Records.readAll]]: this class and [[Records]] are the only code
+  * that knows the layout, and every reader (the frames here, [[MetricsHttp]],
+  * [[graft.pipeline.Pipeline.run]]'s result) reads the typed records.
   * On a real cluster the same protocol maps onto Iceberg snapshot commits —
   * the unit of commit is a sink partition, the manifest is the catalog.
   *
@@ -47,11 +49,16 @@ final class Manifest(root: String) {
 
   def sinkPath(sink: String): String = s"$root/sinks/$sink"
 
-  /** The committed sinks' current-pointer entries, read on the driver:
-    * (sink, row_count, bytes, convs), sorted by sink. */
-  def sinkEntries(): Seq[(String, Long, Long, Long)] =
-    Records.readAll[SinkEntry](manifestDir, Records.isSinkEntry)
-      .map(e => (e.sink, e.rowCount, e.bytes, e.convs)).sortBy(_._1)
+  /** The committed sinks' current-pointer entries, in file-name order. */
+  def sinkEntries(): Seq[SinkEntry] = Records.readAll[SinkEntry](manifestDir, Records.isSinkEntry)
+
+  /** Every recorded run's counters, in file-name order. */
+  def runRecords(): Seq[RunRecord] = Records.readAll[RunRecord](manifestDir, Records.isRunRecord)
+
+  /** Replaces the run's record atomically: the metrics sidecar may read it
+    * at any moment. */
+  def writeRun(record: RunRecord): Unit =
+    Records.writeAtomic(manifestDir, Records.runRecordName(record.runId), record)
 
   /** Commit a sink whose data was already staged: [[graft.pipeline.Pipeline.run]]
     * writes the single-pass limiter's survivors once, partitioned by sink,
@@ -150,25 +157,14 @@ final class Manifest(root: String) {
     if (!Files.isDirectory(snapshotDir)) return 0L
     graft.util.Fs.listDir(snapshotDir)
       .map(_.getFileName.toString)
-      .collect { case n if Records.isSnapshot(n) =>
-        n.stripPrefix("snap-").stripSuffix(".json").toLong }
+      .collect { case n if Records.isSnapshot(n) => Records.snapshotId(n) }
       .foldLeft(0L)(math.max)
   }
 
   /** The snapshot log as a DataFrame (time travel / audit: every commit ever
     * made, in order — `<sink>.json` current pointers are its projection).
-    * An empty log reads as an empty DataFrame with the record schema, like
-    * every sibling accessor (committedSinks/currentSnapshotId on a fresh
-    * root), not a PATH_NOT_FOUND error. */
-  def snapshots(spark: SparkSession): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "snapshot_id LONG, parent_id LONG, run_id STRING, sink STRING, " +
-        "op STRING, row_count LONG, bytes LONG, convs LONG, committed_ts STRING")
-    if (!Files.isDirectory(snapshotDir))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).json(snapshotDir.toString)
-  }
+    * An empty log reads as an empty DataFrame with the record's columns. */
+  def snapshots(spark: SparkSession): DataFrame = Records.frame(spark, snapshotLog())
 
   // ---- retention (the expire-snapshots half of the lakehouse contract) ----
 
@@ -177,14 +173,14 @@ final class Manifest(root: String) {
   private val RetentionFile = "_retention.json"
   private def retentionPath = snapshotDir.resolve(RetentionFile)
 
-  /** Current retention state (underscore-prefixed, so it is invisible to the
-    * path-based snapshot readers and [[snapshots]]). */
+  /** Current retention state (underscore-prefixed, so the snapshot log's
+    * name filter never reads it as a record). */
   def retention(): Retention =
     if (!Files.exists(retentionPath)) Retention.empty
     else Records.mapper.readValue(retentionPath.toFile, classOf[Retention])
 
   /** Every parseable commit-log record; mid-write records are skipped. */
-  private def snapshotLog(): Seq[SnapshotRecord] =
+  def snapshotLog(): Seq[SnapshotRecord] =
     Records.readAll[SnapshotRecord](snapshotDir, Records.isSnapshot)
 
   /** Retention sweep over the append-only snapshot log — the batch-side
@@ -410,11 +406,11 @@ final class Manifest(root: String) {
   def sinkRows(spark: SparkSession, sink: String): DataFrame =
     spark.read.parquet(sinkPath(sink)).withColumn("sink", lit(sink))
 
-  /** The lineage/metrics records as a queryable DataFrame (reference analog:
-    * the JSON monitoring API, web/api/targets.go:43-121 — here it's "plain
-    * SQL over the manifest table", SURVEY.md §2.7 A4). */
-  def entries(spark: SparkSession): DataFrame =
-    spark.read.json(manifestDir.toString)
+  /** The committed sinks' entries as a queryable DataFrame (reference
+    * analog: the JSON monitoring API, web/api/targets.go:43-121 — here it's
+    * "plain SQL over the manifest table", SURVEY.md §2.7 A4). A root with no
+    * entries reads as an empty frame with the same columns. */
+  def entries(spark: SparkSession): DataFrame = Records.frame(spark, sinkEntries())
 
   /** Row-level resume: drop input rows whose (conv_id, turn_idx, sink) is
     * already present in committed sink output — a left ANTI join, the exact

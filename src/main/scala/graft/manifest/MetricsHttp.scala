@@ -2,24 +2,22 @@ package graft.manifest
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.Paths
 
-import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import Records.{SinkEntry, isRunRecord, isSinkEntry, isSnapshot}
+import Records.SinkCounters
 
 /** Minimal live-metrics HTTP surface over the manifest directory — the A4
   * analog of the reference's JSON monitoring API (web/api/api.go:8-14,
   * targets.go:43-121) and Prometheus endpoint (web/server.go:26-33).
   *
   * The engine's run state IS the manifest: per-sink commit entries
-  * (rows/bytes/convs) plus the per-run `_metrics_*.json` counters that
+  * (rows/bytes/convs) plus the run records that
   * [[graft.pipeline.Pipeline.run]] persists from the limiter's verdict cells
   * (in/out/dropped per sink). Serving them requires no running SparkSession
-  * — the JDK's built-in HttpServer reads the JSON files on demand, so the
-  * endpoint can outlive (or predate) any job, exactly like the reference's
-  * sidecar web server.
+  * — the JDK's built-in HttpServer reads the typed records through
+  * [[Manifest]] on demand, so the endpoint can outlive (or predate) any job,
+  * exactly like the reference's sidecar web server.
   *
   * Routes:
   *   GET /sinks        → JSON array of committed-sink manifest entries
@@ -42,14 +40,10 @@ import Records.{SinkEntry, isRunRecord, isSinkEntry, isSnapshot}
   */
 final class MetricsHttp(root: String, port: Int,
     spark: Option[org.apache.spark.sql.SparkSession] = None) {
-  private val manifestDir = Paths.get(root, "_manifest")
-  private val snapshotDir = Paths.get(root, "_snapshots")
+  private val manifest = new Manifest(root)
   private var server: Option[HttpServer] = None
 
-  /** The parseable records of `dir` as one JSON array; a file another
-    * process is mid-writing, or a crash left truncated, is skipped. */
-  private def listJson(keep: String => Boolean, dir: java.nio.file.Path = manifestDir): String =
-    Records.mapper.writeValueAsString(Records.readAll[JsonNode](dir, keep))
+  private def json(value: AnyRef): String = Records.mapper.writeValueAsString(value)
 
   /** Single response writer shared by every route. */
   private def respond(ex: HttpExchange, code: Int, payload: String, ct: String): Unit = {
@@ -63,7 +57,7 @@ final class MetricsHttp(root: String, port: Int,
   /** A non-200 answer with a JSON error body. */
   private final class HttpError(val code: Int, msg: String) extends Exception(msg)
 
-  private def errorJson(msg: String): String = Records.mapper.writeValueAsString(Map("error" -> msg))
+  private def errorJson(msg: String): String = json(Map("error" -> msg))
 
   /** The one handler behind every route. A monitoring sidecar degrades, it
     * never drops connections: an [[HttpError]] is answered with its code, any
@@ -111,7 +105,7 @@ final class MetricsHttp(root: String, port: Int,
     def counter(name: String, help: String,
         rows: Seq[(String, Long)], label: String = "sink"): Unit =
       metric(name, help, "counter", rows, label)
-    val entries = Records.readAll[SinkEntry](manifestDir, isSinkEntry)
+    val entries = manifest.sinkEntries()
     counter("graft_sink_rows_total", "Rows committed per sink",
       entries.map(e => e.sink -> e.rowCount))
     counter("graft_sink_bytes_total", "Text bytes committed per sink",
@@ -121,39 +115,21 @@ final class MetricsHttp(root: String, port: Int,
     metric("graft_sink_convs", "Distinct conversations committed per sink",
       "gauge", entries.map(e => e.sink -> e.convs), "sink")
 
-    val runs = Records.readAll[JsonNode](manifestDir, isRunRecord)
+    val runs = manifest.runRecords()
     sb ++= s"# HELP graft_runs_total Completed pipeline runs\n" +
       s"# TYPE graft_runs_total counter\ngraft_runs_total ${runs.size}\n"
-    // per-sink limiter counters summed across runs
-    val perSink = scala.collection.mutable.SortedMap[String, Array[Long]]()
-    val fields = Seq("in_rows", "in_bytes", "out_rows", "out_bytes",
-      "dropped_rows", "dropped_bytes")
-    runs.foreach { r =>
-      val ps = r.get("per_sink")
-      if (ps != null) ps.properties().forEach { e =>
-        val acc = perSink.getOrElseUpdate(e.getKey, new Array[Long](fields.size))
-        fields.zipWithIndex.foreach { case (f, i) =>
-          // a run file from an older build may lack a field — scrape the rest
-          acc(i) += Option(e.getValue.get(f)).map(_.asLong).getOrElse(0L) }
-      }
-    }
-    fields.zipWithIndex.foreach { case (f, i) =>
+    // per-sink limiter counters summed across runs, one series per field
+    val perSink = runs.flatMap(_.perSink).groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .sortBy(_._1).map { case (sink, c) => sink -> Records.counters(c).toMap }
+    Records.counters(SinkCounters()).foreach { case (f, _) =>
       counter(s"graft_sink_${f}_total", s"Limiter-observed $f per sink across runs",
-        perSink.toSeq.map { case (s, a) => s -> a(i) })
+        perSink.map { case (sink, c) => sink -> c(f) })
     }
     // per-stage counters summed across runs
-    val stages = scala.collection.mutable.SortedMap[String, Long]()
-    runs.foreach { r =>
-      val st = r.get("stages")
-      if (st != null) st.properties().forEach { e =>
-        e.getValue.properties().forEach { f =>
-          val k = s"${e.getKey}_${f.getKey}"
-          stages(k) = stages.getOrElse(k, 0L) + f.getValue.asLong
-        }
-      }
-    }
+    val stages = runs.flatMap(r => Records.counters(r.stages))
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
     counter("graft_stage_rows_total", "Per-stage observed counters across runs",
-      stages.toSeq, label = "stage")
+      stages, label = "stage")
     sb.result()
   }
 
@@ -163,7 +139,7 @@ final class MetricsHttp(root: String, port: Int,
     * heartbeats, so this is a read, not a fan-out of HTTP calls. */
   private def clusterBody(ex: HttpExchange): String = {
     val node = params(ex).get("node")
-    Records.mapper.writeValueAsString(spark match {
+    json(spark match {
       case None =>
         Map("mode" -> "sidecar", "error" -> "no live SparkSession attached",
           "executors" -> Seq.empty)
@@ -195,8 +171,8 @@ final class MetricsHttp(root: String, port: Int,
     * context is a 404 (the JDK server routes unmatched paths here). */
   private def indexBody(ex: HttpExchange): String = {
     if (ex.getRequestURI.getPath != "/") throw new HttpError(404, "not found")
-    val entries = Records.readAll[SinkEntry](manifestDir, isSinkEntry)
-    val runs = Records.readAll[JsonNode](manifestDir, isRunRecord)
+    val entries = manifest.sinkEntries()
+    val runs = manifest.runRecords()
     val sinkRows = entries.map { e =>
       s"<tr><td>${htmlEsc(e.sink)}</td>" +
         s"<td>${e.rowCount}</td><td>${e.bytes}</td><td>${e.convs}</td></tr>"
@@ -230,14 +206,15 @@ final class MetricsHttp(root: String, port: Int,
   def start(): Int = {
     val s = HttpServer.create(new InetSocketAddress(port), 0)
     s.createContext("/", handler(indexBody, contentType = "text/html; charset=utf-8"))
-    s.createContext("/sinks", handler(_ => listJson(isSinkEntry)))
-    s.createContext("/runs", handler(_ => listJson(isRunRecord)))
+    // the parseable records only: a file another process is mid-writing, or
+    // a crash left truncated, is skipped
+    s.createContext("/sinks", handler(_ => json(manifest.sinkEntries())))
+    s.createContext("/runs", handler(_ => json(manifest.runRecords())))
     s.createContext("/healthz", handler(_ => "\"ok\""))
-    s.createContext("/snapshots", handler(_ => listJson(isSnapshot, dir = snapshotDir)))
+    s.createContext("/snapshots", handler(_ => json(manifest.snapshotLog())))
     // the expire-snapshots state: the horizon below which pinned reads fail
     // fast, and the per-sink compacted bases (Manifest.expireSnapshots)
-    s.createContext("/retention",
-      handler(_ => Records.mapper.writeValueAsString(new Manifest(root).retention())))
+    s.createContext("/retention", handler(_ => json(manifest.retention())))
     s.createContext("/metrics",
       handler(_ => prometheusBody(), contentType = "text/plain; version=0.0.4"))
     s.createContext("/cluster", handler(clusterBody))

@@ -3,14 +3,17 @@ package graft.manifest
 import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper,
   PropertyNamingStrategies, SerializationFeature}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The manifest's record format, in one place: the typed records, the one
-  * JSON mapper, the one atomic writer and the one tolerant reader. Field
-  * names are the camelCase spelling of the snake_case keys on disk.
+  * JSON mapper, the one atomic writer, the one tolerant reader and the one
+  * conversion to a DataFrame. Field names are the camelCase spelling of the
+  * snake_case keys on disk.
   *
   * Layout under an output root:
   *   _manifest/<sink>.json                [[SinkEntry]]
@@ -72,11 +75,13 @@ object Records {
 
   def now(): String = java.time.Instant.now().toString
 
+  private val snakeCase = new PropertyNamingStrategies.SnakeCaseStrategy
+
   /** The one JSON mapper: case classes as snake_case objects, map keys in
     * sorted order, unknown fields ignored on read. Thread-safe once built. */
   val mapper: ObjectMapper = new ObjectMapper()
     .registerModule(DefaultScalaModule)
-    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .setPropertyNamingStrategy(snakeCase)
     .configure(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)
     .configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
 
@@ -115,8 +120,29 @@ object Records {
       }
   }
 
+  /** `records` as a DataFrame whose columns are the keys on disk, in field
+    * order, with the field types; built on the driver (no Spark job, no
+    * schema inference), and empty records give the same columns. */
+  def frame[T <: Product : TypeTag](spark: SparkSession, records: Seq[T]): DataFrame = {
+    val df = spark.createDataFrame(records)
+    df.toDF(df.columns.toSeq.map(snakeCase.translate): _*)
+  }
+
+  /** A counter record's numbers as (key, value) in field order; a nested
+    * record's keys are prefixed with its own: `Stages` gives `scan_rows`,
+    * `parse_rows_ok`, ... */
+  def counters(record: Product): Seq[(String, Long)] =
+    record.productElementNames.map(snakeCase.translate).zip(record.productIterator)
+      .flatMap {
+        case (k, v: Long) => Seq(k -> v)
+        case (k, nested: Product) => counters(nested).map { case (f, v) => s"${k}_$f" -> v }
+      }.toSeq
+
   def isSinkEntry(name: String): Boolean = name.endsWith(".json") && !name.startsWith("_")
+  def runRecordName(runId: String): String = s"_metrics_$runId.json"
   def isRunRecord(name: String): Boolean = name.startsWith("_metrics_") && name.endsWith(".json")
   def isSnapshot(name: String): Boolean = name.startsWith("snap-") && name.endsWith(".json")
   def snapshotName(id: Long): String = f"snap-$id%08d.json"
+  /** The inverse of [[snapshotName]]. */
+  def snapshotId(name: String): Long = name.stripPrefix("snap-").stripSuffix(".json").toLong
 }

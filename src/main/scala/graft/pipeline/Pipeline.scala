@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Transcripts
 import graft.parse.GrokParser
@@ -143,51 +146,47 @@ object Pipeline {
     survivors.write.mode("overwrite").partitionBy("sink").parquet(staging)
     val cells = verdicts.cells
 
-    // exact per-final-sink commit stats: rows/bytes from the cells the chain
-    // left in each sink; distinct convs from the staged conv_id column alone
-    val stats: Map[String, (Long, Long)] = cells.filter(_.curSink != null)
-      .groupMapReduce(_.curSink)(c => (c.rows, c.bytes)) { case ((r1, b1), (r2, b2)) =>
-        (r1 + r2, b1 + b2)
-      }
+    // The per-sink in/out/dropped counters come from the limiter's verdict
+    // cells, i.e. they were observed DURING the run with zero extra passes —
+    // the reference's live per-connection Stats (monitoring/stats.go:10-118,
+    // served at web/api/targets.go:43-121). A sink's out counters are its
+    // exact commit stats: the rows and bytes the chain left in it.
+    val perSink = cells.flatMap { c =>
+      Seq(c.origSink -> SinkCounters(inRows = c.rows, inBytes = c.bytes),
+        if (c.curSink == null) c.lastSink -> SinkCounters(droppedRows = c.rows, droppedBytes = c.bytes)
+        else c.curSink -> SinkCounters(outRows = c.rows, outBytes = c.bytes))
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+    val staged = perSink.filter(_._2.outRows > 0)
+    // distinct convs from the staged conv_id column alone
     val convs: Map[String, Long] = spark.read.schema("conv_id STRING, sink STRING")
       .parquet(staging)
       .groupBy(col("sink")).agg(countDistinct(col("conv_id")))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     var written = 0
-    stats.keys.toSeq.sorted.filterNot(already.contains).foreach { sink =>
+    staged.keys.toSeq.sorted.filterNot(already.contains).foreach { sink =>
       if (written < failAfterSinks) {
-        val (rows, bytes) = stats(sink)
-        manifest.promoteAndCommit(sink,
-          java.nio.file.Paths.get(staging, s"sink=$sink"), runId, rows, bytes, convs(sink))
+        val out = staged(sink)
+        manifest.promoteAndCommit(sink, java.nio.file.Paths.get(staging, s"sink=$sink"), runId,
+          out.outRows, out.outBytes, convs(sink))
         written += 1
       }
     }
 
-    // Persist the observed run metrics next to the lineage entries (A1/A2).
-    // The per-sink in/out/dropped counters come from the limiter's verdict
-    // cells, i.e. they were observed DURING the run with zero extra passes —
-    // the reference's live per-connection Stats (monitoring/stats.go:10-118,
-    // served at web/api/targets.go:43-121) as a run artifact.
-    val perSink = cells.flatMap { c =>
-      Seq(c.origSink -> SinkCounters(inRows = c.rows, inBytes = c.bytes),
-        if (c.curSink == null) c.lastSink -> SinkCounters(droppedRows = c.rows, droppedBytes = c.bytes)
-        else c.curSink -> SinkCounters(outRows = c.rows, outBytes = c.bytes))
-    }.groupMapReduce(_._1)(_._2)(_ + _)
-    // per-stage counters (sources/workers parity), observed on the staging
-    // write; see the conservation invariants at [[observedFanOut]]
+    // Persist the observed run metrics next to the lineage entries (A1/A2):
+    // the per-sink counters above, and the per-stage counters (sources/workers
+    // parity) observed on the staging write; see the conservation invariants
+    // at [[observedFanOut]]
     def n(o: Observation, field: String): Long = o.get(field).asInstanceOf[Long]
     val routedRows = cells.map(_.rows).sum
     val stages = Stages(ScanCounts(n(counters.scan, "rows")),
       ParseCounts(n(counters.parse, "rows_ok"), n(counters.parse, "rows_quarantined")),
       RouteCounts(n(counters.route, "rows_in"), n(counters.route, "rows_dead_letter"), routedRows))
-    // atomic: the metrics HTTP sidecar may scrape this file at any moment
-    Records.writeAtomic(java.nio.file.Paths.get(outRoot, "_manifest"), s"_metrics_$runId.json",
-      RunRecord(runId, routedRows, cells.map(_.bytes).sum, cells.map(_.origSink).distinct.length,
-        stages, perSink))
+    manifest.writeRun(RunRecord(runId, routedRows, cells.map(_.bytes).sum,
+      cells.map(_.origSink).distinct.length, stages, perSink))
 
     // drop the staging residue once every staged sink is committed
-    if (stats.keySet.subsetOf(new Manifest(outRoot).committedSinks()))
+    if (staged.keySet.subsetOf(manifest.committedSinks()))
       graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(staging))
 
     // Final per-sink aggregate FROM THE MANIFEST ENTRIES — the commit stats
@@ -195,7 +194,10 @@ object Pipeline {
     // sink's parquet here (the round-1 shape) would be a complete second
     // read of all written data at the 100 TB design point. The manifest IS
     // the aggregate: a few small JSON files, read on the driver.
-    import spark.implicits._
-    manifest.sinkEntries().toDF("sink", "turns", "bytes", "convs")
+    val rows = manifest.sinkEntries().sortBy(_.sink)
+      .map(e => Row(e.sink, e.rowCount, e.bytes, e.convs))
+    spark.createDataFrame(rows.asJava, ResultSchema)
   }
+
+  private val ResultSchema = StructType.fromDDL("sink STRING, turns LONG, bytes LONG, convs LONG")
 }

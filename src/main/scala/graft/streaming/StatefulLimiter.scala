@@ -67,7 +67,8 @@ object StatefulLimiter extends Serializable {
             val rule = ruleBySink.get(intoSink)
             // hour boundaries are whole millis, so millis bucket as micros do
             val b = RateLimit.bucket(row.ts.getTime * 1000L)
-            val bytes = row.text.getBytes("UTF-8").length.toLong
+            // a null text counts 0 bytes, as in both batch limiters
+            val bytes = if (row.text == null) 0L else row.text.getBytes("UTF-8").length.toLong
             rule match {
               case None =>
                 out += LimitedTurn(row.conv_id, row.turn_idx, row.role, row.text,

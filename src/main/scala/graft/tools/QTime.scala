@@ -10,7 +10,10 @@ package graft.tools
   * rounds: a leaf's cold run (class loading, codegen, JIT) ran 1.4–3.3× its
   * warm reps at sf0.01, and after one warm-up round the reps still fell for
   * 3–5 rounds while the driver's planner JIT warmed. The round totals print
-  * on one `QTIME warmup` line. The timed reps then go round-robin (rep 1 of
+  * on one `QTIME warmup` line, which ends `settled=false` when the cap was
+  * reached with the last two totals still more than 5 % apart: the reps
+  * that follow are still warming, so their medians sit above the settled
+  * time. The timed reps then go round-robin (rep 1 of
   * every leaf, then rep 2, ...), so a slow spell on a shared box spreads
   * over all leaves instead of landing on one.
   *
@@ -33,7 +36,7 @@ object QTime {
     val warmup = scala.collection.mutable.ArrayBuffer(round(), round())
     def settled = math.abs(warmup.last - warmup.init.last) <= 0.05 * warmup.init.last
     while (warmup.size < 6 && !settled) warmup += round()
-    println(warmup.map(r => f"$r%.2f").mkString("QTIME warmup rounds=[", ",", "]"))
+    println(warmup.map(r => f"$r%.2f").mkString("QTIME warmup rounds=[", ",", s"] settled=$settled"))
     val runsByLeaf = (1 to reps).map(_ => names.map(once)).transpose
     names.zip(runsByLeaf).foreach { case (name, runs) =>
       // Bench's median (even rep counts average the middle two) — a QTime

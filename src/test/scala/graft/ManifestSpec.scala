@@ -482,6 +482,23 @@ class ManifestSpec extends SparkSpec {
     assert(!Files.exists(parent.resolve("out")))
   }
 
+  test("entries on a root without sink entries is an empty frame with SinkEntry's columns") {
+    val columns = Seq("run_id" -> "StringType", "sink" -> "StringType",
+      "row_count" -> "LongType", "bytes" -> "LongType", "convs" -> "LongType",
+      "snapshot_id" -> "LongType", "committed_ts" -> "StringType")
+    // a fresh root, and what a run over empty input leaves: a run record only
+    val fresh = Files.createTempDirectory("graft-fresh").toString
+    val runOnly = Files.createTempDirectory("graft-run-only").toString
+    Records.writeAtomic(java.nio.file.Paths.get(runOnly, "_manifest"), "_metrics_empty.json",
+      Records.RunRecord("empty", 0L, 0L, 0, Records.Stages(Records.ScanCounts(0L),
+        Records.ParseCounts(0L, 0L), Records.RouteCounts(0L, 0L, 0L)), Map.empty))
+    Seq(fresh, runOnly).foreach { root =>
+      val e = new Manifest(root).entries(spark)
+      assert(e.dtypes.toSeq === columns, root)
+      assert(e.isEmpty, root)
+    }
+  }
+
   test("truncated records are skipped by every reader: HTTP routes, sweep, time travel") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-trunc").toString
@@ -498,6 +515,9 @@ class ManifestSpec extends SparkSpec {
         Records.RouteCounts(3L, 0L, 3L)),
       Map("s1" -> Records.SinkCounters(inRows = 3L, outRows = 3L))))
     Files.writeString(manifestDir.resolve("_metrics_x.json"), """{"run_id":"x","routed_ro""")
+    Records.writeAtomic(manifestDir, "s1.json",
+      Records.SinkEntry("good", "s1", 3L, 30L, 1L, 2L, "2026-01-01T00:00:00Z"))
+    Files.writeString(manifestDir.resolve("s2.json"), """{"run_id":"x","sink":"s2","row_co""")
     Files.writeString(snapDir.resolve("snap-00000000.json"),
       """{"snapshot_id":0,"parent_id":-1,"run_id":"stream-batch-9","sink":"s1","op":"stream_co""")
 
@@ -507,12 +527,22 @@ class ManifestSpec extends SparkSpec {
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       val runs = om.readTree(get2(port, "/runs"))
       assert(runs.size() === 1 && runs.get(0).get("run_id").asText() === "good")
+      val sinks = om.readTree(get2(port, "/sinks"))
+      assert(sinks.size() === 1 && sinks.get(0).get("sink").asText() === "s1")
       val snaps = om.readTree(get2(port, "/snapshots"))
       assert(snaps.size() === 2, snaps.toString)
       val prom = get2(port, "/metrics")
       assert(prom.contains("graft_runs_total 1\n"), prom)
       assert(prom.contains("graft_sink_in_rows_total{sink=\"s1\"} 3\n"), prom)
     } finally srv.stop()
+
+    // the Spark frames: the good records only, no `_corrupt_record` column
+    val entries = m.entries(spark)
+    assert(!entries.columns.contains("_corrupt_record"))
+    assert(entries.collect().map(_.getAs[String]("sink")).toSeq === Seq("s1"))
+    val snapFrame = m.snapshots(spark)
+    assert(!snapFrame.columns.contains("_corrupt_record"))
+    assert(snapFrame.collect().map(_.getAs[Long]("snapshot_id")).toSeq.sorted === Seq(1L, 2L))
 
     // the pin sees both committed batches; the truncated record names batch 9
     def ids(df: DataFrame): Set[Int] =

@@ -148,4 +148,22 @@ class StatefulLimiterSpec extends SparkSpec {
       .map(r => r.getAs[String]("conv_id") -> r.getAs[Boolean]("dropped")).toMap
     assert(out === Map("e0" -> false, "e1" -> false))
   }
+
+  test("a null text counts 0 bytes, as in the batch limiters") {
+    // 0 + 40 bytes fit the 60-byte bucket: both rows are admitted
+    val rows = Seq(null, "x" * 40).zipWithIndex.map { case (text, i) =>
+      RoutedTurn(s"n$i", i, "user", text, "search", t(14, i), "sink_search")
+    }
+    val dir = Files.createTempDirectory("graft-slim6").toString
+    rows.toDF().write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(rows.toDF().schema).parquet(dir)
+    val limited = StatefulLimiter.limitStream(stream,
+      Seq(LimitRule("sink_search", 60, 1, "discard", None)))
+    val q = limited.writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("slim6_out").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val out = spark.table("slim6_out").collect()
+      .map(r => r.getAs[String]("conv_id") -> r.getAs[Boolean]("dropped")).toMap
+    assert(out === Map("n0" -> false, "n1" -> false))
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.enrich.Enrichment
 import graft.limit.{RateLimit, SinglePassLimit}
 import graft.model.Transcripts
 import graft.pipeline.Pipeline
@@ -294,16 +293,17 @@ object E2eRunner {
     * the row count is read back afterwards, outside the timed window.
     *
     * Shape (reported as variant "v3" in the bench JSON): single-pass,
-    * shuffle-reuse — parse → route → ONE (sink,bkt,salt) exchange with the
-    * verdict sums on its map side and the verdicts applied above it
-    * (SinglePassLimit.limitReusingShuffle); plain parquet sink.
+    * shuffle-reuse — Pipeline.routable (parse → enrich) → route → ONE
+    * (sink,bkt,salt) exchange with the verdict sums on its map side and the
+    * verdicts applied above it (SinglePassLimit.limitReusingShuffle); plain
+    * parquet sink.
     */
   def e2e(spark: SparkSession, sfDir: String, outDir: String, mult: Int,
       salt: Int): (Double, Long) = {
     val turns = Transcripts.amplified(spark, sfDir, mult)
     val rules = RateLimit.defaultRules()
     val t0 = System.nanoTime()
-    val fanned = Router.fanOut(Enrichment.enrich(Pipeline.parsedProjected(turns), spark))
+    val fanned = Router.fanOut(Pipeline.routable(turns))
     SinglePassLimit.limitReusingShuffle(fanned, rules, saltBuckets = salt)
       .write.mode("overwrite").parquet(outDir)
     val sec = (System.nanoTime() - t0) / 1e9

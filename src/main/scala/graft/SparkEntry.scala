@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Transcripts
 import graft.parse.GrokParser
-import graft.enrich.Enrichment
 import graft.route.Router
+import graft.pipeline.Pipeline
 import graft.agg.SinkMetrics
 import graft.limit.{RateLimit, SinglePassLimit}
 import graft.dedup.{ExactDedup, MinHashLSH, NgramJaccard, SimHashDedup}
@@ -25,13 +25,14 @@ import graft.temporal.TemporalJoin
   */
 object SparkEntry {
 
-  // ---- shared stage composition (parse → enrich → route → fan-out) ----
+  // ---- shared stage composition (parse → route → fan-out) ----
   private def turns(s: SparkSession, dir: String): DataFrame =
     Transcripts.fromEvents(s, dir)
   private def parsedTurns(s: SparkSession, dir: String): DataFrame =
     GrokParser.parse(turns(s, dir))
+  /** No enrichment join: the default rules read no dim column (DESIGN.md). */
   private def routed(s: SparkSession, dir: String): DataFrame =
-    Router.fanOut(graft.pipeline.Pipeline.parsedProjected(turns(s, dir)))
+    Router.fanOut(parsedTurns(s, dir))
 
   // ---- shared derivations for the temporal-join queries ----
   /** 6 h — config-snapshot cadence for the as-of/range families. */
@@ -193,7 +194,7 @@ object SparkEntry {
     }),
     // P7: enrichment-driven redaction projection (redact=true tools masked)
     "q_redact" -> ((s, dir) =>
-      Enrichment.enrich(parsedTurns(s, dir), s)
+      Pipeline.routable(turns(s, dir))
         .select(col("conv_id"), col("turn_idx"),
           when(col("redact"), concat(lit("<redacted:"),
             octet_length(col("payload")).cast("string"), lit(">")))
@@ -230,7 +231,7 @@ object SparkEntry {
           floor(col("avg_bytes")).cast("long").as("avg_bytes_floor"))),
     // R1 broadcast enrich: per-(team, cost_class) rollup
     "q_enrich_agg" -> ((s, dir) =>
-      Enrichment.enrich(parsedTurns(s, dir), s)
+      Pipeline.routable(turns(s, dir))
         .groupBy(col("team"), col("cost_class"))
         .agg(count(lit(1)).as("n"), sum(col("dur_ms")).as("total_dur"))),
     // L1: tumbling per-(sink, bucket) byte sums

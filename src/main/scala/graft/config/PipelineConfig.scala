@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions.expr
 import graft.pipeline.Pipeline
 import graft.route.RouteRule
 import graft.limit.LimitRule
-import graft.manifest.Records
 
 /** Declarative YAML pipeline config — the engine's "query language", the
   * direct translation of the reference's routing YAML
@@ -61,24 +60,18 @@ object PipelineConfig {
     def str(e: scala.collection.mutable.Map[String, Object], k: String): String =
       e.getOrElse(k, throw new IllegalArgumentException(s"missing '$k' in $e")).toString
 
-    val routes = asList("routes").map { e =>
-      val sink = str(e, "sink")
-      Records.requireName("sink", sink) // F5
-      RouteRule(sink, expr(str(e, "predicate")))
-    }
+    // RouteRule checks its sink name (F5)
+    val routes = asList("routes").map(e => RouteRule(str(e, "sink"), expr(str(e, "predicate"))))
     require(routes.nonEmpty, "config needs at least one route")
 
-    // LimitRule checks its action, fallback sink and window (F5)
+    // LimitRule checks its action, sink names and window (F5)
     val limits = asList("limits").map { e =>
-      val fallback = e.get("fallback").map(_.toString)
-      val sink = str(e, "sink")
-      (sink +: fallback.toSeq).foreach(Records.requireName("sink", _)) // F5
       LimitRule(
-        sink = sink,
+        sink = str(e, "sink"),
         bytesPerBucket = parseBytes(str(e, "throughput")),
         avgOverBuckets = e.get("average_over").map(_.toString.toInt).getOrElse(1),
         action = str(e, "action"),
-        fallbackSink = fallback)
+        fallbackSink = e.get("fallback").map(_.toString))
     }
 
     val salt = m.get("salt_buckets").map(_.toString.toInt).getOrElse(32)

@@ -151,10 +151,7 @@ final case class CellTapExec(sink: Attribute, ts: Attribute, text: Attribute,
       }
       it.map { row =>
         if (row.isNullAt(iTs))
-          throw new IllegalArgumentException(
-            "limitReusingShuffle requires non-null ts (the routed stream's " +
-              "source envelope always sets it); rows needing null-bucket " +
-              "semantics must use the two-pass RateLimit.apply")
+          throw new IllegalArgumentException(RateLimit.NullTs)
         rowsMetric += 1
         val bucket = RateLimit.bucket(row.getLong(iTs))
         val buckets = sinks(row.getUTF8String(iSink))

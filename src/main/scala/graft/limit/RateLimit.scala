@@ -40,6 +40,7 @@ final case class LimitRule(
     s"fallback action on $sink needs a fallback sink")
   require(avgOverBuckets >= 1, s"average_over must be >= 1 bucket: $avgOverBuckets")
   require(bytesPerBucket >= 0, s"negative bytes per bucket: $bytesPerBucket")
+  (sink +: fallbackSink.toSeq).foreach(graft.manifest.Records.requireName("sink", _))
 }
 
 object RateLimit {
@@ -65,6 +66,10 @@ object RateLimit {
     * double quotient is exact for every representable second, so the value
     * equals [[bucket]]'s. */
   def bucketCol(ts: Column): Column = floor(unix_timestamp(ts) / 3600)
+
+  /** Every limiter's refusal of a null `ts`, which has no [[bucket]]. */
+  val NullTs: String = "the rate limiter requires non-null ts " +
+    "(the routed stream's source envelope always sets it)"
 
   /** One verdict cell: the byte volume of one (original sink, bucket), with
     * the current/last sink mutated by [[runChain]]. `bucketKey` is the
@@ -185,6 +190,7 @@ object RateLimit {
       s"rate-limit verdict aggregate exceeds $maxVerdictCells (sink × bucket) cells — " +
         "bucket granularity is too fine for driver-side verdicts; coarsen bucketCol " +
         "or raise maxVerdictCells")
+    require(!collected.exists(_.isNullAt(1)), NullTs)
     val cells = collected
       .map(r => Cell(r.getString(0), r.getLong(1), r.getString(0), r.getString(0), r.getLong(2)))
 

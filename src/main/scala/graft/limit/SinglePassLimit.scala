@@ -69,10 +69,10 @@ object SinglePassLimit {
     *
     * Contract: `routed` carries the standard columns with non-null `ts`
     * (the routed stream always does — `ts` comes from the source envelope);
-    * a null ts fails fast in the map task rather than silently
-    * misbucketing into epoch 0. A null `text` counts as 0 bytes, as
-    * `octet_length` sums do. The two-pass RateLimit.apply remains the path
-    * of record for inputs needing null-bucket semantics or the dropped set. */
+    * a null ts fails fast in the map task with [[RateLimit.NullTs]], as in
+    * every limiter, rather than silently misbucketing into epoch 0. A null
+    * `text` counts as 0 bytes, as `octet_length` sums do. The two-pass
+    * RateLimit.apply remains the path of the dropped set. */
   def limitWithCells(routed: DataFrame, rules: Seq[LimitRule],
       saltBuckets: Int = 32, maxVerdictCells: Int = 4 << 20): (DataFrame, Verdicts) = {
     import org.apache.spark.sql.graftbridge.Bridge

@@ -45,17 +45,15 @@ object Pipeline {
       saltBuckets: Int = 32
   )
 
-  /** parse → project, with no exchange: the parse under [[run]] and under
-    * every routed SparkEntry query. The pipeline needs only `level` from the
-    * parse (routing predicate + quarantine flag), so the other parsed fields
-    * are dropped here. Grok runs once per row only because the route
-    * references to `level` collapse into ONE Project, where whole-stage
-    * codegen's subexpression elimination evaluates the regex once
-    * (PlanShapeSpec asserts this on the shipped plan and the routed leaves). */
-  def parsedProjected(turns: DataFrame): DataFrame =
-    GrokParser.parse(turns)
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts"), col("level"))
+  /** The one frame route rules resolve against on every configured path:
+    * the six input columns, the parsed `level`, `dur_ms`, `status`,
+    * `payload` and the enrichment's `team`, `cost_class`, `redact`. Catalyst
+    * prunes the fields nothing reads; grok stays in one Project (PlanShapeSpec). */
+  def routable(turns: DataFrame): DataFrame =
+    Enrichment.enrich(GrokParser.parse(turns), turns.sparkSession)
+
+  /** The parse alone; kept only because `perfbench/Workloads.scala` calls it. */
+  def parsedProjected(turns: DataFrame): DataFrame = GrokParser.parse(turns)
 
   /** The per-stage counters of one [[observedFanOut]] plan. Each is a
     * standard `Observation`, complete once an action over that plan ran. */
@@ -67,25 +65,26 @@ object Pipeline {
 
   /** scan → parse → enrich → route → fan-out, with the per-stage counters
     * in place: the plan [[run]] hands to the limiter. It adds no shuffle
-    * ([[parsedProjected]]), so the limiter's (sink, bucket, salt) exchange
-    * is the job's one shuffle beyond whatever `turns` carries.
+    * ([[routable]]), so the limiter's (sink, bucket, salt) exchange is the
+    * job's one shuffle beyond whatever `turns` carries.
     *
     * Per-STAGE counters (reference /api/sources + /api/workers parity,
     * web/api/sources.go:30-89, workers.go:27-84): each stage reports its own
     * rows — runtime-visible metrics with zero extra passes, complete once
-    * the staging write ran. Conservation invariants (asserted in
-    * ManifestSpec): scan_rows = parse_ok + parse_quarantined; route_in =
-    * scan_rows; fanout_rows ≥ route_in (fan-out duplicates); dead-letter
-    * routed rows = quarantined + unmatched. */
-  def observedFanOut(turns: DataFrame, spark: SparkSession, cfg: Config = Config())
-      : (DataFrame, StageCounters) = {
+    * the staging write ran. The parse counters sit above the enrichment
+    * join, which is 1:1 (the dim's keys are unique). Conservation
+    * invariants (asserted in ManifestSpec): scan_rows = parse_ok +
+    * parse_quarantined; route_in = scan_rows; fanout_rows ≥ route_in
+    * (fan-out duplicates); dead-letter routed rows = quarantined +
+    * unmatched. */
+  def observedFanOut(turns: DataFrame, cfg: Config = Config()): (DataFrame, StageCounters) = {
     val counters = new StageCounters
     val scanned = turns.observe(counters.scan, count(lit(1)).as("rows"))
-    val parsed = parsedProjected(scanned)
+    val parsed = routable(scanned)
       .observe(counters.parse,
         sum(when(col("level").isNotNull, 1L).otherwise(0L)).as("rows_ok"),
         sum(when(col("level").isNull, 1L).otherwise(0L)).as("rows_quarantined"))
-    val targeted = Router.withTargets(Enrichment.enrich(parsed, spark), cfg.routeRules)
+    val targeted = Router.withTargets(parsed, cfg.routeRules)
       .observe(counters.route,
         count(lit(1)).as("rows_in"),
         sum(when(col("targets") === array(lit(Router.DeadLetter)), 1L)
@@ -117,8 +116,8 @@ object Pipeline {
     * already committed, or fallback accounting would change across a resume.
     * Only uncommitted sinks are promoted.
     *
-    * `runId` and every configured sink name must pass
-    * [[Records.requireName]]; they are checked before any Spark job runs.
+    * `runId` must pass [[Records.requireName]], checked before any Spark
+    * job runs; sink names are checked when their rules are built.
     */
   def run(
       spark: SparkSession,
@@ -129,9 +128,7 @@ object Pipeline {
       failAfterSinks: Int = Int.MaxValue // test hook: simulate a mid-job kill
   ): DataFrame = {
     Records.requireName("run id", runId)
-    (cfg.routeRules.map(_.sink) ++ cfg.limitRules.flatMap(r => r.sink +: r.fallbackSink.toSeq))
-      .foreach(Records.requireName("sink", _))
-    val (fanned, counters) = observedFanOut(Transcripts.fromEvents(spark, sfDir), spark, cfg)
+    val (fanned, counters) = observedFanOut(Transcripts.fromEvents(spark, sfDir), cfg)
 
     val manifest = new Manifest(outRoot)
     val already = manifest.committedSinks()

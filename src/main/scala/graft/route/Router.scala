@@ -7,8 +7,11 @@ import org.apache.spark.sql.functions._
   * The reference's analog is the YAML `targets:` edge list compiled at config
   * time (reference cmd/run.go:171-187, config/config.go:22); here the rules
   * compile to Catalyst `Column` expressions, so predicate pushdown / constant
-  * folding apply for free (SURVEY.md §4.1). */
-final case class RouteRule(sink: String, predicate: Column)
+  * folding apply for free (SURVEY.md §4.1). The sink name is checked when
+  * the rule is built (reference F5 validators, config/config.go:13). */
+final case class RouteRule(sink: String, predicate: Column) {
+  graft.manifest.Records.requireName("sink", sink)
+}
 
 /** Deterministic predicate router + fan-out.
   *

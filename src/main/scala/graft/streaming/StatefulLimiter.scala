@@ -122,6 +122,7 @@ object StatefulLimiter extends Serializable {
                 s"sink '$sink' exceeded $maxGroupRowsPerTrigger rows in one trigger — " +
                   "bound the source trigger size (maxFilesPerTrigger / " +
                   "maxOffsetsPerTrigger) or raise maxGroupRowsPerTrigger")
+            require(r.ts != null, RateLimit.NullTs)
             buf += r
           }
           buf.sortInPlaceBy(r => (r.ts.getTime, r.conv_id, r.turn_idx))

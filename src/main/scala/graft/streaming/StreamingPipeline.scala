@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.parse.GrokParser
+import graft.pipeline.Pipeline
 import graft.route.{RouteRule, Router}
 
 /** Structured Streaming analog of the batch pipeline (SURVEY.md §2.9).
@@ -42,9 +42,12 @@ object StreamingPipeline {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
 
-  /** Stateless parse → route → fan-out (identical semantics to batch). */
+  /** Stateless parse → enrich → route → fan-out over [[Pipeline.routable]],
+    * the frame the batch run routes. The enrichment's static dim is
+    * re-planned per micro-batch, so a refreshed one is picked up without a
+    * restart. */
   def routedStream(turns: DataFrame, rules: Seq[RouteRule] = Router.defaultRules): DataFrame =
-    Router.fanOut(GrokParser.parse(turns), rules)
+    Router.fanOut(Pipeline.routable(turns), rules)
 
   /** Watermarked stream-stream INNER join — the streaming form of the
     * fact⋈fact equi-join (two live fact streams matched on a key within an
@@ -79,23 +82,14 @@ object StreamingPipeline {
         r(rightTimeCol) <= l(leftTimeCol) + gap)
   }
 
-  /** Stream-static enrichment: the batch broadcast-dim join applied to a
-    * stream. Spark re-plans the static side per micro-batch, so a refreshed
-    * dimension table is picked up without restarting the query — the
-    * streaming analog of the reference's connector-config lookup attached
-    * at enrich time. Stateless (no watermark needed): the static side is
-    * O(10) rows and broadcast, the stream side never shuffles for it. */
-  def enrichedStream(turns: DataFrame): DataFrame =
-    graft.enrich.Enrichment.enrich(GrokParser.parse(turns), turns.sparkSession)
-
   /** Streaming as-of enrichment: each stream row picks the latest snapshot
     * at-or-before its event time from a SMALL static history — "which config
     * version was active when this event happened", on a live stream. The
     * broadcast as-of ([[graft.temporal.TemporalJoin.asofJoinBroadcast]]) is
     * the only as-of form a stream can run: it is STATELESS (per-key sorted
     * snapshot arrays broadcast, codegen binary search per row — no window
-    * over the stream, no watermark, no state store), and like
-    * [[enrichedStream]] the static side is re-planned every micro-batch, so
+    * over the stream, no watermark, no state store), and like the dim in
+    * [[routedStream]] the static side is re-planned every micro-batch, so
     * a refreshed snapshot history is picked up without a restart.
     * StreamingSpec proves batch parity on the same input. */
   def asofEnrichedStream(events: DataFrame, snapshots: DataFrame,

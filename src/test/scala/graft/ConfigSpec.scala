@@ -1,12 +1,18 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.config.PipelineConfig
+import graft.manifest.Manifest
 import graft.model.Transcripts
 import graft.parse.GrokParser
 import graft.route.Router
 import graft.limit.{LimitRule, SinglePassLimit}
 import graft.pipeline.Pipeline
+import graft.streaming.StreamingPipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** YAML config → Catalyst compilation parity with the programmatic rules
   * (reference config round-trip tests, config/config_test.go:15-200). */
@@ -92,12 +98,15 @@ class ConfigSpec extends SparkSpec {
   test("a misconfigured limit rule fails when it is built, before any Spark job") {
     // each used to surface only in the limiter's verdict step, after the
     // whole map stage ran (or, for average_over 0, never: 0/0 never breaches)
-    def rejects(rule: => LimitRule, msg: String): Unit =
+    def rejects(rule: => Any, msg: String): Unit =
       assert(intercept[IllegalArgumentException](rule).getMessage.contains(msg))
     rejects(LimitRule("sink_search", 50, 1, "fallback", None), "needs a fallback sink")
     rejects(LimitRule("sink_search", 50, 1, "explode", None), "action must be")
     rejects(LimitRule("sink_search", 50, 0, "discard", None), "average_over")
     rejects(LimitRule("sink_search", -1, 1, "discard", None), "negative bytes")
+    // a sink becomes a directory name: checked where its rule is built
+    rejects(graft.route.RouteRule("a/b", lit(true)), "invalid sink name")
+    rejects(LimitRule("sink_search", 50, 1, "fallback", Some("a:b")), "invalid sink name")
     // the valid forms still build: alert and discard need no fallback sink
     LimitRule("sink_search", 50, 1, "alert", None)
     LimitRule("sink_search", 0, 3, "fallback", Some("sink_fallback"))
@@ -119,11 +128,49 @@ class ConfigSpec extends SparkSpec {
     val cfg = PipelineConfig.fromYaml(yaml)
     val turns = Transcripts.synthetic(spark, 20, 6)
     val (routed, verdicts) = SinglePassLimit.limitWithCells(
-      Pipeline.observedFanOut(turns, spark, cfg)._1, cfg.limitRules, cfg.saltBuckets)
+      Pipeline.observedFanOut(turns, cfg)._1, cfg.limitRules, cfg.saltBuckets)
     assert(routed.count() > 0)
     // the dropped rows are the rows of the cells the chain discarded
     val dropped = verdicts.cells.filter(_.curSink == null).map(_.rows).sum
     assert(dropped >= 0)
     assert(routed.filter(col("sink") === "nonexistent").count() === 0)
+  }
+
+  test("a configured rule can name any parsed or enriched field, in the run and in the stream") {
+    val dir = Files.createTempDirectory("graft-routable")
+    val cfgFile = dir.resolve("routes.yaml")
+    Files.writeString(cfgFile,
+      """routes:
+        |  - sink: sink_status
+        |    predicate: "status = 'err'"
+        |  - sink: sink_slow
+        |    predicate: "dur_ms > 100"
+        |  - sink: sink_costly
+        |    predicate: "cost_class = 'high'"
+        |""".stripMargin)
+    val cfg = PipelineConfig.fromFile(cfgFile.toString)
+    // no limits: every routed row is committed
+    assert(cfg.limitRules.isEmpty)
+    val sfDir = "/root/testdata/sf0.001"
+    val turns = Transcripts.fromEvents(spark, sfDir)
+    def perSink(df: DataFrame): Map[String, Long] =
+      df.groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val expected = perSink(Router.fanOut(Pipeline.routable(turns), cfg.routeRules))
+    assert(expected.keySet ===
+      Set("sink_status", "sink_slow", "sink_costly", Router.DeadLetter))
+
+    val out = dir.resolve("out").toString
+    Pipeline.run(spark, sfDir, out, runId = "routable", cfg = cfg)
+    assert(new Manifest(out).sinkEntries().map(e => e.sink -> e.rowCount).toMap === expected)
+
+    // the stream over the same turns; its source schema's ts is TIMESTAMP
+    val src = dir.resolve("turns").toString
+    turns.withColumn("ts", col("ts").cast("timestamp")).write.parquet(src)
+    val q = StreamingPipeline.routedStream(StreamingPipeline.readTurns(spark, src),
+        cfg.routeRules)
+      .writeStream.format("memory").queryName("routable_out")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(perSink(spark.table("routable_out")) === expected)
   }
 }

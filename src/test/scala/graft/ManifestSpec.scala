@@ -458,7 +458,7 @@ class ManifestSpec extends SparkSpec {
     // the rows Pipeline.run commits: the shipped limiter's survivors
     val cfg = Pipeline.Config()
     val routedAll = graft.limit.SinglePassLimit.limitReusingShuffle(
-      Pipeline.observedFanOut(turns, spark, cfg)._1, cfg.limitRules, cfg.saltBuckets)
+      Pipeline.observedFanOut(turns, cfg)._1, cfg.limitRules, cfg.saltBuckets)
     val remaining = m.antiJoinResume(spark,
       routedAll.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"))
     val committedCount = m.committedSinks().toSeq
@@ -474,9 +474,9 @@ class ManifestSpec extends SparkSpec {
       intercept[IllegalArgumentException] { Pipeline.run(spark, sfDir, out, runId = runId) }
       assert(!Files.exists(parent.resolve("out")), s"run id $runId left files behind")
     }
-    val badFallback = Pipeline.Config(limitRules = Seq(
-      graft.limit.LimitRule("sink_search", 1L, 1, "fallback", Some("a:b"))))
     intercept[IllegalArgumentException] {
+      val badFallback = Pipeline.Config(limitRules = Seq(
+        graft.limit.LimitRule("sink_search", 1L, 1, "fallback", Some("a:b"))))
       Pipeline.run(spark, sfDir, parent.resolve("out").toString, runId = "ok", cfg = badFallback)
     }
     assert(!Files.exists(parent.resolve("out")))

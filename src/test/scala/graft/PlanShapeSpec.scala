@@ -20,16 +20,24 @@ class PlanShapeSpec extends SparkSpec {
     // subexpression elimination evaluates the regex once per row. Copies
     // spread across Filters/Generates would each re-execute it. Checked on
     // every SparkEntry query over the routed stream: their parse has no
-    // barrier exchange in front of the route, as in Pipeline.run. Read at
-    // sf0.01: at sf0.001 the limiter drops nothing, so q_limit_dropped's
-    // plan folds to an empty relation with no grok left to check.
+    // barrier exchange in front of the route, as in Pipeline.run; and on
+    // Pipeline.run's own limited chain under a configured rule that reads a
+    // second parsed field. Read at sf0.01: at sf0.001 the limiter drops
+    // nothing, so q_limit_dropped's plan folds to an empty relation with no
+    // grok left to check.
+    val sf01 = sfDir.replace("sf0.001", "sf0.01")
     val routedLeaves = Seq("q_route_counts", "q_routed_rows", "q_sink_agg",
       "q_sink_conv_spans", "q_limit_alerts", "q_limit_buckets", "q_limit_final",
       "q_limit_dropped", "q_resume_antijoin", "q_top_convs")
+      .map(name => name -> graft.SparkEntry.queries(name)(spark, sf01))
+    val cfg = Pipeline.Config(routeRules = Seq(
+      graft.route.RouteRule("sink_err", col("level").isin("ERROR", "WARN")),
+      graft.route.RouteRule("sink_status", col("status") === "err")))
+    val configured = "configured chain" -> graft.limit.SinglePassLimit.limitReusingShuffle(
+      Pipeline.observedFanOut(Transcripts.fromEvents(spark, sf01), cfg)._1, cfg.limitRules)
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
-    routedLeaves.foreach { name =>
-      val out = graft.SparkEntry.queries(name)(spark, sfDir.replace("sf0.001", "sf0.01"))
+    (routedLeaves :+ configured).foreach { case (name, out) =>
       val ops = out.queryExecution.optimizedPlan.collect {
         case p if p.expressions.exists(hasGrok) => p.getClass.getSimpleName
       }
@@ -116,7 +124,7 @@ class PlanShapeSpec extends SparkSpec {
     // stays inside a Project (whole-stage codegen subexpression elimination
     // ⇒ one regex exec per row), and no shuffle runs before the limiter's
     // own (sink, bucket, salt) exchange — the job's one shuffle.
-    val (fanned, _) = Pipeline.observedFanOut(syntheticTurns(), spark)
+    val (fanned, _) = Pipeline.observedFanOut(syntheticTurns())
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
     val optimized = fanned.queryExecution.optimizedPlan
@@ -144,7 +152,7 @@ class PlanShapeSpec extends SparkSpec {
     // sums and the verdicts sit on either side of the same shuffle
     import graft.limit.{ApplyVerdictsExec, CellTapExec, RateLimit, SinglePassLimit}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val (fanned, _) = Pipeline.observedFanOut(syntheticTurns(), spark)
+    val (fanned, _) = Pipeline.observedFanOut(syntheticTurns())
     val limited = SinglePassLimit.limitReusingShuffle(fanned, RateLimit.defaultRules())
     Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = limited.queryExecution.executedPlan
@@ -212,7 +220,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("limit-chain plan reuses the salted exchange instead of rescanning") {
-    val (fanned, _) = Pipeline.observedFanOut(Transcripts.fromEvents(spark, sfDir), spark)
+    val (fanned, _) = Pipeline.observedFanOut(Transcripts.fromEvents(spark, sfDir))
     val routed = graft.limit.SinglePassLimit.limitReusingShuffle(fanned,
       graft.limit.RateLimit.defaultRules())
     val physical = routed.queryExecution.optimizedPlan.toString

@@ -154,14 +154,24 @@ class SinglePassSpec extends SparkSpec {
   }
 
   test("the map side fails fast on a null ts and on more cells than the cap") {
-    def failsWith(df: DataFrame, msg: String): Unit = {
+    /** The innermost cause of the job failure that carries `msg`. */
+    def failsWith(df: DataFrame, msg: String): Throwable = {
       val e = intercept[org.apache.spark.SparkException](df.collect())
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => Option(t.getMessage).exists(_.contains(msg))), e)
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .filter(t => Option(t.getMessage).exists(_.contains(msg))).toSeq
+      assert(causes.nonEmpty, e)
+      causes.last
     }
     val nullTs = fixture.withColumn("ts",
       when(col("sink") === "sink_a", lit(null).cast("timestamp")).otherwise(col("ts")))
-    failsWith(SinglePassLimit.limitReusingShuffle(nullTs, rules), "requires non-null ts")
+    // every limiter refuses it with the one message: the single-pass and the
+    // stateful one in a task, the two-pass one on the driver
+    Seq(SinglePassLimit.limitReusingShuffle(nullTs, rules),
+      graft.streaming.StatefulLimiter.limitStream(nullTs, rules).toDF()).foreach { df =>
+      assert(failsWith(df, "requires non-null ts").isInstanceOf[IllegalArgumentException])
+    }
+    assert(intercept[IllegalArgumentException](RateLimit.apply(nullTs, rules))
+      .getMessage.contains("requires non-null ts"))
     // one map task sees all six cells: the in-task cap trips, not the driver's
     failsWith(SinglePassLimit.limitReusingShuffle(fixture.coalesce(1), rules, maxVerdictCells = 1),
       "cells in one map task")

@@ -25,7 +25,7 @@ class SkewSpec extends SparkSpec {
 
     // the salt is in the limiter's (sink, bucket, salt) exchange key
     val salted = SinglePassLimit.limitReusingShuffle(
-      Pipeline.observedFanOut(turns, spark)._1, Pipeline.Config().limitRules, saltBuckets = 32)
+      Pipeline.observedFanOut(turns)._1, Pipeline.Config().limitRules, saltBuckets = 32)
     val sizes = salted
       .groupBy(spark_partition_id().as("pid")).count()
       .collect().map(_.getLong(1))
@@ -56,7 +56,7 @@ class SkewSpec extends SparkSpec {
     // rules that discard: sink_search overflows into sink_fallback, which
     // overflows in turn and drops
     val rules = RateLimit.defaultRules(searchLimit = 1000L, fallbackLimit = 500L)
-    val routed = graft.route.Router.fanOut(Pipeline.parsedProjected(turns))
+    val routed = graft.route.Router.fanOut(Pipeline.routable(turns))
     val withSalt = SinglePassLimit.limitReusingShuffle(routed, rules, saltBuckets = 32)
     val noSalt = SinglePassLimit.limitReusingShuffle(routed, rules, saltBuckets = 1)
     val spec = canon(RateLimit.apply(routed, rules)._1)

@@ -43,20 +43,20 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-senrich").toString
     Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 6)
       .write.mode("overwrite").parquet(dir)
-    val q = StreamingPipeline.enrichedStream(
+    val q = StreamingPipeline.routedStream(
         StreamingPipeline.readTurns(spark, dir, maxFilesPerTrigger = 2))
       .writeStream.outputMode("append")
       .format("memory").queryName("senrich_out")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select("conv_id", "turn_idx", "tool", "team", "cost_class")
+      .select("conv_id", "turn_idx", "tool", "team", "cost_class", "sink")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2),
-        Option(r.getString(3)), Option(r.getString(4)))).sorted
+        Option(r.getString(3)), Option(r.getString(4)), r.getString(5))).sorted
     val streamed = canon(spark.table("senrich_out"))
-    val batch = canon(graft.enrich.Enrichment.enrich(
-      graft.parse.GrokParser.parse(spark.read.parquet(dir)), spark))
+    val batch = canon(graft.route.Router.fanOut(graft.enrich.Enrichment.enrich(
+      graft.parse.GrokParser.parse(spark.read.parquet(dir)), spark)))
     assert(streamed.nonEmpty && streamed.sameElements(batch))
     // the left-join null path (unmatched tool) must survive the stream too
     assert(streamed.exists(_._4.isEmpty) === batch.exists(_._4.isEmpty))

@@ -16,7 +16,6 @@ import graft.limit.LimitRule
   *
   * Example:
   * {{{
-  * salt_buckets: 32
   * routes:
   *   - sink: sink_a
   *     predicate: "tool = 'bash' AND role = 'assistant'"
@@ -27,6 +26,7 @@ import graft.limit.LimitRule
   *     action: fallback        # fallback | discard | alert
   *     fallback: sink_fallback
   * }}}
+  * An unknown key or an empty value is refused, not read as a default.
   */
 object PipelineConfig {
 
@@ -45,27 +45,25 @@ object PipelineConfig {
   }
 
   def fromYaml(yaml: String): Pipeline.Config = {
-    val loaded = new org.yaml.snakeyaml.Yaml()
-      .load[java.util.Map[String, Object]](yaml)
+    val loaded = new org.yaml.snakeyaml.Yaml().load[Object](yaml)
     require(loaded != null, "empty config")
-    val m = loaded.asScala
+    val m = entry(loaded, "the config", Set("routes", "limits"))
 
-    def asList(key: String): Seq[scala.collection.mutable.Map[String, Object]] =
-      m.get(key) match {
-        case Some(l: java.util.List[_]) =>
-          l.asScala.toSeq.map(_.asInstanceOf[java.util.Map[String, Object]].asScala)
-        case None => Seq.empty
-        case other => throw new IllegalArgumentException(s"$key must be a list, got $other")
-      }
-    def str(e: scala.collection.mutable.Map[String, Object], k: String): String =
+    def asList(key: String, known: String*): Seq[Map[String, Object]] = m.get(key) match {
+      case Some(l: java.util.List[_]) => l.asScala.toSeq.map(entry(_, s"a '$key' entry", known.toSet))
+      case None => Seq.empty
+      case other => throw new IllegalArgumentException(s"$key must be a list, got $other")
+    }
+    def str(e: Map[String, Object], k: String): String =
       e.getOrElse(k, throw new IllegalArgumentException(s"missing '$k' in $e")).toString
 
     // RouteRule checks its sink name (F5)
-    val routes = asList("routes").map(e => RouteRule(str(e, "sink"), expr(str(e, "predicate"))))
+    val routes = asList("routes", "sink", "predicate")
+      .map(e => RouteRule(str(e, "sink"), expr(str(e, "predicate"))))
     require(routes.nonEmpty, "config needs at least one route")
 
     // LimitRule checks its action, sink names and window (F5)
-    val limits = asList("limits").map { e =>
+    val limits = asList("limits", "sink", "throughput", "average_over", "action", "fallback").map { e =>
       LimitRule(
         sink = str(e, "sink"),
         bytesPerBucket = parseBytes(str(e, "throughput")),
@@ -74,8 +72,17 @@ object PipelineConfig {
         fallbackSink = e.get("fallback").map(_.toString))
     }
 
-    val salt = m.get("salt_buckets").map(_.toString.toInt).getOrElse(32)
-    Pipeline.Config(routeRules = routes, limitRules = limits, saltBuckets = salt)
+    Pipeline.Config(routeRules = routes, limitRules = limits)
+  }
+
+  /** A YAML mapping's entries; an unknown key or an empty value is refused, naming it. */
+  private def entry(node: Any, where: String, known: Set[String]): Map[String, Object] = {
+    val m = node.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
+    m.foreach { case (k, v) =>
+      require(known(k), s"unknown key '$k' in $where; expected one of ${known.mkString(", ")}")
+      require(v != null, s"empty value for '$k' in $where")
+    }
+    m
   }
 
   def fromFile(path: String): Pipeline.Config =

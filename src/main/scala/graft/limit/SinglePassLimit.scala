@@ -3,6 +3,8 @@ package graft.limit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.model.RoutedTurn
+
 /** Single-pass rate limiting: one exchange serves both the verdict and the
   * write.
   *
@@ -79,9 +81,7 @@ object SinglePassLimit {
 
     val spark = routed.sparkSession
     LimiterStrategy.register(spark)
-    val projected = routed
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts"), col("sink")).queryExecution.analyzed
+    val projected = routed.select(RoutedTurn.Columns.map(col): _*).queryExecution.analyzed
     def attr(name: String) = projected.output.find(_.name == name).get
     val shuffled = Bridge.ofRows(spark,
         CellTap(attr("sink"), attr("ts"), attr("text"), maxVerdictCells, projected))

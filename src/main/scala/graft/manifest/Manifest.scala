@@ -1,8 +1,11 @@
 package graft.manifest
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+
+import graft.model.RoutedTurn
 
 import Records.{RunRecord, SinkEntry, SnapshotRecord, StreamMarker}
 
@@ -16,7 +19,9 @@ import Records.{RunRecord, SinkEntry, SnapshotRecord, StreamMarker}
   * rows (north_rule: "resumes idempotently without duplicate routed rows").
   *
   * No Iceberg jar in the sandbox, so "Iceberg manifest" is realized as:
-  *   <root>/sinks/<sink>/              committed sink parquet (atomic dir rename)
+  *   <root>/_staging/<unit>/sink=<s>/  one commit unit's staged rows ([[stage]])
+  *   <root>/sinks/<sink>/              committed sink parquet (atomic dir rename),
+  *                                     `sinks/<sink>/batch=<id>/` for a stream
   *   <root>/_manifest/<sink>.json      current-pointer view (atomic file move)
   *   <root>/_snapshots/snap-NNN.json   append-only numbered commit log
   *                                     ([[appendSnapshot]] — optimistic
@@ -29,15 +34,13 @@ import Records.{RunRecord, SinkEntry, SnapshotRecord, StreamMarker}
   * On a real cluster the same protocol maps onto Iceberg snapshot commits —
   * the unit of commit is a sink partition, the manifest is the catalog.
   *
-  * Scale: resume skips committed sinks BEFORE the scan is planned (driver-side
-  * manifest read), so a resumed run reads only the uncommitted remainder; the
-  * per-row anti-join alternative (also provided, [[antiJoinResume]]) covers
-  * finer-grained recovery where partial sink output must be reconciled.
+  * Resume re-stages every sink and promotes only the uncommitted ones; the
+  * per-row [[antiJoinResume]] covers finer-grained reconciliation.
   */
 final class Manifest(root: String) {
   private val manifestDir = Paths.get(root, "_manifest")
   private val snapshotDir = Paths.get(root, "_snapshots")
-  private val tmpDir = Paths.get(root, "_tmp")
+  private val stagingDir = Paths.get(root, "_staging")
 
   def committedSinks(): Set[String] = {
     if (!Files.isDirectory(manifestDir)) return Set.empty
@@ -60,10 +63,34 @@ final class Manifest(root: String) {
   def writeRun(record: RunRecord): Unit =
     Records.writeAtomic(manifestDir, Records.runRecordName(record.runId), record)
 
-  /** Commit a sink whose data was already staged: [[graft.pipeline.Pipeline.run]]
-    * writes the single-pass limiter's survivors once, partitioned by sink,
-    * and each `sink=<name>` directory is PROMOTED into place here with one
-    * atomic rename — no row is rewritten — then the manifest entry commits.
+  /** The one staging write of a commit unit — `run` for [[graft.pipeline.Pipeline.run]],
+    * `stream-batch-<id>` for [[commitStreamBatch]]: `rows` projected to
+    * [[RoutedTurn.Columns]], written once to `_staging/<unit>` partitioned
+    * by sink. The directory is fixed per unit, so a resume or a replay
+    * overwrites what a hard kill left there. The sink names become path
+    * segments, so they are checked before `promote` runs; the staged copy
+    * is deleted when `promote` returns or throws. */
+  def stage[T](rows: DataFrame, unit: String)(promote: Manifest.Staged => T): T = {
+    val dir = stagingDir.resolve(unit)
+    val projected = rows.select(RoutedTurn.Columns.map(col): _*)
+    projected.write.mode("overwrite").partitionBy("sink").parquet(dir.toString)
+    try {
+      val sinks = graft.util.Fs.listDir(dir).map(_.getFileName.toString)
+        .collect { case n if n.startsWith("sink=") => n.stripPrefix("sink=") }.sorted
+      // a null sink is staged as the default partition, any other odd one escaped
+      sinks.foreach(n => Records.requireName("sink",
+        if (n == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else ExternalCatalogUtils.unescapePathName(n)))
+      // read back through the written schema: an inferred sink column would
+      // type an all-numeric sink as int
+      promote(new Manifest.Staged(dir, sinks,
+        rows.sparkSession.read.schema(projected.schema).parquet(dir.toString)))
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  /** Commit a sink whose data was already staged ([[stage]]): its
+    * `sink=<name>` directory is PROMOTED into place with one atomic
+    * rename — no row is rewritten — then the manifest entry commits.
     * `rows`/`bytes`/`convs` are the caller's exact stats for the staged
     * rows (the limiter's post-chain cells and a conv_id-only scan). A stale
     * uncommitted target (crash between a previous promote and its commit)
@@ -75,11 +102,6 @@ final class Manifest(root: String) {
     if (Files.exists(target)) graft.util.Fs.deleteRecursively(target)
     Files.createDirectories(target.getParent)
     Files.move(stagedDir, target, StandardCopyOption.ATOMIC_MOVE)
-    commitEntry(sink, runId, rows, bytes, convs)
-  }
-
-  private def commitEntry(sink: String, runId: String, rows: Long, bytes: Long,
-      convs: Long): Unit = {
     val snap = appendSnapshot(SnapshotRecord(_, runId, sink, "commit", rows, bytes, convs))
     Records.writeAtomic(manifestDir, s"$sink.json",
       SinkEntry(runId, sink, rows, bytes, convs, snap, Records.now()))
@@ -245,16 +267,15 @@ final class Manifest(root: String) {
     *
     * Layout: `sinks/<sink>/batch=<id>/…` — append semantics at sink
     * granularity, one partition dir per micro-batch, readable by the same
-    * path-based reads as the batch layout ([[sinkRows]]).
+    * path-based reads as the batch layout ([[sinkRows]]), with the same
+    * six columns ([[stage]]).
     *
     * Exactly-once: foreachBatch re-delivers a failed micro-batch with the
     * SAME batchId and (file source + checkpoint) the same rows, so the data
-    * path only needs idempotent promotion — each sink's batch dir is staged
-    * fully, then moved into place atomically, and a replay skips any
-    * `batch=<id>` dir that already exists. A crash mid-commit (some sinks
-    * promoted, some not) resumes by promoting exactly the missing ones: no
-    * routed row is ever written twice (the north-rule resume invariant,
-    * streaming edition). The snapshot audit log gets exactly one record per
+    * path only needs idempotent promotion — a replay skips any `batch=<id>`
+    * dir that already exists. A crash mid-commit (some sinks promoted, some
+    * not) resumes by promoting exactly the missing ones: no routed row is
+    * ever written twice (the north-rule resume invariant, streaming edition). The snapshot audit log gets exactly one record per
     * (sink, batch): each record is appended immediately after its sink's
     * promotion, and a replay that meets an already-promoted target appends
     * the record only if the previous attempt died inside that sink's
@@ -264,52 +285,24 @@ final class Manifest(root: String) {
   def commitStreamBatch(batch: DataFrame, batchId: Long): Unit = {
     val marker = s"_stream_batch_$batchId.json"
     if (Files.exists(manifestDir.resolve(marker))) return // replay of a fully-committed batch
-    val spark = batch.sparkSession
-    // stage the WHOLE batch once, partitioned by sink (one job, no per-sink
-    // re-filtering of the batch plan)
-    val staging = tmpDir.resolve(s"stream-batch-$batchId-${java.util.UUID.randomUUID()}")
-    batch.write.mode("overwrite").partitionBy("sink").parquet(staging.toString)
-    // the staged copy must not outlive this attempt: a failure below (bad
-    // sink name, stats job, promote) is retried by foreachBatch with a FRESH
-    // staging UUID, so a leaked dir is one full batch copy per retry until
-    // the volume fills — hence the try/finally around the promote phase
-    def promoteStaged(): Int = {
-      val sinkDirs = graft.util.Fs.listDir(staging)
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("sink="))
-      // ALL sinks' stats in ONE job over the partitioned staging root (the
-      // earlier per-sink aggregates paid one driver job round-trip per sink
-      // per micro-batch — scheduling overhead dominates tiny frequent batches).
-      // The staging read pins the BATCH's schema: without it the sink partition
-      // column comes back type-INFERRED from the directory names (an
-      // all-numeric sink reads as int and getString throws).
-      val stagedStats = spark.read.schema(batch.schema).parquet(staging.toString)
-        .groupBy(col("sink"))
-        .agg(count(lit(1)).as("rows"),
-          coalesce(sum(octet_length(col("text"))), lit(0L)).as("bytes"),
-          countDistinct(col("conv_id")).as("convs"))
-        .collect()
-        .map(r => (if (r.isNullAt(0)) null else r.getString(0)) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      // sink names become partition DIRECTORY names and later sinkPath()
-      // segments, and the promote loop matches dir names back to the column
-      // values above — a null sink (__HIVE_DEFAULT_PARTITION__) or one Spark
-      // partition-escapes (space, '/', ':', '%') would break that round trip
-      // and commit a dir no reader resolves. Enforce the identifier contract
-      // up front, naming the offender, before anything is promoted.
-      stagedStats.keys.foreach(Records.requireName("sink", _))
+    val appended = stage(batch, s"${Records.StreamRunPrefix}$batchId") { staged =>
+      // ALL sinks' stats in ONE job over the staged rows (per-sink aggregates
+      // would pay one driver job round-trip per sink per micro-batch —
+      // scheduling overhead dominates tiny frequent batches)
+      val stats = staged.perSink(count(lit(1)),
+        coalesce(sum(octet_length(col("text"))), lit(0L)), countDistinct(col("conv_id")))
       // replay recovery: sinks whose audit record already reached the log (a
       // crash can land between a sink's move and its append — only consulted
       // when a replay actually meets an already-promoted target)
       lazy val alreadyLogged =
         snapshotLog().filter(_.streamBatch.contains(batchId)).map(_.sink).toSet
       var appended = 0
-      sinkDirs.foreach { dir =>
-        val sink = dir.getFileName.toString.stripPrefix("sink=")
+      staged.sinks.foreach { sink =>
         val target = Paths.get(sinkPath(sink), s"batch=$batchId")
         val promoted =
           if (!Files.exists(target)) {
             Files.createDirectories(target.getParent)
-            Files.move(dir, target, StandardCopyOption.ATOMIC_MOVE)
+            Files.move(staged.dir(sink), target, StandardCopyOption.ATOMIC_MOVE)
             true
           } else false // replay — already promoted by a previous attempt
         // audit record appended immediately after THIS sink's promotion (not
@@ -317,15 +310,14 @@ final class Manifest(root: String) {
         // died in the move→append window; foreachBatch replays a batch with
         // identical content, so the staged stats equal the promoted dir's
         if (promoted || !alreadyLogged(sink)) {
-          val (rows, bytes, convs) = stagedStats(sink)
+          val r = stats(sink)
           appendSnapshot(SnapshotRecord(_, s"${Records.StreamRunPrefix}$batchId", sink,
-            Records.StreamCommit, rows, bytes, convs))
+            Records.StreamCommit, r.getLong(0), r.getLong(1), r.getLong(2)))
           appended += 1
         }
       }
       appended
     }
-    val appended = try promoteStaged() finally graft.util.Fs.deleteRecursively(staging)
     Records.writeAtomic(manifestDir, marker,
       StreamMarker(batchId, appended, Records.now()))
   }
@@ -426,6 +418,17 @@ final class Manifest(root: String) {
 }
 
 object Manifest {
+  /** One commit unit's staged rows ([[Manifest.stage]]): the checked sink
+    * names, in order, each staged under [[dir]]. */
+  final class Staged private[manifest] (root: Path, val sinks: Seq[String], rows: DataFrame) {
+    def dir(sink: String): Path = root.resolve(s"sink=$sink")
+
+    /** `aggs` over the staged rows per sink, in one job. */
+    def perSink(aggs: Column*): Map[String, Row] =
+      rows.groupBy(col("sink")).agg(aggs.head, aggs.tail: _*)
+        .collect().map(r => r.getString(0) -> Row.fromSeq(r.toSeq.tail)).toMap
+  }
+
   /** Durable retention state ([[Manifest.expireSnapshots]]). `horizon` is
     * the lowest snapshot id still servable by pinned readers (0 = nothing
     * expired); `bases` compacts the expired stream-commit records per sink —

@@ -31,3 +31,8 @@ final case class RoutedTurn(
     ts: Timestamp,
     sink: String
 )
+
+object RoutedTurn {
+  /** The fields, in order: what the limiters project to and the manifest stages. */
+  val Columns: Seq[String] = org.apache.spark.sql.Encoders.product[RoutedTurn].schema.fieldNames.toSeq
+}

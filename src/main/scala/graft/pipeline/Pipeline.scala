@@ -41,8 +41,7 @@ object Pipeline {
 
   final case class Config(
       routeRules: Seq[RouteRule] = Router.defaultRules,
-      limitRules: Seq[LimitRule] = RateLimit.defaultRules(),
-      saltBuckets: Int = 32
+      limitRules: Seq[LimitRule] = RateLimit.defaultRules()
   )
 
   /** The one frame route rules resolve against on every configured path:
@@ -103,8 +102,8 @@ object Pipeline {
     * Shape (DESIGN.md "data movement"): ONE data query — [[observedFanOut]]
     * into [[SinglePassLimit.limitWithCells]] (one (sink, bucket, salt)
     * exchange whose map side sums each (sink, bucket) cell's bytes and rows,
-    * with the verdicts applied above it) into the survivors' one write,
-    * partitioned by sink, under `_staging/`; committing a sink = one atomic
+    * with the verdicts applied above it) into the survivors' one staging
+    * write ([[Manifest.stage]], unit `run`); committing a sink = one atomic
     * directory rename + manifest entry. The commit stats need no pass over
     * the rows: per-sink rows/bytes and the in/out/dropped counters come from
     * the post-chain cells, the stage counters from the write's observations,
@@ -131,43 +130,31 @@ object Pipeline {
     val (fanned, counters) = observedFanOut(Transcripts.fromEvents(spark, sfDir), cfg)
 
     val manifest = new Manifest(outRoot)
-    val already = manifest.committedSinks()
 
     // The limiter's map-side sums are exactly-once only if each map
     // partition's row multiset is deterministic and the sums ignore row
     // order. Both hold here: scan → parse → enrich → route is a pure function
     // of the input files, and the sums are additions.
-    val (survivors, verdicts) =
-      SinglePassLimit.limitWithCells(fanned, cfg.limitRules, cfg.saltBuckets)
-    val staging = s"$outRoot/_staging"
-    survivors.write.mode("overwrite").partitionBy("sink").parquet(staging)
-    val cells = verdicts.cells
-
-    // The per-sink in/out/dropped counters come from the limiter's verdict
-    // cells, i.e. they were observed DURING the run with zero extra passes —
-    // the reference's live per-connection Stats (monitoring/stats.go:10-118,
-    // served at web/api/targets.go:43-121). A sink's out counters are its
-    // exact commit stats: the rows and bytes the chain left in it.
-    val perSink = cells.flatMap { c =>
-      Seq(c.origSink -> SinkCounters(inRows = c.rows, inBytes = c.bytes),
-        if (c.curSink == null) c.lastSink -> SinkCounters(droppedRows = c.rows, droppedBytes = c.bytes)
-        else c.curSink -> SinkCounters(outRows = c.rows, outBytes = c.bytes))
-    }.groupMapReduce(_._1)(_._2)(_ + _)
-    val staged = perSink.filter(_._2.outRows > 0)
-    // distinct convs from the staged conv_id column alone
-    val convs: Map[String, Long] = spark.read.schema("conv_id STRING, sink STRING")
-      .parquet(staging)
-      .groupBy(col("sink")).agg(countDistinct(col("conv_id")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    var written = 0
-    staged.keys.toSeq.sorted.filterNot(already.contains).foreach { sink =>
-      if (written < failAfterSinks) {
-        val out = staged(sink)
-        manifest.promoteAndCommit(sink, java.nio.file.Paths.get(staging, s"sink=$sink"), runId,
-          out.outRows, out.outBytes, convs(sink))
-        written += 1
+    val (survivors, verdicts) = SinglePassLimit.limitWithCells(fanned, cfg.limitRules)
+    val (cells, perSink) = manifest.stage(survivors, "run") { staged =>
+      val cells = verdicts.cells
+      // The per-sink in/out/dropped counters come from the limiter's verdict
+      // cells, i.e. they were observed DURING the run with zero extra passes —
+      // the reference's live per-connection Stats (monitoring/stats.go:10-118,
+      // served at web/api/targets.go:43-121). A sink's out counters are its
+      // exact commit stats: the rows and bytes the chain left in it.
+      val perSink = cells.flatMap { c =>
+        Seq(c.origSink -> SinkCounters(inRows = c.rows, inBytes = c.bytes),
+          if (c.curSink == null) c.lastSink -> SinkCounters(droppedRows = c.rows, droppedBytes = c.bytes)
+          else c.curSink -> SinkCounters(outRows = c.rows, outBytes = c.bytes))
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      val convs = staged.perSink(countDistinct(col("conv_id")))
+      staged.sinks.filterNot(manifest.committedSinks()).take(failAfterSinks).foreach { sink =>
+        val out = perSink(sink)
+        manifest.promoteAndCommit(sink, staged.dir(sink), runId,
+          out.outRows, out.outBytes, convs(sink).getLong(0))
       }
+      (cells, perSink)
     }
 
     // Persist the observed run metrics next to the lineage entries (A1/A2):
@@ -181,10 +168,6 @@ object Pipeline {
       RouteCounts(n(counters.route, "rows_in"), n(counters.route, "rows_dead_letter"), routedRows))
     manifest.writeRun(RunRecord(runId, routedRows, cells.map(_.bytes).sum,
       cells.map(_.origSink).distinct.length, stages, perSink))
-
-    // drop the staging residue once every staged sink is committed
-    if (staged.keySet.subsetOf(manifest.committedSinks()))
-      graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(staging))
 
     // Final per-sink aggregate FROM THE MANIFEST ENTRIES — the commit stats
     // already hold rows/bytes/convs per sink, so re-reading every committed

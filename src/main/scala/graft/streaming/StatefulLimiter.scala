@@ -53,7 +53,7 @@ object StatefulLimiter extends Serializable {
     val ruleBySink = rules.map(r => r.sink -> r).toMap
 
     routed
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
+      .select(RoutedTurn.Columns.map(col): _*)
       .as[RoutedTurn]
       .groupByKey(_.sink)
       .flatMapGroupsWithState[SinkState, LimitedTurn](

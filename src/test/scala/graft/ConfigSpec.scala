@@ -19,8 +19,7 @@ import org.apache.spark.sql.streaming.Trigger
 class ConfigSpec extends SparkSpec {
 
   private val yaml =
-    """salt_buckets: 16
-      |routes:
+    """routes:
       |  - sink: sink_a
       |    predicate: "tool = 'bash' AND role = 'assistant'"
       |  - sink: sink_b
@@ -80,6 +79,22 @@ class ConfigSpec extends SparkSpec {
         |    average_over: 0
         |    action: discard
         |""".stripMargin))
+    // an empty value or a key fromYaml does not read is refused, naming the
+    // key, instead of failing with an NPE or silently falling back to a default
+    def refuses(yaml: String, key: String): Unit = {
+      val e = intercept[IllegalArgumentException](PipelineConfig.fromYaml(yaml))
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+    }
+    val route = "routes:\n  - sink: a\n    predicate: \"role = 'x'\"\n"
+    refuses("routes:\n  - sink:\n    predicate: \"role = 'x'\"\n", "sink")
+    refuses("routes:\n", "routes")
+    refuses(route + "limits:\n  - sink: a\n    throughput: 1KB\n    average_over:\n" +
+      "    action: discard\n", "average_over")
+    refuses(route + "limits:\n  - sink: a\n    throughput: 1KB\n    average_ovr: 3\n" +
+      "    action: discard\n", "average_ovr")
+    refuses(route + "salt_bucket: 16\n", "salt_bucket")
+    refuses(route + "salt_buckets: 32\n", "salt_buckets")
+    refuses("routes:\n  - sink: a\n    predicate: \"role = 'x'\"\n    when: always\n", "when")
     // limit and fallback sinks follow the same name rule as route sinks
     Seq(("a/b", "c"), ("a", "c:d")).foreach { case (sink, fallback) =>
       intercept[IllegalArgumentException](PipelineConfig.fromYaml(
@@ -114,7 +129,6 @@ class ConfigSpec extends SparkSpec {
 
   test("YAML-configured routing matches the programmatic default rules") {
     val cfg = PipelineConfig.fromYaml(yaml)
-    assert(cfg.saltBuckets === 16)
     val turns = Transcripts.synthetic(spark, 30, 8)
     val parsed = GrokParser.parse(turns)
     val fromYamlCounts = Router.fanOut(parsed, cfg.routeRules)
@@ -128,7 +142,7 @@ class ConfigSpec extends SparkSpec {
     val cfg = PipelineConfig.fromYaml(yaml)
     val turns = Transcripts.synthetic(spark, 20, 6)
     val (routed, verdicts) = SinglePassLimit.limitWithCells(
-      Pipeline.observedFanOut(turns, cfg)._1, cfg.limitRules, cfg.saltBuckets)
+      Pipeline.observedFanOut(turns, cfg)._1, cfg.limitRules)
     assert(routed.count() > 0)
     // the dropped rows are the rows of the cells the chain discarded
     val dropped = verdicts.cells.filter(_.curSink == null).map(_.rows).sum

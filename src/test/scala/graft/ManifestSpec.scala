@@ -66,6 +66,93 @@ class ManifestSpec extends SparkSpec {
     assert(resumed.distinct.length === resumed.length)
   }
 
+  test("a promoted-but-uncommitted sink is replaced on resume") {
+    import spark.implicits._
+    val cleanOut = Files.createTempDirectory("graft-stale-a").toString
+    val resumeOut = Files.createTempDirectory("graft-stale-b").toString
+    Pipeline.run(spark, sfDir, cleanOut, runId = "s0")
+    Pipeline.run(spark, sfDir, resumeOut, runId = "s1", failAfterSinks = 2)
+    val m = new Manifest(resumeOut)
+    val partial = m.committedSinks()
+    // the next sink in promotion order, as a kill between its directory
+    // rename and its entry leaves it: data under sinks/<s>, no <s>.json
+    val stale = new Manifest(cleanOut).committedSinks().toSeq.sorted.filterNot(partial).head
+    Seq(("junk", 0, "user", "junk", "t", new java.sql.Timestamp(0L)))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .write.parquet(m.sinkPath(stale))
+    assert(!m.committedSinks().contains(stale))
+
+    Pipeline.run(spark, sfDir, resumeOut, runId = "s2")
+    def entries(root: String) = new Manifest(root).sinkEntries()
+      .map(e => (e.sink, e.rowCount, e.bytes, e.convs))
+    assert(entries(resumeOut) === entries(cleanOut))
+    assert(canon(readAllSinks(resumeOut)).sameElements(canon(readAllSinks(cleanOut))))
+    assert(m.sinkRows(spark, stale).filter($"conv_id" === "junk").isEmpty, "stale rows survived")
+  }
+
+  test("a batch-committed and a stream-committed sink hold the same six input columns") {
+    val dir = Files.createTempDirectory("graft-rowshape")
+    val batchOut = dir.resolve("batch").toString
+    Pipeline.run(spark, sfDir, batchOut, runId = "shape")
+    // the stream reads the same turns under their own schema, so both paths
+    // see one `ts` type
+    val turns = graft.model.Transcripts.fromEvents(spark, sfDir)
+    val src = dir.resolve("turns").toString
+    turns.write.parquet(src)
+    val streamOut = dir.resolve("stream").toString
+    graft.streaming.StreamingPipeline.foreachBatchSink(
+      graft.streaming.StreamingPipeline.routedStream(spark.readStream.schema(turns.schema).parquet(src)),
+      streamOut, dir.resolve("ckpt").toString).start().awaitTermination()
+
+    val expected = turns.schema.map(f => f.name -> f.dataType)
+    assert(expected.map(_._1) === graft.model.RoutedTurn.Columns.filterNot(_ == "sink"))
+    def shape(path: String) = spark.read.parquet(path).schema.map(f => f.name -> f.dataType)
+    val batchM = new Manifest(batchOut)
+    assert(batchM.committedSinks().nonEmpty)
+    batchM.committedSinks().foreach(s => assert(shape(batchM.sinkPath(s)) === expected, s))
+    val streamM = new Manifest(streamOut)
+    val batchDirs = streamM.streamCommittedSinks().toSeq.flatMap(s =>
+      graft.util.Fs.listDir(java.nio.file.Paths.get(streamM.sinkPath(s))))
+    assert(batchDirs.nonEmpty)
+    batchDirs.foreach(d => assert(shape(d.toString) === expected, d))
+  }
+
+  test("a replayed micro-batch commits the first attempt's rows over a killed attempt's residue") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-replay").toString
+    val m = new Manifest(out)
+    val batch = Seq((1, "s1"), (2, "s1"), (3, "s2"))
+      .map { case (i, sink) =>
+        (s"conv-$i", i, "user", s"text $i", "t", new java.sql.Timestamp(i * 1000L), sink) }
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
+    def committed() = m.streamCommittedSinks().toSeq.sorted
+      .flatMap(s => m.sinkRows(spark, s).collect().map(_.toString)).sorted
+    def audit() = m.snapshotLog().map(r => (r.sink, r.streamBatch, r.rowCount, r.bytes, r.convs))
+      .sortBy(_._1)
+    m.commitStreamBatch(batch, 0L)
+    val (rows, records) = (committed(), audit())
+    assert(rows.length === 3)
+
+    // a hard kill after s1's promotion and record, before s2's promotion and
+    // the marker, with junk left in the batch's staging directory
+    val root = java.nio.file.Paths.get(out)
+    Files.delete(root.resolve("_manifest/_stream_batch_0.json"))
+    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(m.sinkPath("s2"), "batch=0"))
+    m.snapshotLog().filter(_.sink == "s2").foreach(r =>
+      Files.delete(root.resolve("_snapshots").resolve(Records.snapshotName(r.snapshotId))))
+    val staging = root.resolve("_staging").resolve("stream-batch-0")
+    Seq("sink=s1", "sink=ghost").foreach { d =>
+      Seq(("junk", 0, "user", "junk", "t", new java.sql.Timestamp(0L)))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+        .write.parquet(staging.resolve(d).toString)
+    }
+
+    m.commitStreamBatch(batch, 0L)
+    assert(committed() === rows)
+    assert(audit() === records)
+    assert(graft.util.Fs.listDir(root.resolve("_staging")).isEmpty)
+  }
+
   test("manifest entries are queryable as a DataFrame (metrics-as-SQL)") {
     val out = Files.createTempDirectory("graft-entries").toString
     Pipeline.run(spark, sfDir, out, runId = "rq")
@@ -384,10 +471,10 @@ class ManifestSpec extends SparkSpec {
     val m = new Manifest(out)
     val bad = Seq(("conv-1", 1, "user", "t", "t", new java.sql.Timestamp(1000L), "bad sink"))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
-    (1 to 3).foreach { i => // every foreachBatch retry stages a fresh UUID copy
+    (1 to 3).foreach { i => // every foreachBatch retry stages the batch again
       intercept[IllegalArgumentException] { m.commitStreamBatch(bad, i.toLong) }
     }
-    val tmp = java.nio.file.Paths.get(out, "_tmp")
+    val tmp = java.nio.file.Paths.get(out, "_staging")
     val leaked =
       if (!Files.isDirectory(tmp)) Seq.empty
       else graft.util.Fs.listDir(tmp)
@@ -458,7 +545,7 @@ class ManifestSpec extends SparkSpec {
     // the rows Pipeline.run commits: the shipped limiter's survivors
     val cfg = Pipeline.Config()
     val routedAll = graft.limit.SinglePassLimit.limitReusingShuffle(
-      Pipeline.observedFanOut(turns, cfg)._1, cfg.limitRules, cfg.saltBuckets)
+      Pipeline.observedFanOut(turns, cfg)._1, cfg.limitRules)
     val remaining = m.antiJoinResume(spark,
       routedAll.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"))
     val committedCount = m.committedSinks().toSeq

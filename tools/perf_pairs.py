@@ -5,6 +5,7 @@ within the metric's bound.
 
 Usage (standard library only):
     python3 tools/perf_pairs.py --parent DIR --change DIR --workload W --pairs N [--seed S]
+        [--claim METRIC]
 
 DIR is the root of a checkout. Pair i runs
 `python3 perfbench/run.py --workload W --seed S+i --seconds 10 --trace 0`
@@ -21,6 +22,12 @@ neither side) and one verdict:
                 parent run.
 It flags every pair whose sink_files or sink_bytes differ (both are
 deterministic per seed) and every run with failed > 0 or no result.
+
+With --claim METRIC it also tells whether a gain in that end-to-end metric
+can be claimed. It prints `claim met` only when both hold: the change won at
+least 9 of every 10 pairs (ties count for neither side), and the medians
+differ in the metric's better direction by more than the parent's quartile
+distance. Otherwise it prints `claim not met` and which test failed.
 """
 import argparse
 import json
@@ -95,6 +102,23 @@ def summarize(parent, change, better, bound):
             "pairs": len(parent), "verdict": verdict}
 
 
+def claim(parent, change, better):
+    """(met, reason) for claiming a gain from paired values: at least 9 of
+    every 10 pairs won, and the medians apart in the better direction by
+    more than the parent's quartile distance."""
+    wins = sum(beats(c, p, better) for p, c in zip(parent, change))
+    gain = statistics.median(parent) - statistics.median(change)
+    if better != "lower":
+        gain = -gain
+    iqr = quartile_distance(parent)
+    failed = []
+    if wins * 10 < 9 * len(parent):
+        failed.append(f"won {wins}/{len(parent)} pairs, needs 9 of every 10")
+    if gain <= iqr:
+        failed.append(f"median gain {gain:.4g} is not above the parent's quartile distance {iqr:.4g}")
+    return not failed, "; ".join(failed)
+
+
 def value(result, name):
     return result["metrics"][name]["value"]
 
@@ -116,8 +140,9 @@ def flags(pairs):
     return out
 
 
-def report(pairs, end_to_end):
-    """The report lines for the complete pairs of `pairs`."""
+def report(pairs, end_to_end, claimed=None):
+    """The report lines for the complete pairs of `pairs`, with the claim
+    line for the metric named `claimed`, if any."""
     done = [(p, c) for p, c in pairs if p is not None and c is not None]
     lines = [f"{'metric':<20} {'parent median':>14} {'parent IQR':>11} "
              f"{'change median':>14} {'move':>8} {'won':>6}  verdict"]
@@ -127,6 +152,11 @@ def report(pairs, end_to_end):
         lines.append(f"{m['name']:<20} {s['parent_median']:>14.4g} {s['parent_iqr']:>11.4g} "
                      f"{s['change_median']:>14.4g} {s['move']:>+8.1%} "
                      f"{s['wins']:>3}/{s['pairs']:<2}  {s['verdict']}")
+    for m in end_to_end if done else []:
+        if m["name"] == claimed:
+            met, why = claim([value(p, claimed) for p, _ in done],
+                             [value(c, claimed) for _, c in done], m["better"])
+            lines.append(f"{claimed}: claim met" if met else f"{claimed}: claim not met: {why}")
     return lines + flags(pairs)
 
 
@@ -137,9 +167,12 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--claim", metavar="METRIC")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         end_to_end = json.load(f)["end_to_end"]
+    if a.claim is not None and a.claim not in [m["name"] for m in end_to_end]:
+        ap.error(f"--claim {a.claim} is not an end-to-end metric")
 
     pairs = []
     for i in range(a.pairs):
@@ -155,7 +188,7 @@ def main():
                   file=sys.stderr, flush=True)
         pairs.append((got["parent"], got["change"]))
     print(f"workload {a.workload}, {a.pairs} pairs, seeds {a.seed}..{a.seed + a.pairs - 1}")
-    print("\n".join(report(pairs, end_to_end)))
+    print("\n".join(report(pairs, end_to_end, a.claim)))
 
 
 if __name__ == "__main__":

@@ -60,6 +60,38 @@ class Arithmetic(unittest.TestCase):
         self.assertEqual(s["wins"], 5)
         self.assertEqual(s["verdict"], "within bound")
 
+    def test_claim_met(self):
+        # 9 of 10 pairs won; median 1.00 -> 0.80, parent IQR 0.05
+        parent = [1.00, 0.98, 1.02, 1.00, 0.99, 1.01, 1.03, 0.97, 1.00, 1.04]
+        change = [0.80, 0.79, 0.81, 0.80, 0.78, 0.82, 0.80, 0.79, 0.81, 1.10]
+        self.assertEqual(pp.claim(parent, change, "lower"), (True, ""))
+        # higher is better: the same numbers read the other way round
+        self.assertTrue(pp.claim(change, parent, "higher")[0])
+
+    def test_claim_needs_nine_of_ten_pairs(self):
+        parent = [1.0] * 10
+        change = [0.8] * 8 + [1.2, 1.0]  # 8 wins, 1 loss, 1 tie
+        met, why = pp.claim(parent, change, "lower")
+        self.assertFalse(met)
+        self.assertEqual(why, "won 8/10 pairs, needs 9 of every 10")
+
+    def test_claim_needs_the_median_past_the_parent_spread(self):
+        # every pair won and the median moves 15 %, but the parent's own
+        # runs spread wider than that (quartiles 0.8625 and 1.2375 around 1.00)
+        parent = [0.80, 0.85, 0.85, 0.90, 1.00, 1.00, 1.20, 1.25, 1.25, 1.30]
+        change = [p * 0.85 for p in parent]
+        self.assertAlmostEqual(pp.quartile_distance(parent), 0.375)
+        met, why = pp.claim(parent, change, "lower")
+        self.assertFalse(met)
+        self.assertTrue(why.startswith("median gain 0.15 is not above"), why)
+
+    def test_report_prints_the_claim(self):
+        e2e = [{"name": "job_s", "better": "lower", "bound": 0.25}]
+        pairs = [(result(job_s=1.0 + i / 100, sink_files=1, sink_bytes=2),
+                  result(job_s=0.5, sink_files=1, sink_bytes=2)) for i in range(10)]
+        self.assertEqual(pp.report(pairs, e2e, "job_s")[-1], "job_s: claim met")
+        self.assertEqual(len(pp.report(pairs, e2e)), 2)
+
     def test_flags(self):
         same = dict(sink_files=12, sink_bytes=3400)
         pairs = [(result(**same), result(**same)),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.SparkSession
 import graft.limit.{RateLimit, SinglePassLimit}
 import graft.model.Transcripts
 import graft.pipeline.Pipeline
-import graft.route.Router
 
 /** Benchmark main. Prints ONE JSON line:
   * {"metric":"routed_turns_per_sec","value":N,"unit":"rows/sec",
@@ -277,12 +276,6 @@ object Bench {
 object E2eRunner {
 
   def session(cpus: Int): SparkSession = Session.local(s"graft-bench-$cpus", cpus,
-    // sink-file codec: zstd. Measured A/B (min over 5 pinned 16-core e2e
-    // runs each, BENCH.md): zstd 26.9 s ≤ snappy 27.7 s ≤ lz4 29.6 s ≪
-    // uncompressed 40.7 s (bigger writes are memory-bandwidth-bound even
-    // on tmpfs), and zstd's files are 1.77× smaller than snappy's on this
-    // data — equal-or-better CPU plus the 100 TB storage/IO economics.
-    "spark.sql.parquet.compression.codec" -> "zstd",
     // shuffle and spill files on tmpfs when there is one (see util.Env)
     "spark.local.dir" -> graft.util.Env.localDir)
 
@@ -293,7 +286,7 @@ object E2eRunner {
     * the row count is read back afterwards, outside the timed window.
     *
     * Shape (reported as variant "v3" in the bench JSON): single-pass,
-    * shuffle-reuse — Pipeline.routable (parse → enrich) → route → ONE
+    * shuffle-reuse — Pipeline.routed (parse → enrich → route) → ONE
     * (sink,bkt,salt) exchange with the verdict sums on its map side and the
     * verdicts applied above it (SinglePassLimit.limitReusingShuffle); plain
     * parquet sink.
@@ -303,8 +296,7 @@ object E2eRunner {
     val turns = Transcripts.amplified(spark, sfDir, mult)
     val rules = RateLimit.defaultRules()
     val t0 = System.nanoTime()
-    val fanned = Router.fanOut(Pipeline.routable(turns))
-    SinglePassLimit.limitReusingShuffle(fanned, rules, saltBuckets = salt)
+    SinglePassLimit.limitReusingShuffle(Pipeline.routed(turns), rules, saltBuckets = salt)
       .write.mode("overwrite").parquet(outDir)
     val sec = (System.nanoTime() - t0) / 1e9
     (sec, spark.read.parquet(outDir).count())

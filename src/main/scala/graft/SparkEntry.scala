@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Transcripts
-import graft.parse.GrokParser
-import graft.route.Router
 import graft.pipeline.Pipeline
 import graft.agg.SinkMetrics
 import graft.limit.{RateLimit, SinglePassLimit}
@@ -25,14 +23,11 @@ import graft.temporal.TemporalJoin
   */
 object SparkEntry {
 
-  // ---- shared stage composition (parse → route → fan-out) ----
+  // ---- shared stage composition (parse → enrich → route → fan-out) ----
   private def turns(s: SparkSession, dir: String): DataFrame =
     Transcripts.fromEvents(s, dir)
-  private def parsedTurns(s: SparkSession, dir: String): DataFrame =
-    GrokParser.parse(turns(s, dir))
-  /** No enrichment join: the default rules read no dim column (DESIGN.md). */
   private def routed(s: SparkSession, dir: String): DataFrame =
-    Router.fanOut(parsedTurns(s, dir))
+    Pipeline.routed(turns(s, dir))
 
   // ---- shared derivations for the temporal-join queries ----
   /** 6 h — config-snapshot cadence for the as-of/range families. */
@@ -167,7 +162,7 @@ object SparkEntry {
         col("text"), col("tool"))),
     // P5/S5 + §2.3: grok/regex parse stage — level/status distribution
     "q_parse_stats" -> ((s, dir) =>
-      parsedTurns(s, dir)
+      Pipeline.routable(turns(s, dir))
         .groupBy(col("level"), col("status"))
         .agg(count(lit(1)).as("n"), sum(col("dur_ms")).as("total_dur"))),
     // R1/R2: router fan-out — per-sink counts
@@ -201,7 +196,7 @@ object SparkEntry {
             .otherwise(col("payload")).as("payload_out"))),
     // P7: map-flattening → JSON document (logz.io sink format analog)
     "q_json_format" -> ((s, dir) =>
-      parsedTurns(s, dir)
+      Pipeline.routable(turns(s, dir))
         .filter(col("level").isNotNull)
         .select(col("conv_id"), col("turn_idx"),
           concat(lit("{\"message\":\""), col("payload"),
@@ -214,7 +209,7 @@ object SparkEntry {
     // 87-91); the map is synthesized from parsed fields (the input_hint
     // schema has no map column), the flatten machinery is generic
     "q_meta_flatten" -> ((s, dir) =>
-      parsedTurns(s, dir)
+      Pipeline.routable(turns(s, dir))
         .select(col("conv_id"), col("turn_idx"),
           explode_outer(map(lit("level"), col("level"), lit("tool"), col("tool"),
             lit("status"), col("status"))))

@@ -1,7 +1,10 @@
 package graft.enrich
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Broadcast lookup enrichment stage.
   *
@@ -25,10 +28,13 @@ object Enrichment {
     ("none", "chat", "low", false)
   )
 
-  def dim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    toolDim.toDF("tool", "team", "cost_class", "redact")
-  }
+  /** The dim with `tool` declared as its key (a dedup on one partition: an
+    * aggregate, no exchange), so the left join is 1:1 by plan and the
+    * optimizer removes it from any plan that reads no dim column. */
+  def dim(spark: SparkSession): DataFrame =
+    spark.createDataFrame(toolDim.map(Row.fromTuple).asJava,
+      StructType.fromDDL("tool STRING, team STRING, cost_class STRING, redact BOOLEAN"))
+      .coalesce(1).dropDuplicates("tool")
 
   /** Left join so unmatched tools survive with null metadata. */
   def enrich(turns: DataFrame, spark: SparkSession): DataFrame =

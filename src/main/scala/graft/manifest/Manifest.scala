@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.RoutedTurn
 
-import Records.{RunRecord, SinkEntry, SnapshotRecord, StreamMarker}
+import Records.{RunRecord, SinkEntry, SnapshotRecord}
 
 /** Lineage/metrics manifest with write-then-commit semantics + idempotent resume.
   *
@@ -22,7 +22,8 @@ import Records.{RunRecord, SinkEntry, SnapshotRecord, StreamMarker}
   *   <root>/_staging/<unit>/sink=<s>/  one commit unit's staged rows ([[stage]])
   *   <root>/sinks/<sink>/              committed sink parquet (atomic dir rename),
   *                                     `sinks/<sink>/batch=<id>/` for a stream
-  *   <root>/_manifest/<sink>.json      current-pointer view (atomic file move)
+  *                                     (one commit path per sink)
+  *   <root>/_manifest/<sink>.json      a batch sink's current pointer (atomic move)
   *   <root>/_snapshots/snap-NNN.json   append-only numbered commit log
   *                                     ([[appendSnapshot]] — optimistic
   *                                     concurrency, records never rewritten)
@@ -68,8 +69,9 @@ final class Manifest(root: String) {
     * [[RoutedTurn.Columns]], written once to `_staging/<unit>` partitioned
     * by sink. The directory is fixed per unit, so a resume or a replay
     * overwrites what a hard kill left there. The sink names become path
-    * segments, so they are checked before `promote` runs; the staged copy
-    * is deleted when `promote` returns or throws. */
+    * segments, so they are checked before `promote` runs, and a sink the other
+    * commit path committed is refused (a batch promotion replaces `sinks/<s>`
+    * whole). The staged copy is deleted when `promote` returns or throws. */
   def stage[T](rows: DataFrame, unit: String)(promote: Manifest.Staged => T): T = {
     val dir = stagingDir.resolve(unit)
     val projected = rows.select(RoutedTurn.Columns.map(col): _*)
@@ -81,6 +83,10 @@ final class Manifest(root: String) {
       sinks.foreach(n => Records.requireName("sink",
         if (n == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
         else ExternalCatalogUtils.unescapePathName(n)))
+      val stream = unit.startsWith(Records.StreamRunPrefix)
+      val other = if (stream) committedSinks() else streamCommittedSinks()
+      sinks.find(other).foreach(s => throw new IllegalStateException(s"sink $s under $root " +
+        s"is committed by ${if (stream) "a batch run" else "a stream"}; one commit path per sink"))
       // read back through the written schema: an inferred sink column would
       // type an all-numeric sink as int
       promote(new Manifest.Staged(dir, sinks,
@@ -275,17 +281,17 @@ final class Manifest(root: String) {
     * path only needs idempotent promotion — a replay skips any `batch=<id>`
     * dir that already exists. A crash mid-commit (some sinks promoted, some
     * not) resumes by promoting exactly the missing ones: no routed row is
-    * ever written twice (the north-rule resume invariant, streaming edition). The snapshot audit log gets exactly one record per
+    * ever written twice (the north-rule resume invariant, streaming
+    * edition). The snapshot audit log gets exactly one record per
     * (sink, batch): each record is appended immediately after its sink's
     * promotion, and a replay that meets an already-promoted target appends
     * the record only if the previous attempt died inside that sink's
     * move→append window (the log already holds its record) — neither lost nor
-    * duplicated audit rows. A fully-committed batch short-circuits on its
-    * marker file. */
-  def commitStreamBatch(batch: DataFrame, batchId: Long): Unit = {
-    val marker = s"_stream_batch_$batchId.json"
-    if (Files.exists(manifestDir.resolve(marker))) return // replay of a fully-committed batch
-    val appended = stage(batch, s"${Records.StreamRunPrefix}$batchId") { staged =>
+    * duplicated audit rows. A replay of a fully-committed batch re-stages
+    * once and promotes nothing; no per-batch file is kept beyond the log.
+    * A sink with a batch-run entry is refused ([[stage]]). */
+  def commitStreamBatch(batch: DataFrame, batchId: Long): Unit =
+    stage(batch, s"${Records.StreamRunPrefix}$batchId") { staged =>
       // ALL sinks' stats in ONE job over the staged rows (per-sink aggregates
       // would pay one driver job round-trip per sink per micro-batch —
       // scheduling overhead dominates tiny frequent batches)
@@ -296,7 +302,6 @@ final class Manifest(root: String) {
       // when a replay actually meets an already-promoted target)
       lazy val alreadyLogged =
         snapshotLog().filter(_.streamBatch.contains(batchId)).map(_.sink).toSet
-      var appended = 0
       staged.sinks.foreach { sink =>
         val target = Paths.get(sinkPath(sink), s"batch=$batchId")
         val promoted =
@@ -313,14 +318,9 @@ final class Manifest(root: String) {
           val r = stats(sink)
           appendSnapshot(SnapshotRecord(_, s"${Records.StreamRunPrefix}$batchId", sink,
             Records.StreamCommit, r.getLong(0), r.getLong(1), r.getLong(2)))
-          appended += 1
         }
       }
-      appended
     }
-    Records.writeAtomic(manifestDir, marker,
-      StreamMarker(batchId, appended, Records.now()))
-  }
 
   /** Snapshot-isolation (time-travel) read over a STREAMING sink: only the
     * batch directories whose stream-commit audit record has

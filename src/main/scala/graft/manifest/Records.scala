@@ -16,9 +16,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * snake_case keys on disk.
   *
   * Layout under an output root:
-  *   _manifest/<sink>.json                [[SinkEntry]]
+  *   _manifest/<sink>.json                [[SinkEntry]] (batch-run sinks)
   *   _manifest/_metrics_<run>.json        [[RunRecord]]
-  *   _manifest/_stream_batch_<id>.json    [[StreamMarker]]
   *   _snapshots/snap-NNNNNNNN.json        [[SnapshotRecord]]
   *   _snapshots/_retention.json           [[Manifest.Retention]]
   */
@@ -53,8 +52,6 @@ object Records {
         rowCount: Long, bytes: Long, convs: Long): SnapshotRecord =
       SnapshotRecord(snapshotId, snapshotId - 1, runId, sink, op, rowCount, bytes, convs, now())
   }
-
-  final case class StreamMarker(batchId: Long, sinks: Int, committedTs: String)
 
   /** One run's observed counters ([[graft.pipeline.Pipeline.run]]). */
   final case class RunRecord(runId: String, routedRows: Long, routedBytes: Long,

@@ -32,9 +32,14 @@ object Transcripts {
       when(c === lit(k), lit(v)).otherwise(acc)
     }
 
+  /** Declared, never inferred: `ts` read as TIMESTAMP keeps the stored epoch
+    * micros and gives `ts` [[Turn]]'s type on every path. */
+  private val EventsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
+
   /** events.parquet → transcript table with exactly the input_hint schema. */
   def fromEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = spark.read.schema(EventsSchema).parquet(s"$sfDir/events.parquet")
     val byConv = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
 
     val role = mapCase(col("event_type"),

@@ -44,12 +44,18 @@ object Pipeline {
       limitRules: Seq[LimitRule] = RateLimit.defaultRules()
   )
 
-  /** The one frame route rules resolve against on every configured path:
-    * the six input columns, the parsed `level`, `dur_ms`, `status`,
-    * `payload` and the enrichment's `team`, `cost_class`, `redact`. Catalyst
-    * prunes the fields nothing reads; grok stays in one Project (PlanShapeSpec). */
+  /** The one frame route rules resolve against on every path: the six
+    * input columns, the parsed `level`, `dur_ms`, `status`, `payload` and
+    * the enrichment's `team`, `cost_class`, `redact`. Catalyst prunes the
+    * fields nothing reads, the enrichment join with them when no dim column
+    * is read; grok stays in one Project (PlanShapeSpec). */
   def routable(turns: DataFrame): DataFrame =
     Enrichment.enrich(GrokParser.parse(turns), turns.sparkSession)
+
+  /** [[routable]] fanned out, one row per (turn, sink): what the stream, the
+    * bench child and the driver queries route ([[observedFanOut]] adds counters). */
+  def routed(turns: DataFrame, rules: Seq[RouteRule] = Router.defaultRules): DataFrame =
+    Router.fanOut(routable(turns), rules)
 
   /** The parse alone; kept only because `perfbench/Workloads.scala` calls it. */
   def parsedProjected(turns: DataFrame): DataFrame = GrokParser.parse(turns)
@@ -71,7 +77,7 @@ object Pipeline {
     * web/api/sources.go:30-89, workers.go:27-84): each stage reports its own
     * rows — runtime-visible metrics with zero extra passes, complete once
     * the staging write ran. The parse counters sit above the enrichment
-    * join, which is 1:1 (the dim's keys are unique). Conservation
+    * join, which is 1:1 by plan (the dim declares its key). Conservation
     * invariants (asserted in ManifestSpec): scan_rows = parse_ok +
     * parse_quarantined; route_in = scan_rows; fanout_rows ≥ route_in
     * (fan-out duplicates); dead-letter routed rows = quarantined +

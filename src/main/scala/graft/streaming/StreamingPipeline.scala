@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
-import graft.pipeline.Pipeline
-import graft.route.{RouteRule, Router}
+import graft.model.Turn
 
 /** Structured Streaming analog of the batch pipeline (SURVEY.md §2.9).
   *
@@ -18,20 +17,16 @@ import graft.route.{RouteRule, Router}
   * offsets+checkpoint replace the Consul-KV dedup set
   * (reference source/nomad/worker.go:114-127).
   *
-  * Scale notes: parse/route are stateless projections (same single-pass
-  * operators as batch); the only stateful operator is the windowed agg whose
-  * state is bounded by watermark horizon × sink count — O(small), no
-  * per-conversation state is kept.
+  * Scale notes: parse/route are stateless projections (a stream routes
+  * through [[graft.pipeline.Pipeline.routed]], as batch does); the only
+  * stateful operator is the windowed agg whose state is bounded by
+  * watermark horizon × sink count — O(small), no per-conversation state.
   */
 object StreamingPipeline {
 
-  val turnSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType),
-    StructField("turn_idx", IntegerType),
-    StructField("role", StringType),
-    StructField("text", StringType),
-    StructField("tool", StringType),
-    StructField("ts", TimestampType)))
+  /** [[Turn]]'s fields, every one nullable as a file source reads them. */
+  val turnSchema: StructType =
+    StructType(Encoders.product[Turn].schema.map(_.copy(nullable = true)))
 
   /** File-stream source over a directory of turn parquet files — the
     * streaming stand-in for the reference's TCP sources; new-file discovery
@@ -41,13 +36,6 @@ object StreamingPipeline {
       .schema(turnSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
-
-  /** Stateless parse → enrich → route → fan-out over [[Pipeline.routable]],
-    * the frame the batch run routes. The enrichment's static dim is
-    * re-planned per micro-batch, so a refreshed one is picked up without a
-    * restart. */
-  def routedStream(turns: DataFrame, rules: Seq[RouteRule] = Router.defaultRules): DataFrame =
-    Router.fanOut(Pipeline.routable(turns), rules)
 
   /** Watermarked stream-stream INNER join — the streaming form of the
     * fact⋈fact equi-join (two live fact streams matched on a key within an
@@ -88,9 +76,9 @@ object StreamingPipeline {
     * broadcast as-of ([[graft.temporal.TemporalJoin.asofJoinBroadcast]]) is
     * the only as-of form a stream can run: it is STATELESS (per-key sorted
     * snapshot arrays broadcast, codegen binary search per row — no window
-    * over the stream, no watermark, no state store), and like the dim in
-    * [[routedStream]] the static side is re-planned every micro-batch, so
-    * a refreshed snapshot history is picked up without a restart.
+    * over the stream, no watermark, no state store), and the static side
+    * is re-planned every micro-batch, so a refreshed snapshot history is
+    * picked up without a restart.
     * StreamingSpec proves batch parity on the same input. */
   def asofEnrichedStream(events: DataFrame, snapshots: DataFrame,
       keys: Seq[String], probeTs: String, buildTs: String): DataFrame =
@@ -152,7 +140,8 @@ object StreamingPipeline {
       .queryName(name)
       .trigger(Trigger.AvailableNow())
 
-  /** PRODUCTION sink path: every micro-batch of routed rows lands in
+  /** PRODUCTION sink path: every micro-batch of routed rows (a
+    * [[graft.pipeline.Pipeline.routed]] stream) lands in
     * per-sink committed parquet through the manifest's write-then-commit
     * ([[graft.manifest.Manifest.commitStreamBatch]]) — the streaming
     * completion of the batch pipeline's effectively-once story (reference

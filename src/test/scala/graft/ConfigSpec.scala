@@ -180,7 +180,7 @@ class ConfigSpec extends SparkSpec {
     // the stream over the same turns; its source schema's ts is TIMESTAMP
     val src = dir.resolve("turns").toString
     turns.withColumn("ts", col("ts").cast("timestamp")).write.parquet(src)
-    val q = StreamingPipeline.routedStream(StreamingPipeline.readTurns(spark, src),
+    val q = Pipeline.routed(StreamingPipeline.readTurns(spark, src),
         cfg.routeRules)
       .writeStream.format("memory").queryName("routable_out")
       .trigger(Trigger.AvailableNow()).start()

@@ -94,14 +94,14 @@ class ManifestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-rowshape")
     val batchOut = dir.resolve("batch").toString
     Pipeline.run(spark, sfDir, batchOut, runId = "shape")
-    // the stream reads the same turns under their own schema, so both paths
-    // see one `ts` type
+    // the stream reads the same turns through its production source, so
+    // both paths must agree on every type, `ts` included
     val turns = graft.model.Transcripts.fromEvents(spark, sfDir)
     val src = dir.resolve("turns").toString
     turns.write.parquet(src)
     val streamOut = dir.resolve("stream").toString
     graft.streaming.StreamingPipeline.foreachBatchSink(
-      graft.streaming.StreamingPipeline.routedStream(spark.readStream.schema(turns.schema).parquet(src)),
+      Pipeline.routed(graft.streaming.StreamingPipeline.readTurns(spark, src)),
       streamOut, dir.resolve("ckpt").toString).start().awaitTermination()
 
     val expected = turns.schema.map(f => f.name -> f.dataType)
@@ -133,10 +133,9 @@ class ManifestSpec extends SparkSpec {
     val (rows, records) = (committed(), audit())
     assert(rows.length === 3)
 
-    // a hard kill after s1's promotion and record, before s2's promotion and
-    // the marker, with junk left in the batch's staging directory
+    // a hard kill after s1's promotion and record, before s2's promotion,
+    // with junk left in the batch's staging directory
     val root = java.nio.file.Paths.get(out)
-    Files.delete(root.resolve("_manifest/_stream_batch_0.json"))
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(m.sinkPath("s2"), "batch=0"))
     m.snapshotLog().filter(_.sink == "s2").foreach(r =>
       Files.delete(root.resolve("_snapshots").resolve(Records.snapshotName(r.snapshotId))))
@@ -151,6 +150,78 @@ class ManifestSpec extends SparkSpec {
     assert(committed() === rows)
     assert(audit() === records)
     assert(graft.util.Fs.listDir(root.resolve("_staging")).isEmpty)
+  }
+
+  /** Drains `src` through the production stream into `out`, one micro-batch
+    * per file. */
+  private def drainStream(src: String, out: String, ckpt: String): Unit =
+    graft.streaming.StreamingPipeline.foreachBatchSink(
+      Pipeline.routed(graft.streaming.StreamingPipeline.readTurns(spark, src, maxFilesPerTrigger = 1)),
+      out, ckpt).start().awaitTermination()
+
+  test("a batch run refuses an output root whose sinks the stream committed, promoting nothing") {
+    val dir = Files.createTempDirectory("graft-onepath")
+    val src = dir.resolve("turns").toString
+    graft.model.Transcripts.fromEvents(spark, sfDir).coalesce(1).write.parquet(src)
+    val out = dir.resolve("out").toString
+    drainStream(src, out, dir.resolve("ckpt").toString)
+    val m = new Manifest(out)
+    val streamed = m.streamCommittedSinks()
+    assert(streamed.contains("dead_letter"))
+    val pin = m.currentSnapshotId()
+    def pinned() = m.streamSinkAsOf(spark, "dead_letter", pin).collect().map(_.toString).sorted.toSeq
+    val before = pinned()
+    assert(before.nonEmpty)
+
+    val e = intercept[IllegalStateException] { Pipeline.run(spark, sfDir, out, runId = "shared") }
+    assert(streamed.exists(e.getMessage.contains) && e.getMessage.contains(out), e.getMessage)
+    assert(pinned() === before)
+    // no sink was promoted or committed, and no run was recorded
+    assert(graft.util.Fs.listDir(java.nio.file.Paths.get(out, "sinks"))
+      .map(_.getFileName.toString).toSet === streamed)
+    assert(m.streamCommittedSinks() === streamed)
+    assert(m.sinkEntries().isEmpty && m.runRecords().isEmpty)
+    assert(graft.util.Fs.listDir(java.nio.file.Paths.get(out, "_staging")).isEmpty)
+  }
+
+  test("a stream commit refuses a sink a batch run committed, promoting nothing") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-onepath-rev").toString
+    Pipeline.run(spark, sfDir, out, runId = "batch")
+    val m = new Manifest(out)
+    val entries = m.sinkEntries()
+    val log = m.snapshotLog()
+    def files() = m.committedSinks().toSeq.sorted.flatMap(s =>
+      graft.util.Fs.listDir(java.nio.file.Paths.get(m.sinkPath(s))).map(_.toString).sorted)
+    val before = files()
+    // a micro-batch whose first sink is new to the root, its second the run's
+    val batch = Seq((1, "a_new"), (2, "dead_letter"))
+      .map { case (i, sink) =>
+        (s"conv-$i", i, "user", s"text $i", "t", new java.sql.Timestamp(i * 1000L), sink) }
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
+
+    val e = intercept[IllegalStateException] { m.commitStreamBatch(batch, 0L) }
+    assert(e.getMessage.contains("dead_letter") && e.getMessage.contains(out), e.getMessage)
+    assert(m.streamCommittedSinks().isEmpty)
+    assert(!Files.exists(java.nio.file.Paths.get(m.sinkPath("a_new"))))
+    assert(files() === before)
+    assert(m.sinkEntries() === entries && m.snapshotLog() === log)
+  }
+
+  test("drained micro-batches leave no per-batch file under _manifest") {
+    val dir = Files.createTempDirectory("graft-nomarker")
+    val src = dir.resolve("turns").toString
+    graft.model.Transcripts.synthetic(spark, nConvs = 12, turnsPerConv = 4)
+      .repartition(3).write.parquet(src)
+    val out = dir.resolve("out").toString
+    drainStream(src, out, dir.resolve("ckpt").toString)
+    val m = new Manifest(out)
+    assert(m.snapshotLog().flatMap(_.streamBatch).distinct.sorted === Seq(0L, 1L, 2L))
+    val manifestDir = java.nio.file.Paths.get(out, "_manifest")
+    val left =
+      if (!Files.isDirectory(manifestDir)) Seq.empty
+      else graft.util.Fs.listDir(manifestDir).map(_.getFileName.toString)
+    assert(left.isEmpty, s"per-batch files under _manifest: $left")
   }
 
   test("manifest entries are queryable as a DataFrame (metrics-as-SQL)") {

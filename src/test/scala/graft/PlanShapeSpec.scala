@@ -55,6 +55,49 @@ class PlanShapeSpec extends SparkSpec {
     assert(!physical.contains("SortMergeJoin"))
   }
 
+  test("the enrichment join is planned only where a dim column is read") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.limit.{RateLimit, SinglePassLimit}
+    def leftOuterJoins(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect {
+      case j: Join if j.joinType == LeftOuter => j
+    }.size
+    // under the default rules nothing reads team, cost_class or redact: the
+    // run's limited frame, perfbench's fan-out chain and every driver leaf
+    // that parses (read at sf0.01, as the grok test above, so the limiter
+    // leaves keep their rows)
+    val sf01 = sfDir.replace("sf0.001", "sf0.01")
+    val turns = Transcripts.fromEvents(spark, sf01)
+    val parsingLeaves = Seq("q_route_counts", "q_routed_rows", "q_sink_agg",
+      "q_sink_conv_spans", "q_limit_alerts", "q_limit_buckets", "q_limit_final",
+      "q_limit_dropped", "q_resume_antijoin", "q_top_convs",
+      "q_parse_stats", "q_json_format", "q_meta_flatten")
+    val unread = Seq(
+      "run" -> SinglePassLimit.limitWithCells(
+        Pipeline.observedFanOut(turns)._1, RateLimit.defaultRules())._1,
+      "perfbench chain" -> graft.route.Router.fanOut(
+        Enrichment.enrich(GrokParser.parse(turns), spark))
+        .select(graft.model.RoutedTurn.Columns.map(col): _*)) ++
+      parsingLeaves.map(name => name -> graft.SparkEntry.queries(name)(spark, sf01))
+    unread.foreach { case (name, df) =>
+      assert(leftOuterJoins(df) === 0, s"$name:\n${df.queryExecution.optimizedPlan}")
+    }
+    // a configured rule on a dim column keeps the one broadcast join, and
+    // the dim's dedup adds no shuffle: the limiter's exchange stays the only one
+    val cfg = Pipeline.Config(routeRules =
+      Seq(graft.route.RouteRule("sink_costly", col("cost_class") === "high")))
+    val (limited, _) = SinglePassLimit.limitWithCells(
+      Pipeline.observedFanOut(syntheticTurns(), cfg)._1, cfg.limitRules)
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val plan = limited.queryExecution.executedPlan
+      val phys = plan.treeString
+      assert(plan.collect { case j: BroadcastHashJoinExec => j }.size === 1, phys)
+      assert("Exchange hashpartitioning".r.findAllIn(phys).length === 1, phys)
+    }
+  }
+
   test("stratified sampling is a pure filter: zero exchanges in the plan") {
     import spark.implicits._
     val docs = (0L until 100L).map(i => (i, if (i % 2 == 0) "en" else "und"))

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.model.Transcripts
+import graft.pipeline.Pipeline
 import graft.streaming.StreamingPipeline
 import graft.sources.TurnSources
 
@@ -16,7 +17,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir)
 
     val stream = StreamingPipeline.readTurns(spark, dir, maxFilesPerTrigger = 2)
-    val agg = StreamingPipeline.sinkWindowBytes(StreamingPipeline.routedStream(stream))
+    val agg = StreamingPipeline.sinkWindowBytes(Pipeline.routed(stream))
     val q = StreamingPipeline.memorySinkQuery(agg, "stream_out").start()
     q.awaitTermination() // AvailableNow terminates after draining
     val streamed = spark.table("stream_out")
@@ -43,7 +44,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-senrich").toString
     Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 6)
       .write.mode("overwrite").parquet(dir)
-    val q = StreamingPipeline.routedStream(
+    val q = Pipeline.routed(
         StreamingPipeline.readTurns(spark, dir, maxFilesPerTrigger = 2))
       .writeStream.outputMode("append")
       .format("memory").queryName("senrich_out")
@@ -112,7 +113,7 @@ class StreamingSpec extends SparkSpec {
     def drain(): Unit = {
       val stream = StreamingPipeline.readTurns(spark, srcDir, maxFilesPerTrigger = 1)
       val q = StreamingPipeline.foreachBatchSink(
-        StreamingPipeline.routedStream(stream), root, ckpt).start()
+        Pipeline.routed(stream), root, ckpt).start()
       q.awaitTermination()
     }
     // phase 1: half the files arrive, stream drains and commits, then "dies"
@@ -144,8 +145,8 @@ class StreamingSpec extends SparkSpec {
 
     // crash-replay edges, deterministically (foreachBatch re-delivers a
     // failed batch with the SAME id and rows — emulate that on a fresh
-    // root): a replayed committed batch is a no-op at BOTH idempotency
-    // layers, so sink contents never duplicate
+    // root): a replayed committed batch promotes nothing and appends no
+    // audit record, so sink contents never duplicate
     val root2 = Files.createTempDirectory("graft-fbs-root2").toString
     val m2 = new graft.manifest.Manifest(root2)
     val routedBatch = graft.route.Router
@@ -154,14 +155,12 @@ class StreamingSpec extends SparkSpec {
     def rows2() = m2.streamCommittedSinks().toSeq.sorted
       .map(s => m2.sinkRows(spark, s).select("conv_id", "turn_idx", "sink"))
       .reduce(_ unionByName _).count()
-    val base = rows2()
-    m2.commitStreamBatch(routedBatch, 0L) // layer 1: marker short-circuit
-    assert(rows2() === base, "marker must short-circuit a full replay")
-    // crash AFTER promote but BEFORE marker: delete the marker; the per-sink
-    // batch dirs still exist, so promotion skips every one — still no dupes
-    Files.delete(java.nio.file.Paths.get(root2, "_manifest", "_stream_batch_0.json"))
+    val (base, log) = (rows2(), m2.snapshotLog())
+    // a full replay: the per-sink batch dirs exist, so promotion skips
+    // every one — no dupes
     m2.commitStreamBatch(routedBatch, 0L)
     assert(rows2() === base, "existing batch dirs must not be re-promoted")
+    assert(m2.snapshotLog() === log, "a full replay must not re-record its commits")
     // the audit log recorded stream commits for every sink
     val snaps = m.snapshots(spark).filter(col("op") === "stream_commit")
     assert(snaps.count() > 0)

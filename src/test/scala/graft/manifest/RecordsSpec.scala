@@ -14,7 +14,6 @@ class RecordsSpec extends AnyFunSuite {
   private val entry = SinkEntry("r\"1", "sink_a", 3L, 30L, 2L, 7L, "2026-01-01T00:00:00Z")
   private val snapshot =
     SnapshotRecord(7L, 6L, "r1", "sink_a", "commit", 3L, 30L, 2L, "2026-01-01T00:00:00Z")
-  private val marker = StreamMarker(4L, 2, "2026-01-01T00:00:00Z")
   private val retention =
     Manifest.Retention(5L, Map("s2" -> Manifest.Retention.Base(3L, 2L),
       "s1" -> Manifest.Retention.Base(1L, 1L)))
@@ -42,7 +41,6 @@ class RecordsSpec extends AnyFunSuite {
       "snapshot_id:n", "committed_ts:s"))
     assert(shapeOf(snapshot) === Set("snapshot_id:n", "parent_id:n", "run_id:s", "sink:s",
       "op:s", "row_count:n", "bytes:n", "convs:n", "committed_ts:s"))
-    assert(shapeOf(marker) === Set("batch_id:n", "sinks:n", "committed_ts:s"))
     assert(shapeOf(retention, "bases.") === Set("horizon:n", "bases:o", "bases.*:o",
       "bases.*.max_batch:n", "bases.*.n_batches:n"))
     assert(shapeOf(run, "per_sink.") === Set("run_id:s", "routed_rows:n", "routed_bytes:n",

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Kernel shared by interpreted eval and generated code.
   * Top-level object ⇒ the Scala compiler emits static forwarders, so the
@@ -40,28 +39,6 @@ object SimHashImpl {
       if (counts(b) > 0) out |= (1L << b)
       b += 1
     }
-    out
-  }
-
-  def computeString(s: UTF8String): Long = {
-    // whitespace tokenization without allocation of a Spark ArrayData
-    val tokens = s.toString.split("\\s+")
-    val counts = new Array[Int](64)
-    tokens.foreach { tok =>
-      if (tok.nonEmpty) {
-        val u = UTF8String.fromString(tok)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          u.getBaseObject, u.getBaseOffset, u.numBytes, Seed)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
   }
 }

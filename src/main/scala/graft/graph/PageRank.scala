@@ -18,19 +18,21 @@ import org.apache.spark.sql.functions._
   * leakage of < 1 ulp-of-scale per floor (bounded in PageRankSpec's
   * conservation law); at scale=10¹² that is noise at the 9th decimal.
   *
-  * Shuffle shape per iteration: one join edges⋈ranks on src, one hash
-  * aggregation on dst, one left join back to the node set — all map-side
-  * combinable longs, never payload data. Two prepaid-once invariants keep
+  * Shuffle shape per iteration: one join edges⋈ranks on src and ONE hash
+  * aggregation by node — all map-side combinable longs, never payload data.
+  * Every node feeds that aggregate a `(node, 0)` carrier row next to the
+  * edge contributions `(dst, rank div outdeg)`, so a node with no in-edges
+  * still gets its row (Σ over {0} ∪ contributions = coalesce(Σ, 0)) and no
+  * join back onto the node set is needed. Two prepaid-once invariants keep
   * the per-iteration cost to the rank-side traffic alone:
   *  - the edges⋈out-degree join is LOOP-INVARIANT, so it is computed once
-  *    up front ((src, dst, outdeg) rows) instead of once per iteration —
-  *    the round-6 plan re-ran that SMJ every iteration (15 SMJs / 10
-  *    exchanges; now 10 / 5 at iters=5, pinned by PlanPinSpec and
-  *    plans/r07/q_pagerank_after.txt);
-  *  - the invariant inputs are repartitioned by their join key and sorted
-  *    BEFORE the localCheckpoint. `Dataset.localCheckpoint` captures the
+  *    up front ((src, dst, outdeg) rows) instead of once per iteration
+  *    (at iters=5: 5 exchanges / 5 SMJs, pinned by PlanPinSpec; the
+  *    before/after plans are under plans/r07 and plans/r15);
+  *  - the invariant edge side is hash(src)-partitioned and src-sorted
+  *    BEFORE its localCheckpoint. `Dataset.localCheckpoint` captures the
   *    physical plan's outputPartitioning/outputOrdering into the LogicalRDD,
-  *    so every iteration's SMJ sees a pre-partitioned, pre-sorted build side
+  *    so every iteration's SMJ sees a pre-partitioned, pre-sorted edge side
   *    and plans ZERO exchange and ZERO sort for it — the ingest-prepaid-sort
   *    strategy of [[graft.relational.Tpch.ensureBucketedFacts]] applied to
   *    an in-query loop invariant (guide §2.4 "remove shuffles outright").
@@ -79,27 +81,24 @@ object PageRank {
     // re-sort of the round-6 plan, prepaid; an explicit repartition+sort
     // here would only re-shuffle what the join already clustered)
     val eo = e.join(out, "src").localCheckpoint(eager = false)
-    // node set: distinct's final aggregate is hash(node)-partitioned; add
-    // the in-partition sort so the captured layout also feeds each
-    // iteration's left join sort-free
+    // node set: checkpointed so `n`, the carriers and the first ranks
+    // don't each redo the distinct's exchange
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .sortWithinPartitions(col("node"))
       .localCheckpoint(eager = false)
     val n = nodes.count()
     require(scale >= n, s"scale $scale below node count $n: every rank floors to 0")
     val base = scale * (100L - dampPct) / (100L * n)
+    val carriers = nodes.select(col("node"), lit(0L).as("c"))
     var rank = nodes.withColumn("rank", lit(scale / n))
     for (_ <- 1 to iters) {
-      val inSum = eo
+      rank = eo
         .join(rank.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-      rank = nodes.join(inSum, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"${dampPct}L * coalesce(in_sum, 0L) div 100L"))
-            .as("rank"))
+        .union(carriers)
+        .groupBy(col("node"))
+        .agg((lit(base) + expr(s"${dampPct}L * sum(c) div 100L")).as("rank"))
     }
     rank
   }

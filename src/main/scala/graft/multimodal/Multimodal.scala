@@ -125,9 +125,6 @@ object Multimodal {
         embedding = Array.tabulate(8)(j =>
           if (payload.isEmpty) 0f else ((cs >>> (8 * j)) & 0xffL).toFloat / 255))
     }
-    /** Frame-sample stub: deterministic frame offsets for a video payload. */
-    def sampleFrames(durationMs: Int, everyMs: Int): Seq[Int] =
-      (0 until durationMs by everyMs).toSeq
   }
 
   /** Per-kind decode dispatch: REAL image (JDK ImageIO + area-average

@@ -70,20 +70,6 @@ object StreamingPipeline {
         r(rightTimeCol) <= l(leftTimeCol) + gap)
   }
 
-  /** Streaming as-of enrichment: each stream row picks the latest snapshot
-    * at-or-before its event time from a SMALL static history — "which config
-    * version was active when this event happened", on a live stream. The
-    * broadcast as-of ([[graft.temporal.TemporalJoin.asofJoinBroadcast]]) is
-    * the only as-of form a stream can run: it is STATELESS (per-key sorted
-    * snapshot arrays broadcast, codegen binary search per row — no window
-    * over the stream, no watermark, no state store), and the static side
-    * is re-planned every micro-batch, so a refreshed snapshot history is
-    * picked up without a restart.
-    * StreamingSpec proves batch parity on the same input. */
-  def asofEnrichedStream(events: DataFrame, snapshots: DataFrame,
-      keys: Seq[String], probeTs: String, buildTs: String): DataFrame =
-    graft.temporal.TemporalJoin.asofJoinBroadcast(events, snapshots, keys, probeTs, buildTs)
-
   /** Per-sink tumbling-window byte totals with a watermark — the streaming
     * form of the rate-limit bucket store (L1). */
   def sinkWindowBytes(

@@ -85,15 +85,15 @@ class PlanPinSpec extends SparkSpec {
     // construction; the scored scan ends in TakeOrderedAndProject (local
     // heaps), never a sort or shuffle
     "q_bm25" -> PlanStats(shuffleExchanges = 0, broadcastJoins = 0, sortMergeJoins = 0, cartesians = 0),
-    // PageRank: 5 unrolled iterations × (edges⋈outdeg⋈rank SMJs + the dst
-    // agg exchange) over the lazily-checkpointed graph; SMJ is the correct
+    // PageRank: 5 unrolled iterations × (edges⋈rank SMJ + the node agg
+    // exchange) over the lazily-checkpointed graph; SMJ is the correct
     // big⋈big shape per iteration — a cartesian or BNLJ here would be the
-    // regression
-    // round 7: the loop-invariant edges⋈outdeg join is hoisted out of the
-    // iteration and its (src)-partitioned sort prepaid via localCheckpoint —
-    // per iteration: 1 exchange (dst agg) + 2 SMJs (was 2 exchanges + 3
-    // SMJs; round-6 pin was 10/15)
-    "q_pagerank" -> PlanStats(shuffleExchanges = 5, broadcastJoins = 0, sortMergeJoins = 10, cartesians = 0))
+    // regression. The loop-invariant edges⋈outdeg join is hoisted out of
+    // the iteration and its (src)-partitioned sort prepaid via
+    // localCheckpoint, and the base-rank carriers fold into the node
+    // aggregate (no left join back onto the node set): per iteration
+    // 1 exchange + 1 SMJ (round 6 pinned 10/15, round 7 5/10)
+    "q_pagerank" -> PlanStats(shuffleExchanges = 5, broadcastJoins = 0, sortMergeJoins = 5, cartesians = 0))
 
   test("pinned set covers exactly the headline queries") {
     assert(pinned.keySet === PlanPin.pinned.toSet,

@@ -179,7 +179,7 @@ class PlanShapeSpec extends SparkSpec {
     val observed = optimized.collect {
       case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics => c.name
     }
-    assert(observed.toSet === Set("graft_scan", "graft_parse", "graft_route"))
+    assert(observed.toSet === Set("graft_scan", "graft_route"))
     Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val phys = fanned.queryExecution.executedPlan.treeString
       // shuffle exchanges only — the enrich BroadcastExchange is expected

@@ -246,7 +246,7 @@ class StreamingSpec extends SparkSpec {
       .distinct()
     val stream = us(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir))
-    val q = StreamingPipeline.asofEnrichedStream(stream, snaps,
+    val q = graft.temporal.TemporalJoin.asofJoinBroadcast(stream, snaps,
         Seq("event_type"), "e_us", "snap_us")
       .writeStream.outputMode("append")
       .format("memory").queryName("sasof_out")
@@ -267,6 +267,14 @@ class StreamingSpec extends SparkSpec {
     d.toDF().write.mode("overwrite").parquet(dir)
     val p = TurnSources.parquet(spark, dir)
     assert(p.count() === d.count())
+    // each text reader reads back what was written in its declared
+    // timestampFormat, row for row
+    val want = d.collect().toSet
+    d.write.option("header", "true").option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
+      .csv(s"$dir-csv")
+    assert(TurnSources.csv(spark, s"$dir-csv").collect().toSet === want)
+    d.write.option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").json(s"$dir-jsonl")
+    assert(TurnSources.jsonl(spark, s"$dir-jsonl").collect().toSet === want)
     val merged = TurnSources.union(d, p)
     assert(merged.count() === d.count() * 2)
     assert(merged.columns.toSeq === Seq("conv_id", "turn_idx", "role", "text", "tool", "ts"))
